@@ -35,11 +35,6 @@ from pyp_etl_pipeline_spark.tables import load_table
 SENTINELS_SQL = ", ".join(f"'{s}'" for s in S.SENTINEL_NULLS)
 
 
-def sql_valid(x: str) -> str:
-    """F1 is_valid_value."""
-    return f"({x} IS NOT NULL AND lower(trim({x})) NOT IN ({SENTINELS_SQL}))"
-
-
 def sql_null_normalize(x: str) -> str:
     return f"(CASE WHEN {x} IS NULL OR lower(trim({x})) IN ({SENTINELS_SQL}) THEN NULL ELSE trim({x}) END)"
 

@@ -4,11 +4,8 @@ dedup suite, ANN search, text analysis, streaming — plus the merged REGISTRY.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
-import threading
 import uuid
 from collections.abc import Callable
 
@@ -16,103 +13,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyp_etl_pipeline_spark import driver_queries as core
+from pyp_etl_pipeline_spark import driver_queries_ext3 as _ext3
+from pyp_etl_pipeline_spark import driver_queries_ext4 as _ext4
 from pyp_etl_pipeline_spark.functions import scoring
 from pyp_etl_pipeline_spark.operators import dedup, resolve, similarity, textan, windows
 from pyp_etl_pipeline_spark.operators.similarity import _hyperplanes
-from pyp_etl_pipeline_spark.tables import load_table
-
-
-# One token per interpreter: scratch dirs built from it cannot collide
-# across concurrent sessions (bench + correctness gate + parallel CI all
-# write/rmtree their own directories — ADVICE r8: fixed names raced).
-_SCRATCH_TOKEN = f"{os.getpid()}_{uuid.uuid4().hex[:8]}"
-
-# Every path handed out by scratch_path; swept at interpreter exit so
-# gate/bench/CI processes don't leak parquet copies into /tmp (the old
-# fixed names self-replaced across runs; per-process names don't).
-_SCRATCH_PATHS: set[str] = set()
-
-
-@atexit.register
-def _sweep_scratch() -> None:
-    for p in _SCRATCH_PATHS:
-        shutil.rmtree(p, ignore_errors=True)
-
-
-def scratch_path(tag: str) -> str:
-    """Per-process-unique scratch directory path for queries that write
-    intermediate files (format round-trips, streaming file sources).
-    Tracked and rmtree'd at process exit."""
-    p = os.path.join(tempfile.gettempdir(), f"pyp_{tag}_{_SCRATCH_TOKEN}")
-    _SCRATCH_PATHS.add(p)
-    return p
-
-
-def _load_corpus(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    """Corpus tables (documents/embeddings) arrive as one small parquet file
-    -> one scan partition, which serializes the heavy per-row compute
-    (shingles, md5, simhash, dot products) onto a single core in local
-    bench runs. Round-robin repartition to the session's parallelism; at
-    cluster scale the input already has many splits and the extra shuffle
-    of (id, payload) is negligible next to the per-row compute it feeds."""
-    df = load_table(spark, sf, name)
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
-    return df
-
-
-def _load_corpus_unique(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    """Idempotent-ingest variant for operators whose contract keys on
-    row identity (packing order, ANN ids, span election, budget fill):
-    at-least-once delivery means the landing zone can hold FULL-ROW
-    duplicates, and a value-based distributed engine cannot
-    deterministically distinguish identical copies — so they are
-    collapsed up front (full-row distinct: always deterministic, and
-    exactly the dedup the ingest tier performs once at 100 TB rather
-    than per query). Identity on already-unique data; the --dupes gate
-    family certifies the behavior. Twins mirror it with
-    ``FROM (SELECT DISTINCT * FROM <table>)``.
-
-    The repartition comes AFTER the distinct, unconditionally: AQE
-    coalesces the distinct's small shuffle output back to ONE partition
-    (tiny bytes, heavy downstream per-row compute — the classic trap),
-    and an explicitly-numbered repartition is exempt from AQE
-    coalescing. Repartitioning BEFORE the distinct is useless: the
-    distinct's own exchange re-collapses it. (Measured: dd09's shingle
-    stage 7.0s -> parallel once this ordering landed.)
-
-    Materialized ONCE per (session, sf, table) and persisted: at 100 TB
-    the idempotent-ingest distinct runs once in the ingest tier, not
-    per query — the session-level cache is the local analog (VERDICT r8
-    item 2: the per-query distinct taxed cp01/tx05/mm08/j16/dc01/mx02
-    by 1.2-1.4x)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf), name)
-    with _UNIQUE_LOCK:
-        # evict entries from stopped sessions: their persisted handles pin
-        # dead JVM references and can never be returned again (a restarted
-        # session gets a fresh applicationId, but don't rely on that).
-        for k in [k for k, v in _UNIQUE_CACHE.items() if _session_stopped(v)]:
-            _UNIQUE_CACHE.pop(k, None)
-        cached = _UNIQUE_CACHE.get(key)
-        if cached is not None:
-            return cached
-        target = spark.sparkContext.defaultParallelism
-        df = load_table(spark, sf, name).distinct().repartition(target).persist()
-        _UNIQUE_CACHE[key] = df
-        return df
-
-
-def _session_stopped(df: DataFrame) -> bool:
-    try:
-        sc = df.sparkSession.sparkContext
-        return sc._jsc is None or sc._jsc.sc().isStopped()
-    except Exception:  # noqa: BLE001 — any failure to reach the JVM means dead
-        return True
-
-
-_UNIQUE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_UNIQUE_LOCK = threading.Lock()
+from pyp_etl_pipeline_spark.tables import load_corpus, load_corpus_unique, load_table, scratch_path
 
 
 # --------------------------------------------------------------------------
@@ -746,7 +652,7 @@ FROM s GROUP BY 1, 2
 # --------------------------------------------------------------------------
 
 def dd01_exact_dup_histogram(spark: SparkSession, sf: str) -> DataFrame:
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     fps = d.select(dedup.fingerprint("text").alias("fp"))
     return (
         fps.groupBy("fp")
@@ -763,7 +669,7 @@ SELECT c AS dup_count, count(*) AS n_fingerprints FROM fp GROUP BY 1
 
 
 def dd02_ngram_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    return dedup.shingle_pairs_jaccard(_load_corpus(spark, sf, "documents"), threshold=0.5)
+    return dedup.shingle_pairs_jaccard(load_corpus(spark, sf, "documents"), threshold=0.5)
 
 
 _SHINGLE_CTE = f"""
@@ -794,7 +700,7 @@ def dd04_dup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     (``dedup.dup_clusters``); oracle: recursive-CTE transitive closure +
     min-reachable-id (exact for the small sf, while the Spark loop is
     the O(diameter)-rounds shape that survives 100 TB)."""
-    pairs = dedup.shingle_pairs_jaccard(_load_corpus(spark, sf, "documents"), threshold=0.5)
+    pairs = dedup.shingle_pairs_jaccard(load_corpus(spark, sf, "documents"), threshold=0.5)
     return dedup.dup_clusters(pairs)
 
 
@@ -831,7 +737,7 @@ def dd07_neardup_dedup(spark: SparkSession, sf: str) -> DataFrame:
     twin composes the identical stages over the recursive-CTE closure,
     so the composition semantics — who survives, with what cluster
     size — are hash-certified."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     pairs = dedup.shingle_pairs_jaccard(d, threshold=0.5)
     clusters = dedup.dup_clusters(pairs)
     sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
@@ -863,7 +769,7 @@ def dc01_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     with any eval doc. The eval shingle set is broadcast — the corpus
     never shuffles (the standard test-set-leakage guard for a training
     corpus)."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     bench = d.filter(F.col("doc_id") % 25 == 0)
     corpus = d.filter(F.col("doc_id") % 25 != 0)
     return dedup.decontaminate(corpus, bench).withColumnRenamed("id", "doc_id")
@@ -889,7 +795,7 @@ FROM corpus LEFT JOIN hits USING (doc_id)
 
 
 def dd03_minhash_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    return dedup.minhash_lsh_pairs(_load_corpus(spark, sf, "documents"), threshold=0.5)
+    return dedup.minhash_lsh_pairs(load_corpus(spark, sf, "documents"), threshold=0.5)
 
 
 def _minhash_sig_sql(src: str, suffix: str) -> str:
@@ -956,7 +862,7 @@ def dd05_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     signature index (plus a within-batch self-join) — the corpus is never
     self-joined, which is the whole point at 100 TB: per-ingest cost is
     O(batch) + collisions, not O(corpus^2 / buckets)."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     new_docs = d.filter(F.col("doc_id") % 5 == 0)
     corpus = d.filter(F.col("doc_id") % 5 != 0)
     return dedup.minhash_lsh_pairs_incremental(new_docs, corpus, threshold=0.5)
@@ -1003,7 +909,7 @@ def dd06_span_dedup(spark: SparkSession, sf: str) -> DataFrame:
     the single-node ``row_number() OVER (PARTITION BY span)`` — matching
     rebuilt-text hashes prove the distributed election picks exactly the
     sequential winners."""
-    out = dedup.span_dedup(_load_corpus_unique(spark, sf, "documents"), k=10)
+    out = dedup.span_dedup(load_corpus_unique(spark, sf, "documents"), k=10)
     return out.select("doc_id", "n_spans", "n_kept", F.md5("text").alias("text_fp"))
 
 
@@ -1040,7 +946,7 @@ def dc02_decontaminate_spans(spark: SparkSession, sf: str) -> DataFrame:
     from the remaining docs and the text rebuilt — surgical removal vs
     dc01's doc-level flags. Broadcast bench shingles; corpus never
     shuffles before the anti-join."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     bench = d.filter(F.col("doc_id") % 25 == 0)
     corpus = d.filter(F.col("doc_id") % 25 != 0)
     out = dedup.decontaminate_spans(corpus, bench)
@@ -1084,7 +990,7 @@ def sh01_simhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
     twin reproduces the md5 bit-vote fingerprints exactly (verified
     bit-for-bit) and applies the SAME 4x16-bit chunk-blocking condition,
     so even hamming 4-6 pairs that blocking misses match across engines."""
-    return dedup.simhash_pairs(_load_corpus(spark, sf, "documents"), max_hamming=6)
+    return dedup.simhash_pairs(load_corpus(spark, sf, "documents"), max_hamming=6)
 
 
 def _sh01_sql() -> str:
@@ -1130,7 +1036,7 @@ SH01_SQL = _sh01_sql()
 # --------------------------------------------------------------------------
 
 def ann01_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
-    emb = _load_corpus(spark, sf, "embeddings")
+    emb = load_corpus(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -1154,7 +1060,7 @@ QUALIFY match_rank <= 5
 
 
 def ann02_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
-    emb = _load_corpus(spark, sf, "embeddings")
+    emb = load_corpus(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -1196,7 +1102,7 @@ def nd01_embed_neardup(spark: SparkSession, sf: str) -> DataFrame:
     ``cosine_neardup_pairs(..., exact=True)`` and is pinned against the
     bucketed path by ``tests/test_similarity.py`` (subset + exact-dup
     recall); it is deliberately NOT the registered plan."""
-    emb = _load_corpus(spark, sf, "embeddings")
+    emb = load_corpus(spark, sf, "embeddings")
     # n_planes pinned so the static SQL twin reproduces the buckets;
     # outside oracle-land the default (None) derives planes from the
     # corpus size (similarity.derive_n_planes)
@@ -1231,7 +1137,7 @@ ND01_SQL = _nd01_sql()
 # --------------------------------------------------------------------------
 
 def tx01_quality_features(spark: SparkSession, sf: str) -> DataFrame:
-    return textan.quality_features(_load_corpus(spark, sf, "documents"))
+    return textan.quality_features(load_corpus(spark, sf, "documents"))
 
 
 _TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '')"
@@ -1259,7 +1165,7 @@ FROM feats
 
 
 def tx02_token_counts(spark: SparkSession, sf: str) -> DataFrame:
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     return d.select(
         "doc_id",
         textan.token_count("text").cast("long").alias("n_ws_tokens"),
@@ -1276,7 +1182,7 @@ FROM documents
 
 
 def tx03_language_id(spark: SparkSession, sf: str) -> DataFrame:
-    return textan.language_scores(_load_corpus(spark, sf, "documents"))
+    return textan.language_scores(load_corpus(spark, sf, "documents"))
 
 
 def _tx03_sql() -> str:
@@ -1300,7 +1206,7 @@ TX03_SQL = _tx03_sql()
 
 
 def tx04_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
-    return textan.document_fingerprints(_load_corpus(spark, sf, "documents"))
+    return textan.document_fingerprints(load_corpus(spark, sf, "documents"))
 
 
 TX04_SQL = f"""
@@ -1315,7 +1221,7 @@ FROM n
 def tx05_repetition(spark: SparkSession, sf: str) -> DataFrame:
     """Within-doc repeated-n-gram fraction (C4/Gopher-style quality
     filter signal); pure per-row array ops, no shuffle."""
-    out = textan.repetition_features(_load_corpus(spark, sf, "documents"))
+    out = textan.repetition_features(load_corpus(spark, sf, "documents"))
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1348,7 +1254,7 @@ def tx14_bigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     unlike tx06's unigram score. The twin replays the pairing (positional
     list indexing), both count models, and the micro-quantized exact
     mean, so the whole bigram chain is hash-certified."""
-    out = textan.bigram_logprob(_load_corpus(spark, sf, "documents"))
+    out = textan.bigram_logprob(load_corpus(spark, sf, "documents"))
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1376,7 +1282,7 @@ def tx06_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     under the corpus's own unigram model (rare-token-heavy docs score
     low). Two map-side-combined shuffles; corpus total via broadcast
     1-row aggregate."""
-    out = textan.unigram_logprob(_load_corpus(spark, sf, "documents"))
+    out = textan.unigram_logprob(load_corpus(spark, sf, "documents"))
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1429,7 +1335,7 @@ def tx10_tfidf_topk(spark: SparkSession, sf: str) -> DataFrame:
     twin replays the identical tf / document-frequency / ln pipeline
     single-node, so tokenization, the idf quantization contract, AND the
     top-k tie rule are all hash-certified."""
-    out = textan.tfidf_topk(_load_corpus(spark, sf, "documents"), k=3)
+    out = textan.tfidf_topk(load_corpus(spark, sf, "documents"), k=3)
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1584,7 +1490,7 @@ def tx07_gopher_rules(spark: SparkSession, sf: str) -> DataFrame:
     The twin recomputes every signal AND every threshold comparison on
     the unrounded doubles, so a dialect drift in division or comparison
     semantics flips a boolean and breaks the hash."""
-    out = textan.gopher_quality_flags(_load_corpus(spark, sf, "documents"))
+    out = textan.gopher_quality_flags(load_corpus(spark, sf, "documents"))
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1647,7 +1553,7 @@ def tx09_token_topk(spark: SparkSession, sf: str) -> DataFrame:
     lexicographically smaller token). Map-side-combined count plus
     TakeOrdered — no global sort. The 100 TB shape for 'what dominates
     my corpus' diagnostics."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     toks = d.select(
         F.explode(F.split(dedup.normalized_text("text"), " ")).alias("tok")
     ).filter(F.col("tok") != "")
@@ -1732,7 +1638,7 @@ def ck01_document_chunks(spark: SparkSession, sf: str) -> DataFrame:
     hash-certified, not just row counts."""
     from pyp_etl_pipeline_spark.operators import packing  # noqa: PLC0415
 
-    out = packing.chunk_documents(_load_corpus(spark, sf, "documents"), chunk_tokens=64, overlap=8)
+    out = packing.chunk_documents(load_corpus(spark, sf, "documents"), chunk_tokens=64, overlap=8)
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1783,7 +1689,7 @@ def tx12_ngram_novelty(spark: SparkSession, sf: str) -> DataFrame:
     analytic cousin). Two map-side-combined shuffles (per-gram doc
     counts over the already-distinct per-doc shingles, then the per-doc
     rollup); the score is integer micro math."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     from pyp_etl_pipeline_spark.operators.dedup import word_shingles  # noqa: PLC0415
 
     sh = d.select(F.col("doc_id"), F.explode(word_shingles("text", 3)).alias("g"))
@@ -1826,7 +1732,7 @@ def tx13_pmi_collocations(spark: SparkSession, sf: str) -> DataFrame:
     (``textan.pmi_bigrams``, min_count=5): the classic phrase detector.
     Integer micro-quantized rank key, ties bigram-ascending; the twin
     replays counts, probabilities, and ln in closed SQL form."""
-    return textan.pmi_bigrams(_load_corpus(spark, sf, "documents"), k=20, min_count=5)
+    return textan.pmi_bigrams(load_corpus(spark, sf, "documents"), k=20, min_count=5)
 
 
 def _tx13_sql() -> str:
@@ -2302,7 +2208,7 @@ def pp01_pretraining_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     crosses the wire twice. The twin replays the identical five stages
     as CTEs, so STAGE ORDER (dedup-over-survivors, not
     dedup-over-corpus) is part of what the hash certifies."""
-    d = _load_corpus_unique(spark, sf, "documents")
+    d = load_corpus_unique(spark, sf, "documents")
     # both gates run in keep-columns mode: pure map-only column algebra
     # appended to the corpus row — NO join-back against the corpus
     d1 = (
@@ -2395,7 +2301,7 @@ FROM final
     # idempotent ingest, applied to EVERY composed fragment at once
     # (the language-ID and shingle sub-builders are shared with other
     # twins and keep their raw scans there): mirrors the Spark side's
-    # _load_corpus_unique so at-least-once duplicates collapse up front.
+    # load_corpus_unique so at-least-once duplicates collapse up front.
     return sql.replace("FROM documents", "FROM (SELECT DISTINCT * FROM documents) AS documents")
 
 
@@ -2457,7 +2363,7 @@ def tx11_quality_percentile_gate(spark: SparkSession, sf: str) -> DataFrame:
     (doc, n_tokens) pairs — swap in approx_percentile when 1e-3 cut
     error is acceptable; the gate keeps the exact one to stay
     hash-certifiable."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     scored = d.select("doc_id", textan.token_count("text").alias("n_tokens"))
     thr = scored.agg(F.percentile("n_tokens", F.lit(0.25)).alias("thr"))
     return (
@@ -2603,7 +2509,7 @@ def ann04_kmeans_clusters(spark: SparkSession, sf: str) -> DataFrame:
     distance bit-for-bit: the gate certifies the DISTRIBUTED clustering
     loop (literal-broadcast assignment pass + one (cluster,dim)-combined
     shuffle per iteration) against a sequential reference."""
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     cents = similarity.kmeans_fit(emb, k=8, n_iter=2)
     out = similarity.kmeans_assign(emb, cents)
     return out.select(F.col("id").alias("vec_id"), "cluster_id", F.col("dist").alias("dist"))
@@ -2666,7 +2572,7 @@ def sd01_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
     clustering CTE (exact integer micro math — bit-for-bit assignments)
     plus the within-cluster pairwise cosine, so BOTH the distributed
     quantizer and the greedy keep-lowest-id rule are hash-certified."""
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     cents = similarity.kmeans_fit(emb, k=8, n_iter=2)
     return similarity.semantic_dedup(emb, cents, threshold=0.25).select(
         F.col("id").alias("vec_id"), "cluster_id", "kept_by", "cos_to_keeper"
@@ -2702,7 +2608,7 @@ def ann05_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     unrolls the per-subspace training, encoding, LUT build, and ADC
     ranking in SQL on the same exact integers, so codebooks, codes, and
     every ADC distance are hash-certified bit-for-bit."""
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     books = similarity.pq_fit(emb, m=4, ksub=8, n_iter=1)
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -3290,7 +3196,7 @@ def cms01_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     sketch state is depth x width counters however large the corpus."""
     from pyp_etl_pipeline_spark.operators import sketch  # noqa: PLC0415
 
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     toks = d.select(
         F.explode(F.split(dedup.normalized_text("text"), " ")).alias("tok")
     ).filter(F.col("tok") != "")
@@ -3415,7 +3321,7 @@ def tk01_bpe_vocab(spark: SparkSession, sf: str) -> DataFrame:
     is hash-certified bit-for-bit, not just sampled."""
     from pyp_etl_pipeline_spark.operators import bpe  # noqa: PLC0415
 
-    words = bpe.word_counts(_load_corpus(spark, sf, "documents"))
+    words = bpe.word_counts(load_corpus(spark, sf, "documents"))
     _merges, seqs = bpe.bpe_fit(words, n_merges=10)
     return seqs.select(
         "word",
@@ -3538,7 +3444,7 @@ FROM p2
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
+_QUERIES = {
     # core / TPC-H-ish
     "flagship_band_rollup": (core.flagship_band_rollup, core.FLAGSHIP_SQL),
     "q01_pricing_summary": (core.q01_pricing_summary, core.Q01_SQL),
@@ -3650,31 +3556,29 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "tx10_tfidf_topk": (tx10_tfidf_topk, TX10_SQL),
     # ST
     "st01_streaming_tumbling": (st01_streaming_tumbling, ST01_SQL),
+    # part 3: validators, text T4/T6, limits, summaries, set ops, date funcs,
+    # streaming sliding, multimodal plumbing
+    **_ext3.QUERIES3,
+    # part-3 queries whose oracles compose this module's twins
+    "ev04_gate_calibration": (_ext3.ev04_gate_calibration, _ext3._ev04_sql(TX07_SQL)),
+    "ev05_gate_kappa": (_ext3.ev05_gate_kappa, _ext3._ev05_sql(TX07_SQL, TX11_SQL)),
+    "dd08_dedup_savings": (_ext3.dd08_dedup_savings, _ext3._dd08_sql(DD04_SQL)),
+    "ev06_quality_auc": (_ext3.ev06_quality_auc, _ext3._ev06_sql(TX07_SQL)),
+    "cf01_cascade_filter": (_ext3.cf01_cascade_filter, _ext3._cf01_sql(TX07_SQL)),
+    "gr02_star_components": (_ext3.gr02_star_components, DD04_SQL),  # dd04's twin, verbatim
+    "pp02_multimodal_curation": (_ext3.pp02_multimodal_curation, _ext3._pp02_sql(TX07_SQL)),
+    "ks01_keep_best_per_cluster": (_ext3.ks01_keep_best_per_cluster, _ext3._ks01_sql(DD04_SQL)),
+    "ev01_linkage_eval": (_ext3.ev01_linkage_eval, _ext3._ev01_sql(SH01_SQL, DD02_SQL)),
+    # part 4: embedding quantization/geometry, feature hashing, padding
+    # economics, vocab sizing, TPC-H Q22 anti-join shape
+    **_ext4.QUERIES4,
 }
 
-# part 3: validators, text T4/T6, limits, summaries, set ops, date funcs,
-# streaming sliding, multimodal plumbing
-from pyp_etl_pipeline_spark import driver_queries_ext3 as _ext3  # noqa: E402
-
-# _ext3._finalize() composes the cross-module oracles (a03/ev01/pp02).
-# When ext3 is imported FIRST, its own bottom _finalize() call is still
-# on the stack while THIS module executes — so its patches would land
-# after our REGISTRY snapshot. Re-running it here (idempotent) before
-# the update makes the registry correct under either import order.
-_ext3._finalize()
-REGISTRY.update(_ext3.QUERIES3)
-
-# part 4: embedding quantization/geometry, feature hashing, padding
-# economics, vocab sizing, TPC-H Q22 anti-join shape (round-8 cont.)
-from pyp_etl_pipeline_spark import driver_queries_ext4 as _ext4  # noqa: E402
-
-REGISTRY.update(_ext4.QUERIES4)
-
 # The driver's correctness gate only covers the first 50 registry
-# entries; this list sets that window per round (changed-code re-certs
-# first, then the stalest driver evidence), so no query's last driver
-# check keeps aging. Duplicates further down are harmless: dict
-# insertion keeps the FIRST occurrence's position.
+# entries; this list is that window, set per round (changed-code
+# re-certs first, then the stalest driver evidence), so no query's last
+# driver check keeps aging. The rest of the registry follows in the
+# definition order above.
 _DRIVER_PRIORITY = [
     # round-13 rotation — generated by tools/rotate_window.py (paste,
     # don't hand-edit; the uniqueness/resolvability test pins the
@@ -3735,193 +3639,11 @@ _DRIVER_PRIORITY = [
     "a03_push_summary",  # evidence r9
     "a05_error_summary_24h",  # evidence r9
     "a07_status_priority_rollup",  # evidence r9
-    # ---- end of the 50-slot driver window ----
-    "a10_length_histogram",
-    "ab01_ab_test_readout",
-    "ann08_int8_topk",
-    "cd02_apply_changefeed",
-    "dc01_decontaminate",
-    "dd01_exact_dup_histogram",
-    "dd10_exact_substring_spans",
-    "dm01_label_centroid_cosine",
-    "dp01_noisy_counts",
-    "e03_crosslink_dedup",
-    "ex02_export_roundtrip",
-    "ex03_jsonl_roundtrip",
-    "f03_name_email_validation",
-    "f05_country_whitelist",
-    "fm01_orc_roundtrip",
-    "hh01_threshold_heavy_hitters",
-    "ka02_l_diversity",
-    "ks01_keep_best_per_cluster",
-    "mm04_frame_sample_plan",
-    "o01_topk_orders_per_customer",
-    "o04_latest_order_per_customer",
-    "o07_distinct_sorted_filters",
-    "p01_header_mapping",
-    "pt01_partition_pruned_rollup",
-    "q09_priority_with_returns",
-    "q10_returned_revenue_topk",
-    "se01_schema_evolution",
-    "sh01_simhash_pairs",
-    "sp01_hash_split",
-    "st10_streaming_materialized_rollup",
-    "t03_punct_lower_key",
-    "t09_masking",
-    "tx01_quality_features",
-    "tx02_token_counts",
-    "tx03_language_id",
-    "tx04_fingerprints",
-    "tx05_repetition",
-    "tx06_unigram_logprob",
-    "tx19_token_entropy",
-    "a08_percentile_summary",
-    "a12_cohort_retention",
-    "aj01_asof_purchase_view",
-    "aj02_asof_directions",
-    "dd09_containment_pairs",
-    "dr01_psi_drift",
-    "e01_explode_multivalue",
-    "e02_explode_dedup",
-    "ev03_rank_agreement",
-    "f01_sentinel_nulls",
-    "f02_row_validation",
-    "flagship_band_rollup",
-    "hy01_hybrid_rrf_fusion",
-    "j01_exact_resolution",
-    "j02_fuzzy_topk",
-    "j02b_typo_fallback",
-    "j04_penalty_bands",
-    "j07_alternatives",
-    "j08_semantic_guard",
-    "j09_merge_actions",
-    "j10_dim_lookup_or_create",
-    "j11_offerings_derivation",
-    "j12_canonical_backfill",
-    "j13_reject_payload",
-    "ml01_linear_trend",
-    "mm01_media_features",
-    "q01_pricing_summary",
-    "q02_top_revenue_orders",
-    "q03_region_revenue",
-    "q04_mktsegment_summary",
-    "q05_sql_interface",
-    "rj01_interval_join",
-    "rv01_review_workflow",
-    "sp02_stratified_sample",
-    "sq01_session_transitions",
-    "st02_streaming_sliding",
-    "st04_streaming_dedup",
-    "st05_stream_stream_join",
-    "st06_streaming_upsert",
-    "st07_streaming_sessions",
-    "st09_stream_stream_left_join",
-    "st11_streaming_psi_drift",
-    "tx18_zipf_fit",
-    "w02_sliding_1h_15m",
-    "w03_sessionize_30m",
-    "w04_lag_delta",
-    "w08_funnel_analysis",
-    "w09_ewma_value",
-    "w10_ohlc_bars",
-    "a01_band_summary",
-    "ann01_cosine_topk",
-    "ann02_lsh_topk",
-    "ann03_ivf_topk",
-    "ann04_kmeans_clusters",
-    "dc02_decontaminate_spans",
-    "dd03_minhash_lsh_pairs",
-    "dd04_dup_clusters",
-    "dd05_incremental_minhash",
-    "dd06_span_dedup",
-    "dd07_neardup_dedup",
-    "ex01_shard_stats",
-    "j14_scd2_history",
-    "j15_live_uid_fallback",
-    "j16_point_in_time_status",
-    "js01_json_extract_rollup",
-    "mm02_media_decode",
-    "mm03_jpeg_decode",
-    "mm05_mp4_metadata",
-    "mm06_audio_features",
-    "mx01_corpus_mixture",
-    "nd01_embed_neardup",
-    "pp01_pretraining_pipeline",
-    "px01_pii_scrub",
-    "px02_pseudonymization",
-    "qa01_daily_quota_ledger",
-    "sd01_semantic_dedup",
-    "sk01_salted_join",
-    "st01_streaming_tumbling",
-    "st03_stateful_running_totals",
-    "t01_sanitize_collapse",
-    "t02_variant_normalize",
-    "t05_capital_case",
-    "tx07_gopher_rules",
-    "tx08_html_extract",
-    "tx09_token_topk",
-    "tx10_tfidf_topk",
-    "tx12_ngram_novelty",
-    "tx13_pmi_collocations",
-    "u01_union_kinds",
-    "u02_idarray_union",
-    "w01_tumbling_hourly",
-    "w07_rolling_30d_revenue",
-    "zo01_zorder_cells",
-    "a09_event_pivot",
-    "a11_cube_summary",
-    "a13_hll_distinct",
-    "ad01_traffic_anomalies",
-    "bf01_bloom_decontaminate",
-    "bk01_bucketed_join",
-    "bm01_bm25_rank",
-    "cd01_snapshot_diff",
-    "ck01_document_chunks",
-    "cms01_heavy_hitters",
-    "cp01_compaction_plan",
-    "cv01_csv_roundtrip",
-    "cv02_csv_nonutf8_roundtrip",
-    "dd02_ngram_jaccard_pairs",
-    "dq01_expectation_report",
-    "ep01_epoch_shuffle",
-    "ev01_linkage_eval",
-    "gf01_gap_fill",
-    "gt01_grand_total_wide",
-    "ia01_incremental_rollup",
-    "ii01_inverted_index",
-    "mm07_mjpeg_frames",
-    "mm08_hadamard_spectrum",
-    "mm09_image_dhash",
-    "mm10_image_neardup_pairs",
-    "mm11_audio_fingerprint_groups",
-    "mm15_h264_sps_metadata",
-    "mm16_mp4_avcc_qa",
-    "mm17_hevc_sps_metadata",
-    "mm18_mp4_hvcc_qa",
-    "mm19_av1_seq_metadata",
-    "mm20_mp4_av1c_qa",
-    "o08_keyset_pagination",
-    "pf01_table_profile",
-    "pp02_multimodal_curation",
-    "q06_large_volume_customers",
-    "qt01_histogram_quantiles",
-    "st08_stream_static_enrich",
-    "tc01_triangle_census",
-    "tk01_bpe_vocab",
-    "tk02_wordpiece_segment",
-    "tx11_quality_percentile_gate",
-    "tx14_bigram_logprob",
-    "tx15_readability",
-    "tx16_heldout_logprob",
-    "u05_status_set_ops",
-    "u06_multiset_ops",
-    "w05_ntile_quartiles",
-    # tail: 180 queries; oldest deferred evidence tier: r9 (39 queries)
 ]
 
-REGISTRY = {
-    **{k: REGISTRY[k] for k in _DRIVER_PRIORITY if k in REGISTRY},
-    **{k: v for k, v in REGISTRY.items() if k not in _DRIVER_PRIORITY},
+REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
+    **{name: _QUERIES[name] for name in _DRIVER_PRIORITY},
+    **_QUERIES,
 }
 
 

@@ -17,10 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyp_etl_pipeline_spark.driver_queries import J09_SQL, j09_merge_actions
 from pyp_etl_pipeline_spark.functions import text, validation
 from pyp_etl_pipeline_spark.functions.aggregates import exact_avg as _exact_avg
 from pyp_etl_pipeline_spark.functions.aggregates import exact_sum as _exact_sum
-from pyp_etl_pipeline_spark.tables import load_table
+from pyp_etl_pipeline_spark.tables import load_corpus, load_corpus_unique, load_table, scratch_path
 
 # --------------------------------------------------------------------------
 # F3/F4 name + email validation
@@ -207,9 +208,10 @@ SELECT * FROM (
 def a03_push_summary(spark: SparkSession, sf: str) -> DataFrame:
     """A3: members created/updated/skipped counts from the merge
     classification (reference app/routes.py:2019-2028)."""
-    from pyp_etl_pipeline_spark.driver_queries import j09_merge_actions  # noqa: PLC0415
-
     return j09_merge_actions(spark, sf).groupBy("action").agg(F.count("*").alias("n_members"))
+
+
+A03_SQL = f"SELECT action, count(*) AS n_members FROM ({J09_SQL}) GROUP BY 1"
 
 
 def a05_error_summary_24h(spark: SparkSession, sf: str) -> DataFrame:
@@ -316,10 +318,9 @@ FROM allp a LEFT JOIN linked l ON a.l_orderkey = l.l_orderkey
 def ann03_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-flat ANN: corpus bucketed by nearest of 16 deterministic
     centroids; queries probe their 2 nearest lists and exact-rerank."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import similarity  # noqa: PLC0415
 
-    emb = _load_corpus(spark, sf, "embeddings")
+    emb = load_corpus(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -907,11 +908,8 @@ def mx02_token_budget_fill(spark: SparkSession, sf: str) -> DataFrame:
     cumsum, and the overflow contract, so the whole budget-fill chain is
     hash-certified."""
     from pyp_etl_pipeline_spark.operators import sampling, textan  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
-
-    d = _load_corpus_unique(spark, sf, "documents")
+    d = load_corpus_unique(spark, sf, "documents")
     src = d.select(
         "doc_id",
         F.element_at(
@@ -1417,11 +1415,9 @@ def ii01_inverted_index(spark: SparkSession, sf: str) -> DataFrame:
     construction (operators/textan.inverted_index) — the search-index /
     collocation-mining primitive, shaped so stopword keys never reach
     the list-building shuffle."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
     # the synthetic corpus has a tiny, highly shared vocabulary — a 0.9
     # ratio keeps real posting lists while still exercising the prune
-    return _textan.inverted_index(_load_corpus(spark, sf, "documents"), max_df_ratio=0.9)
+    return _textan.inverted_index(load_corpus(spark, sf, "documents"), max_df_ratio=0.9)
 
 
 II01_SQL = f"""
@@ -1495,17 +1491,45 @@ def ev01_linkage_eval(spark: SparkSession, sf: str) -> DataFrame:
     against exact shingle-Jaccard >= 0.5 truth pairs
     (operators/quality.linkage_eval) — the recall audit every LSH/blocking
     scheme needs before it gates a 100 TB dedup."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import quality as _quality  # noqa: PLC0415
 
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     pred = _dedup.simhash_pairs(d, max_hamming=6)
     truth = _dedup.shingle_pairs_jaccard(d, threshold=0.5)
     return _quality.linkage_eval(pred, truth)
 
 
-EV01_SQL: str | None = None  # composed in _finalize (needs SH01/DD02 twins)
+def _ev01_sql(sh01_body: str, dd02_body: str) -> str:
+    return f"""
+WITH pred AS (SELECT DISTINCT id_a, id_b FROM ({sh01_body})),
+truth AS (SELECT DISTINCT id_a, id_b FROM ({dd02_body})),
+j AS (
+  SELECT coalesce(p.id_a, t.id_a) AS id_a,
+         CASE WHEN p.id_a IS NOT NULL THEN 1 END AS in_pred,
+         CASE WHEN t.id_a IS NOT NULL THEN 1 END AS in_truth
+  FROM pred p FULL JOIN truth t ON p.id_a = t.id_a AND p.id_b = t.id_b
+),
+agg AS (
+  SELECT CAST(coalesce(sum(in_pred), 0) AS BIGINT) AS n_pred,
+         CAST(coalesce(sum(in_truth), 0) AS BIGINT) AS n_truth,
+         CAST(sum(CASE WHEN in_pred IS NOT NULL AND in_truth IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS tp
+  FROM j
+),
+m AS (
+  SELECT *,
+         CAST(n_pred - tp AS BIGINT) AS fp, CAST(n_truth - tp AS BIGINT) AS fn,
+         CASE WHEN n_pred > 0 THEN CAST((tp * 1000000) // n_pred AS BIGINT) END AS precision_micro,
+         CASE WHEN n_truth > 0 THEN CAST((tp * 1000000) // n_truth AS BIGINT) END AS recall_micro
+  FROM agg
+)
+SELECT n_pred, n_truth, tp, fp, fn, precision_micro, recall_micro,
+       CASE WHEN precision_micro IS NOT NULL AND recall_micro IS NOT NULL
+                 AND precision_micro + recall_micro > 0
+            THEN CAST((2 * precision_micro * recall_micro) // (precision_micro + recall_micro) AS BIGINT)
+       END AS f1_micro
+FROM m
+"""
 
 
 # --------------------------------------------------------------------------
@@ -1517,10 +1541,9 @@ def tk02_wordpiece_segment(spark: SparkSession, sf: str) -> DataFrame:
     against a corpus-derived WordPiece vocab (single chars + top-10-word
     prefixes) — operators/bpe.wordpiece_segment. Completes the tokenizer
     lifecycle: train (tk01) -> apply (tk02) -> pack (pk01)."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import bpe as _bpe  # noqa: PLC0415
 
-    w = _bpe.word_counts(_load_corpus(spark, sf, "documents"))
+    w = _bpe.word_counts(load_corpus(spark, sf, "documents"))
     return _bpe.wordpiece_segment(w, _bpe.wordpiece_vocab(w))
 
 
@@ -1620,9 +1643,7 @@ def bm01_bm25_rank(spark: SparkSession, sf: str) -> DataFrame:
     """Top-10 corpus docs by BM25 for the 3 mid-df query terms
     (operators/textan.bm25_rank) — the query-time half of the search
     index whose storage half is ii01."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    return _textan.bm25_rank(_load_corpus(spark, sf, "documents"))
+    return _textan.bm25_rank(load_corpus(spark, sf, "documents"))
 
 
 BM01_SQL = f"""
@@ -1678,7 +1699,6 @@ def pt01_partition_pruned_rollup(spark: SparkSession, sf: str) -> DataFrame:
 
     e = load_table(spark, sf, "events")
     target = e.agg(F.max(F.to_date("ts"))).collect()[0][0]
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
 
     path = scratch_path("pt01_scratch")
     write_date_partitioned(e, path)
@@ -1733,8 +1753,6 @@ def st09_stream_stream_left_join(spark: SparkSession, sf: str) -> DataFrame:
         read_events_stream,
         streaming_window_join,
     )
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
 
     scratch = scratch_path("st09_scratch")
     shutil.rmtree(scratch, ignore_errors=True)
@@ -2089,9 +2107,7 @@ def tx15_readability(spark: SparkSession, sf: str) -> DataFrame:
     readability_features) — the classic readability screen for corpus
     curation, with vowel-group syllable estimates and a micro-floored
     engine-identical score."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    return _textan.readability_features(_load_corpus(spark, sf, "documents"))
+    return _textan.readability_features(load_corpus(spark, sf, "documents"))
 
 
 TX15_SQL = f"""
@@ -2287,9 +2303,8 @@ def bf01_bloom_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     certifying the no-false-negative guarantee row by row (flagged_exact
     implies flagged_bloom) and measuring the false-positive cost."""
     from pyp_etl_pipeline_spark.operators.dedup import word_shingles  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
 
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     # null text shingles to a single NULL entry (array_join(NULL)) —
     # filter it so null-text docs are absent from the report, matching
     # the twin's unnest(NULL)-drops-row semantics (null sweep, r8)
@@ -2393,8 +2408,6 @@ def st10_streaming_materialized_rollup(spark: SparkSession, sf: str) -> DataFram
     from pyp_etl_pipeline_spark.operators import incremental as incr  # noqa: PLC0415
     from pyp_etl_pipeline_spark.streaming.events import read_events_stream  # noqa: PLC0415
     from pyp_etl_pipeline_spark.tables import load_table as _lt  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
 
     scratch = scratch_path("st10_scratch")
     shutil.rmtree(scratch, ignore_errors=True)
@@ -2655,12 +2668,9 @@ def ann06_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     (similarity.ivfpq_topk). The twin replays coarse training, vector
     assignment, probe selection, PQ training, encoding, LUTs and ADC —
     every stage on the same integers, hash-certified."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
-
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     # fused fit: bit-identical to kmeans_fit(k=8) + pq_fit(m=4, ksub=8)
     # at half the training scans (pinned by test_ivfpq_fit_fused_equals_separate)
     coarse, books = _sim.ivfpq_fit(emb, k=8, m=4, ksub=8, n_iter=1)
@@ -2810,12 +2820,9 @@ def ann07_ivfpq_refine_topk(spark: SparkSession, sf: str) -> DataFrame:
     production recall fix. The shortlist broadcasts into the raw-vector
     scan (map-only second touch of the corpus); the twin replays the
     full ann06 pipeline at k*r and the rerank join bit-for-bit."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
-
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     coarse, books = _sim.ivfpq_fit(emb, k=8, m=4, ksub=8, n_iter=1)
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -2874,7 +2881,6 @@ def fm01_orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     from pyp_etl_pipeline_spark.functions.aggregates import exact_sum  # noqa: PLC0415
 
     o = load_table(spark, sf, "orders")
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
 
     path = scratch_path("fm01_orc")
     shutil.rmtree(path, ignore_errors=True)
@@ -3052,7 +3058,6 @@ def se01_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
     import tempfile  # noqa: PLC0415
 
     d = load_table(spark, sf, "documents")
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
 
     root = scratch_path("se01_evolve")
     shutil.rmtree(root, ignore_errors=True)
@@ -3098,12 +3103,9 @@ def ev02_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
     sibling of ev01's linkage metrics). The twin replays the ENTIRE
     ann06 pipeline plus the brute-force ranking and the overlap count,
     so the measured recall itself is hash-certified."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
-
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     coarse, books = _sim.ivfpq_fit(emb, k=8, m=4, ksub=8, n_iter=1)
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -3220,10 +3222,9 @@ def ks01_keep_best_per_cluster(spark: SparkSession, sf: str) -> DataFrame:
     cluster_id, already co-partitioned from the aggregate (AQE
     broadcasts it when small). Output: every clustered doc with its
     keeper and verdict."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
 
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     pairs = _dedup.shingle_pairs_jaccard(d, threshold=0.5)
     clusters = _dedup.dup_clusters(pairs)
     member = clusters.join(d.select("doc_id", "n_chars"), "doc_id")
@@ -3251,9 +3252,9 @@ def ks01_keep_best_per_cluster(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _ks01_sql(DD04_SQL: str) -> str:
+def _ks01_sql(dd04_body: str) -> str:
     return f"""
-WITH c AS ({DD04_SQL}),
+WITH c AS ({dd04_body}),
 member AS (
   SELECT c.doc_id, c.cluster_id, CAST(d.n_chars AS BIGINT) AS n_chars
   FROM c JOIN documents d ON d.doc_id = c.doc_id
@@ -3269,9 +3270,6 @@ FROM member m JOIN keeper k USING (cluster_id)
 """
 
 
-KS01_SQL: str | None = None  # composed in _finalize (needs ext's DD04 twin)
-
-
 # --------------------------------------------------------------------------
 # tx16: held-out perplexity gate (no self-scoring leakage)
 # --------------------------------------------------------------------------
@@ -3280,9 +3278,7 @@ def tx16_heldout_logprob(spark: SparkSession, sf: str) -> DataFrame:
     """Odd docs scored under the add-one unigram LM fit on EVEN docs
     (operators/textan.heldout_unigram_logprob) — the leakage-free
     variant of the tx06 quality gate, with OOV counts."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     return _textan.heldout_unigram_logprob(
         d.filter(F.col("doc_id") % 2 == 0), d.filter(F.col("doc_id") % 2 == 1)
     )
@@ -3401,10 +3397,9 @@ def pp02_multimodal_curation(spark: SparkSession, sf: str) -> DataFrame:
     individually hash-certified queries, and the composed manifest is
     certified again here. First matching reason wins (dup before
     quality before image — dedup order mirrors pp01)."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
 
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     fp = d.select("doc_id", _dedup.fingerprint("text").alias("f"))
     keeper = fp.groupBy("f").agg(F.min("doc_id").alias("keep_id"))
     tdup = fp.join(keeper, "f").select(
@@ -3436,15 +3431,15 @@ def pp02_multimodal_curation(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _pp02_sql(TX07_SQL: str) -> str:
+def _pp02_sql(tx07_body: str) -> str:
     from pyp_etl_pipeline_spark.driver_queries import sql_normalized_text as _snt2  # noqa: PLC0415
 
     return f"""
 WITH fp AS (SELECT doc_id, md5({_snt2("text")}) AS f FROM documents),
 keeper AS (SELECT f, min(doc_id) AS keep_id FROM fp GROUP BY 1),
 tdup AS (SELECT fp.doc_id, fp.doc_id <> k.keep_id AS is_text_dup FROM fp JOIN keeper k USING (f)),
-g AS (SELECT doc_id, gopher_pass FROM ({TX07_SQL})),
-ip AS (SELECT DISTINCT id_b AS doc_id FROM ({{MM10_BODY}})),
+g AS (SELECT doc_id, gopher_pass FROM ({tx07_body})),
+ip AS (SELECT DISTINCT id_b AS doc_id FROM ({MM10_SQL})),
 m AS (
   SELECT d.doc_id, d.doc_id % 2 = 0 AS has_image,
          CASE WHEN t.is_text_dup THEN 'text_dup'
@@ -3458,9 +3453,6 @@ m AS (
 )
 SELECT doc_id, has_image, status, status = 'kept' AS keep FROM m
 """
-
-
-PP02_SQL: str | None = None  # composed in _finalize (needs ext's TX07 twin)
 
 
 # --------------------------------------------------------------------------
@@ -3482,13 +3474,11 @@ def hy01_hybrid_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
     candidate set is bounded at 2k rows BY CONSTRUCTION, so the final
     full-outer join + rank is a constant-size epilogue at any corpus
     size."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
 
-    text_list = _textan.bm25_rank(_load_corpus(spark, sf, "documents")).select(
+    text_list = _textan.bm25_rank(load_corpus(spark, sf, "documents")).select(
         "doc_id", F.col("rank").alias("text_rank")
     )
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
 
     # idempotent-ingest contract: collapse duplicated embedding rows,
     # and restrict to document ids with a SEMI join — an inner join
@@ -3496,7 +3486,7 @@ def hy01_hybrid_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
     # rows and let one doc consume two top-10 slots (caught by the
     # --dupes gate run from the sf0.01 base; the twin's IN() was
     # already a semi join)
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     doc_vecs = emb.join(
         load_table(spark, sf, "documents").select(F.col("doc_id").alias("vec_id")),
         "vec_id",
@@ -3808,11 +3798,10 @@ def hh01_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     form ("everything above 0.5%"), whose output size is data-driven.
     The final exact-count filter makes the result partitioning-
     independent, so the plain GROUP BY .. HAVING twin is exact."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import dedup as _dd  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import sketch as _sk  # noqa: PLC0415
 
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     toks = d.select(
         F.explode(F.split(_dd.normalized_text("text"), " ")).alias("tok")
     ).filter(F.col("tok") != "")
@@ -3910,10 +3899,9 @@ def hn01_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     a contrastive fine-tune (see operators/similarity.py:
     hard_negative_mining for the plan shape and the ANN-shortlist
     production variant)."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
 
-    emb = _load_corpus(spark, sf, "embeddings")
+    emb = load_corpus(spark, sf, "embeddings")
     anchors = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
@@ -3967,13 +3955,11 @@ def ev03_rank_agreement(spark: SparkSession, sf: str) -> DataFrame:
     hy01; the epilogue is a full join of two 10-row relations plus one
     single-row aggregate — constant-size at any corpus scale. All
     metrics exact integers."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
 
-    text_list = _textan.bm25_rank(_load_corpus(spark, sf, "documents")).select(
+    text_list = _textan.bm25_rank(load_corpus(spark, sf, "documents")).select(
         "doc_id", F.col("rank").cast("long").alias("text_rank")
     )
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
 
     # idempotent-ingest contract: collapse duplicated embedding rows,
     # and restrict to document ids with a SEMI join — an inner join
@@ -3981,7 +3967,7 @@ def ev03_rank_agreement(spark: SparkSession, sf: str) -> DataFrame:
     # rows and let one doc consume two top-10 slots (caught by the
     # --dupes gate run from the sf0.01 base; the twin's IN() was
     # already a semi join)
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     doc_vecs = emb.join(
         load_table(spark, sf, "documents").select(F.col("doc_id").alias("vec_id")),
         "vec_id",
@@ -4134,9 +4120,7 @@ def mk01_mlm_masking_plan(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic 15% token-masking plan for MLM pretraining over the
     document corpus, with the first-10-token masked preview certifying
     the substitution (see operators/textan.py: mlm_masking_plan)."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    docs = _load_corpus(spark, sf, "documents")
+    docs = load_corpus(spark, sf, "documents")
     return _textan.mlm_masking_plan(docs)
 
 
@@ -4182,10 +4166,9 @@ def dc03_semantic_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     never shuffles, same contract as dc01. A production run swaps the
     brute scoring for the IVF-PQ shortlist (ann06/ann07) and keeps this
     exact form as its certified ground truth."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
 
-    emb = _load_corpus(spark, sf, "embeddings").select(
+    emb = load_corpus(spark, sf, "embeddings").select(
         "vec_id", _sim._as_double("embedding").alias("__v")
     ).filter(F.col("__v").isNotNull())
     ev = emb.filter(F.col("vec_id") % 100 == 0).select(
@@ -4292,10 +4275,9 @@ def dd08_dedup_savings(spark: SparkSession, sf: str) -> DataFrame:
     micro. One groupBy over cluster labels, one over sizes, one
     single-row global agg broadcast back — the heavy lifting is the
     already-certified pair+CC pipeline."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
 
-    corpus = _load_corpus(spark, sf, "documents")
+    corpus = load_corpus(spark, sf, "documents")
     pairs = _dedup.shingle_pairs_jaccard(corpus, threshold=0.5)
     clusters = _dedup.dup_clusters(pairs)
     sizes = clusters.groupBy("cluster_id").agg(
@@ -4321,9 +4303,6 @@ def dd08_dedup_savings(spark: SparkSession, sf: str) -> DataFrame:
             F.expr("n_removable_total * CAST(1000000 AS BIGINT) DIV corpus_docs").alias("dedup_ratio_micro"),
         )
     )
-
-
-DD08_SQL: str | None = None  # composed in _finalize (needs ext's DD04 twin)
 
 
 def _dd08_sql(dd04_body: str) -> str:
@@ -4355,9 +4334,7 @@ def ev04_gate_calibration(spark: SparkSession, sf: str) -> DataFrame:
     cheap signal can pre-screen and the expensive gate runs on a
     fraction of the corpus. Map-only signal pass + one
     partial-aggregated groupBy over <=10 bins; exact integers."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    g = _textan.gopher_quality_flags(_load_corpus(spark, sf, "documents"))
+    g = _textan.gopher_quality_flags(load_corpus(spark, sf, "documents"))
     binned = g.select(
         F.least(F.lit(9).cast("long"), F.expr("n_words DIV 50")).alias("bin"),
         # NULL gopher_pass (null-injected text) counts as NOT passing in
@@ -4378,9 +4355,6 @@ def ev04_gate_calibration(spark: SparkSession, sf: str) -> DataFrame:
             F.expr("n_pass * CAST(1000000 AS BIGINT) DIV n_docs").alias("pass_rate_micro"),
         )
     )
-
-
-EV04_SQL: str | None = None  # composed in _finalize (needs ext's TX07 twin)
 
 
 def _ev04_sql(tx07_body: str) -> str:
@@ -4416,9 +4390,7 @@ def ev05_gate_kappa(spark: SparkSession, sf: str) -> DataFrame:
     (both engines truncate integer division toward zero — verified).
     Shape: two map-only scoring passes joined on doc_id, one exact
     percentile aggregate (tx11's), one single-row contingency agg."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    docs = _load_corpus(spark, sf, "documents")
+    docs = load_corpus(spark, sf, "documents")
     g = _textan.gopher_quality_flags(docs).select(
         F.col("id").alias("doc_id"), "gopher_pass"
     )
@@ -4455,9 +4427,6 @@ def ev05_gate_kappa(spark: SparkSession, sf: str) -> DataFrame:
             " THEN (po_nano - pe_nano) * CAST(1000000 AS BIGINT) DIV (1000000000 - pe_nano) END"
         ).alias("kappa_micro"),
     )
-
-
-EV05_SQL: str | None = None  # composed in _finalize (needs ext's TX07/TX11 twins)
 
 
 def _ev05_sql(tx07_body: str, tx11_body: str) -> str:
@@ -4596,14 +4565,10 @@ def gr02_star_components(spark: SparkSession, sf: str) -> DataFrame:
     transitive-closure twin as dd04, so the gate certifies the two
     strategies produce identical components on real data (the pytest
     equivalence property, now hash-certified)."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
 
-    pairs = _dedup.shingle_pairs_jaccard(_load_corpus(spark, sf, "documents"), threshold=0.5)
+    pairs = _dedup.shingle_pairs_jaccard(load_corpus(spark, sf, "documents"), threshold=0.5)
     return _dedup.dup_clusters(pairs, strategy="star")
-
-
-GR02_SQL: str | None = None  # composed in _finalize (dd04's twin, verbatim)
 
 
 # --------------------------------------------------------------------------
@@ -4623,9 +4588,7 @@ def cf01_cascade_filter(spark: SparkSession, sf: str) -> DataFrame:
     regex passes over every byte and three regex passes over the
     surviving fraction; both stages stay map-only and pipeline into one
     scan of the survivors."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     screened = d.select(
         "doc_id", "text", (_textan.token_count("text") >= 50).alias("__keep")
     )
@@ -4656,9 +4619,6 @@ def cf01_cascade_filter(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("survivor_pass_micro"),
         )
     )
-
-
-CF01_SQL: str | None = None  # composed in _finalize (needs ext's TX07 twin)
 
 
 def _cf01_sql(tx07_body: str) -> str:
@@ -4704,9 +4664,7 @@ def ev06_quality_auc(spark: SparkSession, sf: str) -> DataFrame:
     (2·npos·nneg). The cumulative window runs over DISTINCT SCORE
     VALUES (bounded cardinality — word counts), not rows; at unbounded
     score cardinality swap in prefix.grouped_prefix_sum, same algebra."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    g = _textan.gopher_quality_flags(_load_corpus(spark, sf, "documents"))
+    g = _textan.gopher_quality_flags(load_corpus(spark, sf, "documents"))
     # a NULL score (null text) is unrankable — and the two engines order
     # NULLs differently in an ASC window, so it must not participate
     s = g.filter(F.col("n_words").isNotNull()).select(
@@ -4738,9 +4696,6 @@ def ev06_quality_auc(spark: SparkSession, sf: str) -> DataFrame:
             " DIV (2 * n_pos * (n - n_pos)) END"
         ).alias("auc_micro"),
     )
-
-
-EV06_SQL: str | None = None  # composed in _finalize (needs ext's TX07 twin)
 
 
 def _ev06_sql(tx07_body: str) -> str:
@@ -4919,10 +4874,9 @@ def tk03_vocab_coverage(spark: SparkSession, sf: str) -> DataFrame:
     (tk02) -> EVALUATE (tk03) -> pack (pk01). All stages are
     dimension-sized (distinct words, not corpus rows); the epilogue is
     four single-row aggregates broadcast together."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import bpe as _bpe  # noqa: PLC0415
 
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     train_w = _bpe.word_counts(d.filter(F.col("doc_id") % 5 != 0))
     held_w = _bpe.word_counts(d.filter(F.col("doc_id") % 5 == 0))
     vocab = _bpe.wordpiece_vocab(train_w)
@@ -5157,19 +5111,13 @@ QUERIES3 = {
     "dp01_noisy_counts": (dp01_noisy_counts, DP01_SQL),
     "mk01_mlm_masking_plan": (mk01_mlm_masking_plan, MK01_SQL),
     "sa01_skew_audit": (sa01_skew_audit, SA01_SQL),
-    "ev04_gate_calibration": (ev04_gate_calibration, None),  # oracle composed below
-    "ev05_gate_kappa": (ev05_gate_kappa, None),  # oracle composed below
     "tx17_url_normalize": (tx17_url_normalize, TX17_SQL),
     "dc03_semantic_decontaminate": (dc03_semantic_decontaminate, DC03_SQL),
     "px03_pii_density": (px03_pii_density, PX03_SQL),
-    "dd08_dedup_savings": (dd08_dedup_savings, None),  # oracle composed below
     "mm14_resized_thumbs": (mm14_resized_thumbs, MM14_SQL),
     "tk03_vocab_coverage": (tk03_vocab_coverage, TK03_SQL),
     "aj02_asof_directions": (aj02_asof_directions, AJ02_SQL),
     "q07_promo_revenue_share": (q07_promo_revenue_share, Q07_SQL),
-    "ev06_quality_auc": (ev06_quality_auc, None),  # oracle composed below
-    "cf01_cascade_filter": (cf01_cascade_filter, None),  # oracle composed below
-    "gr02_star_components": (gr02_star_components, None),  # oracle composed below
     "ka01_k_anonymity": (ka01_k_anonymity, KA01_SQL),
     "uv01_unpivot_part_attrs": (uv01_unpivot_part_attrs, UV01_SQL),
     "gs01_grouping_sets": (gs01_grouping_sets, GS01_SQL),
@@ -5177,7 +5125,6 @@ QUERIES3 = {
     "bfs01_reach_levels": (bfs01_reach_levels, BFS01_SQL),
     "hh01_threshold_heavy_hitters": (hh01_heavy_hitters, HH01_SQL),
     "sq01_session_transitions": (sq01_session_transitions, SQ01_SQL),
-    "pp02_multimodal_curation": (pp02_multimodal_curation, None),  # oracle composed below
     "mm11_audio_fingerprint_groups": (mm11_audio_fingerprint_groups, MM11_SQL),
     "ws01_weighted_sample": (ws01_weighted_sample, WS01_SQL),
     "tx16_heldout_logprob": (tx16_heldout_logprob, TX16_SQL),
@@ -5189,7 +5136,6 @@ QUERIES3 = {
     "mm12_gif_decode": (mm12_gif_decode, MM12_SQL),
     "mm13_gif_animation_frames": (mm13_gif_animation_frames, MM13_SQL),
     "fm01_orc_roundtrip": (fm01_orc_roundtrip, FM01_SQL),
-    "ks01_keep_best_per_cluster": (ks01_keep_best_per_cluster, None),  # oracle composed below
     "mm10_image_neardup_pairs": (mm10_image_neardup_pairs, MM10_SQL),
     "mm09_image_dhash": (mm09_image_dhash, MM09_SQL),
     "w10_ohlc_bars": (w10_ohlc_bars, W10_SQL),
@@ -5209,7 +5155,6 @@ QUERIES3 = {
     "bm01_bm25_rank": (bm01_bm25_rank, BM01_SQL),
     "ia01_incremental_rollup": (ia01_incremental_rollup, IA01_SQL),
     "tk02_wordpiece_segment": (tk02_wordpiece_segment, TK02_SQL),
-    "ev01_linkage_eval": (ev01_linkage_eval, None),  # oracle composed below
     "qt01_histogram_quantiles": (qt01_histogram_quantiles, QT01_SQL),
     "ii01_inverted_index": (ii01_inverted_index, II01_SQL),
     "gf01_gap_fill": (gf01_gap_fill, GF01_SQL),
@@ -5232,7 +5177,7 @@ QUERIES3 = {
     "f05_country_whitelist": (f05_country_whitelist, F05_SQL),
     "t03_punct_lower_key": (t03_punct_lower_key, T03_SQL),
     "o07_distinct_sorted_filters": (o07_distinct_sorted_filters, O07_SQL),
-    "a03_push_summary": (a03_push_summary, None),  # oracle composed below
+    "a03_push_summary": (a03_push_summary, A03_SQL),
     "a05_error_summary_24h": (a05_error_summary_24h, A05_SQL),
     "u02_idarray_union": (u02_idarray_union, U02_SQL),
     "e03_crosslink_dedup": (e03_crosslink_dedup, E03_SQL),
@@ -5246,83 +5191,3 @@ QUERIES3 = {
     "st04_streaming_dedup": (st04_streaming_dedup, ST04_SQL),
     "mm01_media_features": (mm01_media_features, MM01_SQL),
 }
-
-
-def _finalize() -> None:
-    from pyp_etl_pipeline_spark.driver_queries import J09_SQL  # noqa: PLC0415
-
-    QUERIES3["a03_push_summary"] = (
-        a03_push_summary,
-        f"SELECT action, count(*) AS n_members FROM ({J09_SQL}) GROUP BY 1",
-    )
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import (  # noqa: PLC0415
-        DD02_SQL,
-        DD04_SQL,
-        SH01_SQL,
-    )
-
-    global KS01_SQL
-    KS01_SQL = _ks01_sql(DD04_SQL)
-    QUERIES3["ks01_keep_best_per_cluster"] = (ks01_keep_best_per_cluster, KS01_SQL)
-
-    ev01_sql = f"""
-WITH pred AS (SELECT DISTINCT id_a, id_b FROM ({SH01_SQL})),
-truth AS (SELECT DISTINCT id_a, id_b FROM ({DD02_SQL})),
-j AS (
-  SELECT coalesce(p.id_a, t.id_a) AS id_a,
-         CASE WHEN p.id_a IS NOT NULL THEN 1 END AS in_pred,
-         CASE WHEN t.id_a IS NOT NULL THEN 1 END AS in_truth
-  FROM pred p FULL JOIN truth t ON p.id_a = t.id_a AND p.id_b = t.id_b
-),
-agg AS (
-  SELECT CAST(coalesce(sum(in_pred), 0) AS BIGINT) AS n_pred,
-         CAST(coalesce(sum(in_truth), 0) AS BIGINT) AS n_truth,
-         CAST(sum(CASE WHEN in_pred IS NOT NULL AND in_truth IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS tp
-  FROM j
-),
-m AS (
-  SELECT *,
-         CAST(n_pred - tp AS BIGINT) AS fp, CAST(n_truth - tp AS BIGINT) AS fn,
-         CASE WHEN n_pred > 0 THEN CAST((tp * 1000000) // n_pred AS BIGINT) END AS precision_micro,
-         CASE WHEN n_truth > 0 THEN CAST((tp * 1000000) // n_truth AS BIGINT) END AS recall_micro
-  FROM agg
-)
-SELECT n_pred, n_truth, tp, fp, fn, precision_micro, recall_micro,
-       CASE WHEN precision_micro IS NOT NULL AND recall_micro IS NOT NULL
-                 AND precision_micro + recall_micro > 0
-            THEN CAST((2 * precision_micro * recall_micro) // (precision_micro + recall_micro) AS BIGINT)
-       END AS f1_micro
-FROM m
-"""
-    QUERIES3["ev01_linkage_eval"] = (ev01_linkage_eval, ev01_sql)
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import TX07_SQL, TX11_SQL  # noqa: PLC0415
-
-    QUERIES3["pp02_multimodal_curation"] = (
-        pp02_multimodal_curation,
-        _pp02_sql(TX07_SQL).replace("{MM10_BODY}", MM10_SQL),
-    )
-
-    global EV04_SQL, EV05_SQL, EV06_SQL
-    EV04_SQL = _ev04_sql(TX07_SQL)
-    EV05_SQL = _ev05_sql(TX07_SQL, TX11_SQL)
-    EV06_SQL = _ev06_sql(TX07_SQL)
-    QUERIES3["ev04_gate_calibration"] = (ev04_gate_calibration, EV04_SQL)
-    QUERIES3["ev05_gate_kappa"] = (ev05_gate_kappa, EV05_SQL)
-    QUERIES3["ev06_quality_auc"] = (ev06_quality_auc, EV06_SQL)
-
-    global CF01_SQL
-    CF01_SQL = _cf01_sql(TX07_SQL)
-    QUERIES3["cf01_cascade_filter"] = (cf01_cascade_filter, CF01_SQL)
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import DD04_SQL as _DD04  # noqa: PLC0415
-
-    global DD08_SQL, GR02_SQL
-    DD08_SQL = _dd08_sql(_DD04)
-    QUERIES3["dd08_dedup_savings"] = (dd08_dedup_savings, DD08_SQL)
-    GR02_SQL = _DD04
-    QUERIES3["gr02_star_components"] = (gr02_star_components, GR02_SQL)
-
-
-_finalize()

@@ -15,15 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyp_etl_pipeline_spark.operators import embedding_ops, packing, textan
-from pyp_etl_pipeline_spark.tables import load_table
+from pyp_etl_pipeline_spark.tables import load_corpus, load_corpus_unique, load_table, scratch_path
 
 _TOKS_LOWER = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> w <> '')"
-
-
-def _load_corpus(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus as _lc  # noqa: PLC0415
-
-    return _lc(spark, sf, name)
 
 
 # --------------------------------------------------------------------------
@@ -31,7 +25,7 @@ def _load_corpus(spark: SparkSession, sf: str, name: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def qn01_int8_quantize(spark: SparkSession, sf: str) -> DataFrame:
-    return embedding_ops.int8_quantize_stats(_load_corpus(spark, sf, "embeddings"))
+    return embedding_ops.int8_quantize_stats(load_corpus(spark, sf, "embeddings"))
 
 
 QN01_SQL = """
@@ -69,7 +63,7 @@ FROM q
 # --------------------------------------------------------------------------
 
 def dm01_label_centroid_cosine(spark: SparkSession, sf: str) -> DataFrame:
-    return embedding_ops.label_centroid_cosine(_load_corpus(spark, sf, "embeddings"))
+    return embedding_ops.label_centroid_cosine(load_corpus(spark, sf, "embeddings"))
 
 
 DM01_SQL = """
@@ -119,7 +113,7 @@ FROM pairs
 # --------------------------------------------------------------------------
 
 def fh01_feature_hashing(spark: SparkSession, sf: str) -> DataFrame:
-    return textan.feature_hash_counts(_load_corpus(spark, sf, "documents"))
+    return textan.feature_hash_counts(load_corpus(spark, sf, "documents"))
 
 
 FH01_SQL = f"""
@@ -145,7 +139,7 @@ LIMIT 20
 # --------------------------------------------------------------------------
 
 def tk04_vocab_coverage_curve(spark: SparkSession, sf: str) -> DataFrame:
-    return textan.vocab_coverage_curve(_load_corpus(spark, sf, "documents"))
+    return textan.vocab_coverage_curve(load_corpus(spark, sf, "documents"))
 
 
 TK04_SQL = f"""
@@ -179,7 +173,7 @@ FROM per_k, totals
 # --------------------------------------------------------------------------
 
 def pb01_padding_efficiency(spark: SparkSession, sf: str) -> DataFrame:
-    return packing.padding_efficiency(_load_corpus(spark, sf, "documents"))
+    return packing.padding_efficiency(load_corpus(spark, sf, "documents"))
 
 
 _PB_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '')"
@@ -324,7 +318,7 @@ def br01_boolean_retrieval(spark: SparkSession, sf: str) -> DataFrame:
     from pyp_etl_pipeline_spark.operators.textan import token_count, whitespace_tokens  # noqa: PLC0415
 
     terms = list(_BR01_TERMS)
-    d = _load_corpus(spark, sf, "documents").filter(F.col("text").isNotNull())
+    d = load_corpus(spark, sf, "documents").filter(F.col("text").isNotNull())
     staged = d.select(
         "doc_id",
         whitespace_tokens(F.lower(F.col("text"))).alias("__toks"),
@@ -379,7 +373,7 @@ def rp01_corpus_datacard(spark: SparkSession, sf: str) -> DataFrame:
     from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators.textan import token_count  # noqa: PLC0415
 
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     base = d.select(
         "source",
         "lang",
@@ -473,7 +467,7 @@ def sp03_group_safe_split(spark: SparkSession, sf: str) -> DataFrame:
     """
     from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
 
-    d = _load_corpus(spark, sf, "documents").filter(F.col("text").isNotNull())
+    d = load_corpus(spark, sf, "documents").filter(F.col("text").isNotNull())
     fps = d.select(_dedup.fingerprint("text").alias("fp"))
     assigned = fps.select(
         "fp",
@@ -532,7 +526,7 @@ def im01_class_weight_plan(spark: SparkSession, sf: str) -> DataFrame:
     integer micro (sklearn's 'balanced' convention). One tiny rollup —
     the weights relation is k rows and broadcasts to the trainer.
     """
-    e = _load_corpus(spark, sf, "embeddings").filter(F.col("label").isNotNull())
+    e = load_corpus(spark, sf, "embeddings").filter(F.col("label").isNotNull())
     per = e.groupBy(F.col("label").cast("long").alias("label")).agg(
         F.count(F.lit(1)).cast("long").alias("n_vecs")
     )
@@ -956,7 +950,7 @@ def tx18_zipf_fit(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window  # noqa: PLC0415
 
     counts = (
-        _load_corpus(spark, sf, "documents")
+        load_corpus(spark, sf, "documents")
         .filter(F.col("text").isNotNull())
         .select(F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("tok"))
         .groupBy("tok")
@@ -1111,9 +1105,7 @@ def ann08_int8_topk(spark: SparkSession, sf: str) -> DataFrame:
     recall@5 against the exact float scan (ann01)."""
     from pyspark.sql import Window  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
-
-    e = _load_corpus_unique(spark, sf, "embeddings").filter(
+    e = load_corpus_unique(spark, sf, "embeddings").filter(
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     )
     xd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -1207,12 +1199,11 @@ def dd09_containment_pairs(spark: SparkSession, sf: str) -> DataFrame:
     why the prefix filter is the containment scale path. Survivor pairs
     verify with one exact in-memory intersection per candidate.
     """
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators.dedup import word_shingles  # noqa: PLC0415
 
     t = 0.8
     t_micro = 800_000
-    d = _load_corpus_unique(spark, sf, "documents").filter(F.col("text").isNotNull())
+    d = load_corpus_unique(spark, sf, "documents").filter(F.col("text").isNotNull())
     docs = d.select(F.col("doc_id").alias("id"), word_shingles("text", 5).alias("sh"))
     sized = docs.select("id", F.size("sh").alias("n_sh"), "sh").filter(F.col("n_sh") > 0)
     # The (shingle -> md5 -> sort) corpus pass feeds FOUR consumers —
@@ -1451,10 +1442,9 @@ def dd10_exact_substring_spans(spark: SparkSession, sf: str) -> DataFrame:
     (``operators/dedup.exact_substring_spans``; generalizes the
     reference's E2/dd06 line dedup to unaligned character spans). The
     twin replays the identical gram/extension arithmetic."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
     from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
 
-    d = _load_corpus_unique(spark, sf, "documents")
+    d = load_corpus_unique(spark, sf, "documents")
     return _dedup.exact_substring_spans(d, gram=40)
 
 
@@ -1491,9 +1481,7 @@ def tx19_token_entropy(spark: SparkSession, sf: str) -> DataFrame:
     at high length = repetitive junk the fixed-n repetition window
     (tx05) can miss; abnormally high = mojibake/noise. Two per-doc
     hash aggregates, no corpus pass (operators/textan.token_entropy)."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    out = textan.token_entropy(_load_corpus(spark, sf, "documents"))
+    out = textan.token_entropy(load_corpus(spark, sf, "documents"))
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -2145,7 +2133,6 @@ def xl01_xlsx_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
     from pyp_etl_pipeline_spark.functions.aggregates import micro_col  # noqa: PLC0415
     from pyp_etl_pipeline_spark.sources.ingest import read_excel_distributed  # noqa: PLC0415
     from pyp_etl_pipeline_spark.sources.xlsx import write_xlsx  # noqa: PLC0415
@@ -2210,7 +2197,6 @@ def xl02_xlsx_sidecar_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
     from pyp_etl_pipeline_spark.functions.aggregates import micro_col  # noqa: PLC0415
     from pyp_etl_pipeline_spark.sources.ingest import read_excel_distributed  # noqa: PLC0415
     from pyp_etl_pipeline_spark.sources.xlsx import write_xlsx  # noqa: PLC0415
@@ -2271,7 +2257,6 @@ def cv01_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import glob  # noqa: PLC0415
     import shutil  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
     from pyp_etl_pipeline_spark.functions.aggregates import micro_col  # noqa: PLC0415
     from pyp_etl_pipeline_spark.sources.ingest import read_csv_upload  # noqa: PLC0415
     from pyp_etl_pipeline_spark.sources.reports import write_report_csv  # noqa: PLC0415
@@ -2333,7 +2318,6 @@ def cv02_csv_nonutf8_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import glob  # noqa: PLC0415
     import shutil  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
     from pyp_etl_pipeline_spark.functions.aggregates import micro_col  # noqa: PLC0415
     from pyp_etl_pipeline_spark.sources.ingest import detect_encoding, read_csv_upload  # noqa: PLC0415
     from pyp_etl_pipeline_spark.sources.reports import write_report_csv  # noqa: PLC0415

@@ -1,21 +1,15 @@
 """Aggregation / summary operators (A1-A6, O1-O7 helpers).
 
-Reference semantics: processed/error counters (``app/etl.py:1103-1105``),
-review-state categorization (``app/routes.py:527-549``), push summary
-(``:2019-2028``), per-member ID rollups (``:1424-1447``), error summary by
-category (``app/error_utils.py:224-244``). All are one-pass groupBy
-aggregations with map-side partial aggregation for free.
+Reference semantics: review-state categorization
+(``app/routes.py:527-549``), per-member ID rollups (``:1424-1447``),
+bounded top-k per group, and the daily-quota observation. The A1 band
+counters and A5 error summary live in the registry queries a01/a05.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def band_summary(items: DataFrame, band_col: str = "band") -> DataFrame:
-    """A1/A2: item counts per confidence band."""
-    return items.groupBy(band_col).agg(F.count("*").alias("n_items"))
 
 
 def review_state_summary(reviews: DataFrame) -> DataFrame:
@@ -45,14 +39,6 @@ def top_k_per_group(
     order = [F.desc(order_col)] + [F.asc(c) for c in (tiebreak_cols or [])]
     w = Window.partitionBy(*group_cols).orderBy(*order)
     return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def error_summary_by_category(
-    errors: DataFrame, category_col: str = "category", ts_col: str = "ts", window_hours: int = 24
-) -> DataFrame:
-    """A5: last-N-hours error counts per category."""
-    cutoff = F.current_timestamp() - F.expr(f"INTERVAL {window_hours} HOURS")
-    return errors.filter(F.col(ts_col) >= cutoff).groupBy(category_col).agg(F.count("*").alias("n_errors"))
 
 
 def observe_quota(df: DataFrame, bytes_col: str, name: str = "quota"):

@@ -422,10 +422,6 @@ def _sq_l2(xm: Column, cm: Column) -> Column:
     )
 
 
-def _kmeans_dist(xm: Column, centroid: list[int]) -> Column:
-    return _sq_l2(xm, _lit_long_array(centroid))
-
-
 def _kmeans_argmin(xm: Column, centroids: list[list[int]]) -> Column:
     """struct(dist, cluster) of the nearest centroid; ``array_min`` on
     structs compares lexicographically, so equal distances break to the

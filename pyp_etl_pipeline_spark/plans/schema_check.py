@@ -1,7 +1,7 @@
 """Required-column validation (P4) — plan-time schema assertion.
 
-Reference semantics (``app/etl.py:533-587``, stricter set ``:1029-1047``):
-required columns missing -> invalid; "important" columns missing -> warn.
+Reference semantics (``app/etl.py:533-587``): required columns missing ->
+invalid; "important" columns missing -> warn.
 Runs before any action so a bad upload never triggers a cluster job.
 """
 
@@ -11,7 +11,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
-from pyp_etl_pipeline_spark.schema import IMPORTANT_COLUMNS, PROCESSING_REQUIRED_COLUMNS, REQUIRED_COLUMNS
+from pyp_etl_pipeline_spark.schema import IMPORTANT_COLUMNS, REQUIRED_COLUMNS
 
 
 @dataclass
@@ -30,10 +30,3 @@ def validate_required_columns(
     missing_required = [c for c in required if c not in cols]
     missing_important = [c for c in important if c not in cols]
     return SchemaCheck(not missing_required, missing_required, missing_important)
-
-
-def assert_processing_columns(df: DataFrame) -> None:
-    """The stricter processing-time gate (raises like the reference does)."""
-    check = validate_required_columns(df, required=PROCESSING_REQUIRED_COLUMNS, important=())
-    if not check.is_valid:
-        raise ValueError(f"missing required columns: {check.missing_required}")

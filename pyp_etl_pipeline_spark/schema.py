@@ -110,19 +110,9 @@ MEMBER_SCHEMA_FIELDS: dict[str, list[str]] = {
     "updatedAt": ["updatedat", "updated_at", "last_updated", "modified_date"],
 }
 
-# required at upload validation (reference app/etl.py:539-546) and the stricter
-# processing-time set (reference app/etl.py:1029-1047)
+# required at upload validation (reference app/etl.py:539-546)
 REQUIRED_COLUMNS = ("businessName", "contactEmail", "streetAddress1", "city1", "country1", "companyBio")
 IMPORTANT_COLUMNS = ("products", "ingredients", "website", "phone", "stateOrProvince1", "zipCode1")
-PROCESSING_REQUIRED_COLUMNS = (
-    "businessName",
-    "country1",
-    "contactEmail",
-    "streetAddress1",
-    "city1",
-    "products",
-    "ingredients",
-)
 
 # --- item kinds exploded from multi-value cells (reference app/etl.py:1381-1384) ---
 ITEM_KINDS = ("product", "ingredient", "certification", "allergen")

@@ -82,26 +82,33 @@ def test_spark_oracle_column_names_align(spark, sf_dir):
     assert not dtype_bad, f"driver-visible dtype drift (HUGEINT/DECIMAL twins): {dtype_bad}"
 
 
-def test_registry_complete_under_either_import_order():
+def test_registry_complete_under_either_import_order(tmp_path):
     """Every registry query must carry its oracle regardless of which
     driver_queries module is imported first (the cross-module composed
-    oracles — a03/ev01/pp02 — once raced the REGISTRY snapshot)."""
+    oracles — a03/ev01/pp02 — once raced the REGISTRY snapshot), and
+    the part-3/part-4 modules must import without pulling in the
+    registry module: the registry is assembled top-down, with no cycle."""
+    import os
     import subprocess
     import sys
 
-    code = (
-        "import sys; sys.path.insert(0, '/root/repo');"
-        "import pyp_etl_pipeline_spark.driver_queries_ext3 as m3;"
-        "from pyp_etl_pipeline_spark import driver_queries_ext as m;"
-        "qs, os_ = m.queries(), m.oracle_sql();"
-        "missing = sorted(set(qs) - set(os_));"
-        "assert not missing, missing; print(len(qs), len(os_))"
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, cwd="/tmp", check=True
-    )
-    n_q, n_o = out.stdout.split()
-    assert n_q == n_o
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for first in ("driver_queries_ext3", "driver_queries_ext4"):
+        code = (
+            f"import sys; sys.path.insert(0, {repo!r});"
+            f"import pyp_etl_pipeline_spark.{first};"
+            "assert 'pyp_etl_pipeline_spark.driver_queries_ext' not in sys.modules;"
+            "from pyp_etl_pipeline_spark import driver_queries_ext as m;"
+            "qs, os_ = m.queries(), m.oracle_sql();"
+            "missing = sorted(set(qs) - set(os_));"
+            "assert not missing, missing; print(len(qs), len(os_))"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True, cwd=tmp_path
+        )
+        assert out.returncode == 0, (first, out.stderr[-2000:])
+        n_q, n_o = out.stdout.split()
+        assert n_q == n_o
 
 
 def test_bench_query_names_resolve():

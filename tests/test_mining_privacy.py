@@ -361,17 +361,17 @@ def test_tk03_coverage_invariants(spark):
     assert r["fertility_micro"] is None or r["fertility_micro"] >= 1_000_000
 
 
-def test_ev06_auc_replay(spark):
+def test_ev06_auc_replay(spark, sf_dir):
     from pyp_etl_pipeline_spark.driver_queries_ext3 import ev06_quality_auc
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus
+    from pyp_etl_pipeline_spark.tables import load_corpus
     from pyp_etl_pipeline_spark.operators import textan as _t
 
-    r = ev06_quality_auc(spark, "/root/testdata/sf0.001").collect()[0]
+    r = ev06_quality_auc(spark, sf_dir).collect()[0]
     assert r["n"] == r["n_pos"] + r["n_neg"]
     assert 0 <= r["auc_micro"] <= 1_000_000
     # replay the Mann-Whitney with midranks in pure Python
     rows = _t.gopher_quality_flags(
-        _load_corpus(spark, "/root/testdata/sf0.001", "documents")
+        load_corpus(spark, sf_dir, "documents")
     ).select("n_words", "gopher_pass").collect()
     pairs = [(x["n_words"], bool(x["gopher_pass"])) for x in rows if x["n_words"] is not None]
     pos = [s for s, p in pairs if p]
@@ -384,17 +384,17 @@ def test_ev06_auc_replay(spark):
     assert r["auc_micro"] == expected
 
 
-def test_cf01_cascade_soundness(spark):
+def test_cf01_cascade_soundness(spark, sf_dir):
     from pyp_etl_pipeline_spark.driver_queries_ext3 import cf01_cascade_filter
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus
+    from pyp_etl_pipeline_spark.tables import load_corpus
     from pyp_etl_pipeline_spark.operators import textan as _t
 
-    r = cf01_cascade_filter(spark, "/root/testdata/sf0.001").collect()[0]
+    r = cf01_cascade_filter(spark, sf_dir).collect()[0]
     assert r["n_total"] == r["n_screened_out"] + r["n_gate_evaluated"]
     assert r["gate_work_saved_micro"] == r["n_screened_out"] * 1_000_000 // r["n_total"]
     # soundness: the screen is implied by the gate, so the cascade's pass
     # count equals running the full gate over everything
     full = _t.gopher_quality_flags(
-        _load_corpus(spark, "/root/testdata/sf0.001", "documents")
+        load_corpus(spark, sf_dir, "documents")
     ).filter("gopher_pass").count()
     assert r["n_pass"] == full

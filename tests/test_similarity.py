@@ -494,3 +494,22 @@ def test_ivfpq_probe_all_equals_pq(spark):
     # with nprobe=1 the candidate set shrinks (a real restriction)
     narrow = similarity.ivfpq_topk(emb, q, coarse, books, nprobe=1, k=3)
     assert narrow.count() <= ivf.count()
+
+
+def test_lit_double_array_non_finite_and_negative_zero_bit_exact(spark):
+    """The fast-literal path routes NaN/±Inf/-0.0 through a string cast;
+    every element must collect with the same IEEE-754 bits it went in with."""
+    import struct
+
+    vals = [float("nan"), float("inf"), float("-inf"), -0.0, 0.0, 0.1, -1e-300]
+    got = spark.range(1).select(similarity._lit_double_array(vals).alias("a")).collect()[0]["a"]
+    assert [struct.pack("<d", v) for v in got] == [struct.pack("<d", v) for v in vals]
+
+
+def test_bt_escapes_embedded_backtick(spark):
+    from pyspark.sql import functions as F
+
+    name = "odd`name"
+    assert similarity._bt(name) == "`odd``name`"
+    df = spark.range(1).select(F.lit(7).alias(name))
+    assert df.select(F.expr(similarity._bt(name)).alias("v")).collect()[0]["v"] == 7

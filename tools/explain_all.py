@@ -62,7 +62,7 @@ NOTES = """
   norm constants) against a big side — constant-size build, one pass,
   the intended shape for "divide by the global sum" steps.
 - **hy01/ev03 shuffle counts are registry-order-sensitive**: both read
-  `_load_corpus_unique`, which persists the deduped corpus once per
+  `tables.load_corpus_unique`, which persists the deduped corpus once per
   session. Whichever query plans FIRST carries the distinct+repartition
   exchanges (+4 shuffles, and pushed filters land below the cache);
   later queries read the InMemoryTableScan. The r10 driver window moved

@@ -8,10 +8,12 @@ Policy (the one VERDICT r9-r11 converged on):
    last driver gate, plus brand-new queries, which are auto-detected);
 2. then stalest-first backfill by each query's LATEST evidence round,
    ties broken by name;
-3. the window is the first 50; everything after is recorded backfill
-   order so the NEXT rotation stays deterministic.
+3. the window is the first 50; everything after is printed as the
+   backfill order for reference. The next rotation recomputes the order
+   from the ledger, so the tail is never pasted.
 
-Prints the proposed python list body; paste it into
+Prints the proposed python list body; paste ONLY the 50-slot window
+(the lines above ``# ---- end of the 50-slot driver window ----``) into
 driver_queries_ext._DRIVER_PRIORITY (the uniqueness/resolvability test
 pins the invariants). Read-only: this tool never edits source.
 

@@ -1321,7 +1321,7 @@ def _p01_sql() -> str:
     )
     fa_rows = []
     for field_ord, (field, aliases) in enumerate(MEMBER_SCHEMA_FIELDS.items()):
-        for alias in {field.lower(), *aliases}:
+        for alias in sorted({field.lower(), *aliases}):
             fa_rows.append(f"({field_ord}, {q(field)}, {q(alias)})")
     ratio = sql_ratio_max("nh", "alias")
     return f"""

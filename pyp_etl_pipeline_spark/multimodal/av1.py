@@ -37,10 +37,14 @@ pin it the way test_h264's x264 golden is pinned.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 
+from pyp_etl_pipeline_spark.multimodal.codecs import (
+    mp4_encode,
+    mp4_video_extract,
+    payload_features,
+    visual_sample_entry,
+)
 from pyp_etl_pipeline_spark.multimodal.h264 import _BitReader, _BitWriter
 
 OBU_SEQUENCE_HEADER = 1
@@ -330,61 +334,19 @@ def av1_sequence_header_parse(payload: bytes) -> dict:
     }
 
 
-_AV1_NULL = {
-    "seq_profile": None, "seq_level_idx": None, "seq_tier": None, "width": None,
-    "height": None, "bit_depth": None, "mono_chrome": None,
-    "chroma_sub_x": None, "chroma_sub_y": None, "fps": None,
-}
-
-
 def av1_seq_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary) -> parsed AV1
-    sequence-header metadata. Arrow-batched ``mapInPandas``, map-only —
-    same 100 TB shape and ``permissive`` quarantine contract as the
-    H.264/HEVC feature operators."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.av1 import (  # noqa: PLC0415
-            _AV1_NULL,
-            av1_sequence_header_parse,
-        )
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(av1_sequence_header_parse(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_AV1_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(av1_sequence_header_parse(bytes(p)))
-            out = {"media_id": pdf["media_id"]}
-            for k in _AV1_NULL:
-                out[k] = [r[k] for r in rows]
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    sequence-header metadata; map-only, with the ``permissive``
+    quarantine contract of ``codecs.payload_features``."""
+    return payload_features(
+        df,
         "media_id long, seq_profile int, seq_level_idx int, seq_tier int, "
         "width int, height int, bit_depth int, mono_chrome int, "
-        "chroma_sub_x int, chroma_sub_y int, fps double"
+        "chroma_sub_x int, chroma_sub_y int, fps double",
+        __name__,
+        "av1_sequence_header_parse",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)
 
 
 # --------------------------------------------------- av1C-in-MP4 (mm20)
@@ -448,190 +410,36 @@ def mp4_av1_encode(
     display_width: int | None = None,
     display_height: int | None = None,
 ) -> bytes:
-    """ISO-BMFF with an av01 sample entry carrying a real av1C record —
-    the AV1 mirror of ``h264.mp4_avc_encode``/``h265.mp4_hevc_encode``."""
-    import struct  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        _box,
-        _iter_boxes,
-        mp4_encode,
-    )
-
-    dur = duration_ms * timescale // 1000
-    base = mp4_encode(
+    """ISO-BMFF with an av01 sample entry carrying a real av1C record,
+    written by the shared ``codecs.mp4_encode`` video path."""
+    seq = av1_sequence_header_encode(width, height, seq_profile, seq_level_idx, fps=fps)
+    return mp4_encode(
         display_width if display_width is not None else width,
         display_height if display_height is not None else height,
         duration_ms,
         timescale,
+        sample_entry=visual_sample_entry(b"av01", width, height, b"av1C", av1c_record(seq)),
     )
-    seq = av1_sequence_header_encode(width, height, seq_profile, seq_level_idx, fps=fps)
-    av1c = _box(b"av1C", av1c_record(seq))
-    av01 = _box(
-        b"av01",
-        b"\x00" * 6
-        + struct.pack(">H", 1)  # data_reference_index
-        + b"\x00" * 16
-        + struct.pack(">HH", width, height)
-        + struct.pack(">II", 0x00480000, 0x00480000)
-        + b"\x00" * 4
-        + struct.pack(">H", 1)
-        + b"\x00" * 32
-        + struct.pack(">Hh", 0x0018, -1)
-        + av1c,
-    )
-    stsd = _box(b"stsd", struct.pack(">II", 0, 1) + av01)
-    stts = _box(b"stts", struct.pack(">II", 0, 0))
-    stsc = _box(b"stsc", struct.pack(">II", 0, 0))
-    stsz = _box(b"stsz", struct.pack(">III", 0, 0, 0))
-    stco = _box(b"stco", struct.pack(">II", 0, 0))
-    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco)
-    vmhd = _box(b"vmhd", struct.pack(">IHHHH", 1, 0, 0, 0, 0))
-    dref = _box(b"dref", struct.pack(">II", 0, 1) + _box(b"url ", struct.pack(">I", 1)))
-    minf = _box(b"minf", vmhd + _box(b"dinf", dref) + stbl)
-    mdhd = _box(
-        b"mdhd",
-        struct.pack(">I", 0)
-        + struct.pack(">II", 0, 0)
-        + struct.pack(">II", timescale, dur)
-        + struct.pack(">HH", 0x55C4, 0),
-    )
-    hdlr = _box(
-        b"hdlr",
-        struct.pack(">I", 0) + struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"VideoHandler\x00",
-    )
-    mdia = _box(b"mdia", mdhd + hdlr + minf)
-    ftyp = moov_span = None
-    for tag, body, boxend in _iter_boxes(base, 0, len(base)):
-        if tag == b"ftyp":
-            ftyp = base[body - 8 : boxend]
-        elif tag == b"moov":
-            moov_span = (body, boxend)
-    mvhd_b = tkhd_b = None
-    for tag, body, boxend in _iter_boxes(base, *moov_span):
-        if tag == b"mvhd":
-            mvhd_b = base[body - 8 : boxend]
-        elif tag == b"trak":
-            for t2, b2, e2 in _iter_boxes(base, body, boxend):
-                if t2 == b"tkhd":
-                    tkhd_b = base[b2 - 8 : e2]
-    trak = _box(b"trak", tkhd_b + mdia)
-    return ftyp + _box(b"moov", mvhd_b + trak) + _box(b"mdat", b"")
 
 
 def mp4_av1c_extract(payload: bytes) -> dict:
     """Walk a real MP4's box tree to the av1C record, parse its embedded
     sequence header, and return stream metadata alongside the
-    container's tkhd display dims for cross-validation."""
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        _iter_boxes,
-        mp4_decode,
-    )
-
-    meta = mp4_decode(payload)
-    rec = None
-    moov = None
-    for tag, body, boxend in _iter_boxes(payload, 0, len(payload)):
-        if tag == b"moov":
-            moov = (body, boxend)
-    if moov is None:
-        raise ValueError("no moov box")
-
-    def walk(span):
-        nonlocal rec
-        for tag, body, boxend in _iter_boxes(payload, *span):
-            if rec is not None:
-                return
-            if tag == b"av1C":
-                rec = payload[body:boxend]
-            elif tag in (b"trak", b"mdia", b"minf", b"stbl"):
-                walk((body, boxend))
-            elif tag == b"stsd":
-                walk((body + 8, boxend))
-            elif tag == b"av01":
-                walk((body + 78, boxend))
-
-    walk(moov)
-    if rec is None:
-        raise ValueError("no av1C record in any sample entry")
-    sps = av1c_parse(rec)
-    return {
-        "container_width": meta["width"],
-        "container_height": meta["height"],
-        "duration_ms": meta["duration_ms"],
-        **sps,
-    }
-
-
-_AV1C_NULL = {
-    "container_width": None, "container_height": None, "duration_ms": None,
-    "seq_profile": None, "seq_level_idx": None, "seq_tier": None,
-    "width": None, "height": None, "bit_depth": None, "fps": None,
-    "record_matches": None,
-}
+    container's tkhd display dims and ``dims_match``
+    (``codecs.mp4_video_extract``)."""
+    return mp4_video_extract(payload, b"av1C", (b"av01",), lambda rec, _mdat: av1c_parse(rec))
 
 
 def av1_container_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary MP4) ->
     container + AV1 stream metadata with dims_match and record_matches
-    QA flags — the AV1 mirror of the avc/hevc container operators."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.av1 import _AV1C_NULL, mp4_av1c_extract  # noqa: PLC0415
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(mp4_av1c_extract(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_AV1C_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(mp4_av1c_extract(bytes(p)))
-            out = {
-                "media_id": pdf["media_id"],
-                "container_width": [r["container_width"] for r in rows],
-                "container_height": [r["container_height"] for r in rows],
-                "duration_ms": [r["duration_ms"] for r in rows],
-                "seq_profile": [r["seq_profile"] for r in rows],
-                "seq_level_idx": [r["seq_level_idx"] for r in rows],
-                "seq_tier": [r["seq_tier"] for r in rows],
-                "width": [r["width"] for r in rows],
-                "height": [r["height"] for r in rows],
-                "bit_depth": [r["bit_depth"] for r in rows],
-                "fps": [r["fps"] for r in rows],
-                "record_matches": [r["record_matches"] for r in rows],
-                "dims_match": [
-                    None
-                    if r["width"] is None
-                    else (
-                        r["container_width"] == r["width"]
-                        and r["container_height"] == r["height"]
-                    )
-                    for r in rows
-                ],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    QA flags; map-only, same ``permissive`` quarantine mode."""
+    return payload_features(
+        df,
         "media_id long, container_width int, container_height int, duration_ms double, "
         "seq_profile int, seq_level_idx int, seq_tier int, width int, height int, "
-        "bit_depth int, fps double, record_matches boolean, dims_match boolean"
+        "bit_depth int, fps double, record_matches boolean, dims_match boolean",
+        __name__,
+        "mp4_av1c_extract",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)

@@ -551,11 +551,41 @@ _UNITY_MATRIX = struct.pack(
 )
 
 
-def mp4_encode(width: int, height: int, duration_ms: int, timescale: int = 1000) -> bytes:
+def visual_sample_entry(fourcc: bytes, width: int, height: int, config_tag: bytes, record: bytes) -> bytes:
+    """VisualSampleEntry (ISO/IEC 14496-12 §12.1.3) holding one codec
+    configuration box (``config_tag`` + ``record``): the stsd entry
+    every video tier (avc1/hvc1/av01/vp09) hands to ``mp4_encode``."""
+    return _box(
+        fourcc,
+        b"\x00" * 6
+        + struct.pack(">H", 1)  # data_reference_index
+        + b"\x00" * 16  # pre_defined/reserved
+        + struct.pack(">HH", width, height)
+        + struct.pack(">II", 0x00480000, 0x00480000)  # 72 dpi
+        + b"\x00" * 4
+        + struct.pack(">H", 1)  # frame_count
+        + b"\x00" * 32  # compressorname
+        + struct.pack(">Hh", 0x0018, -1)  # depth, pre_defined
+        + _box(config_tag, record),
+    )
+
+
+def mp4_encode(
+    width: int,
+    height: int,
+    duration_ms: int,
+    timescale: int = 1000,
+    sample_entry: bytes | None = None,
+    mdat: bytes = b"",
+) -> bytes:
     """Minimal valid ISO-BMFF (MP4) container: ftyp + moov(mvhd +
-    trak(tkhd + mdia(mdhd + hdlr))) + empty mdat. Structure per
-    ISO/IEC 14496-12; no codec payload — the tests and the mm04 oracle
-    only need the metadata boxes to carry real, decodable values."""
+    trak(tkhd + mdia(mdhd + hdlr))) + mdat. Structure per ISO/IEC
+    14496-12; ``width``/``height`` are the tkhd display dims. Without a
+    ``sample_entry`` there is no codec payload — the tests and the mm04
+    oracle only need the metadata boxes to carry real, decodable values.
+    With one (see ``visual_sample_entry``) mdia also gets the complete
+    video sample-table path, minf(vmhd + dinf/dref + stbl(stsd(entry) +
+    empty stts/stsc/stsz/stco)), and ``mdat`` is the media data body."""
     dur = duration_ms * timescale // 1000
     ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2mp41")
     mvhd = _box(
@@ -594,11 +624,22 @@ def mp4_encode(width: int, height: int, duration_ms: int, timescale: int = 1000)
         b"hdlr",
         struct.pack(">I", 0) + struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"VideoHandler\x00",
     )
-    mdia = _box(b"mdia", mdhd + hdlr)
-    trak = _box(b"trak", tkhd + mdia)
+    mdia = mdhd + hdlr
+    if sample_entry is not None:
+        stbl = _box(
+            b"stbl",
+            _box(b"stsd", struct.pack(">II", 0, 1) + sample_entry)
+            + _box(b"stts", struct.pack(">II", 0, 0))
+            + _box(b"stsc", struct.pack(">II", 0, 0))
+            + _box(b"stsz", struct.pack(">III", 0, 0, 0))
+            + _box(b"stco", struct.pack(">II", 0, 0)),
+        )
+        vmhd = _box(b"vmhd", struct.pack(">IHHHH", 1, 0, 0, 0, 0))
+        dref = _box(b"dref", struct.pack(">II", 0, 1) + _box(b"url ", struct.pack(">I", 1)))
+        mdia += _box(b"minf", vmhd + _box(b"dinf", dref) + stbl)
+    trak = _box(b"trak", tkhd + _box(b"mdia", mdia))
     moov = _box(b"moov", mvhd + trak)
-    mdat = _box(b"mdat", b"")
-    return ftyp + moov + mdat
+    return ftyp + moov + _box(b"mdat", mdat)
 
 
 def _iter_boxes(buf: bytes, start: int, end: int):
@@ -670,6 +711,106 @@ def mp4_decode(payload: bytes) -> dict:
                     out["width"] = w16 >> 16
                     out["height"] = h16 >> 16
     return out
+
+
+def mp4_video_extract(payload: bytes, config_tag: bytes, entry_tags: tuple[bytes, ...], parse) -> dict:
+    """Walk a real MP4's box tree moov/trak/mdia/minf/stbl/stsd/<entry>
+    to the first ``config_tag`` record inside a sample entry whose
+    fourcc is in ``entry_tags``, and return the container's tkhd display
+    dims and duration alongside ``parse(record, mdat)`` — the codec's
+    own record parse, given the first mdat body (``None`` when the file
+    has none) for codecs whose stream metadata rides in the frames. The
+    ``dims_match`` QA flag compares container display dims with the
+    stream's coded dims."""
+    meta = mp4_decode(payload)  # brand/duration/tkhd dims; raises without moov
+    moov = mdat = None
+    for tag, body, boxend in _iter_boxes(payload, 0, len(payload)):
+        if tag == b"moov":
+            moov = (body, boxend)
+        elif tag == b"mdat" and mdat is None:
+            mdat = payload[body:boxend]
+    rec = None
+
+    def walk(start: int, end: int) -> None:
+        nonlocal rec
+        for tag, body, boxend in _iter_boxes(payload, start, end):
+            if rec is not None:
+                return
+            if tag == config_tag:
+                rec = payload[body:boxend]
+            elif tag in (b"trak", b"mdia", b"minf", b"stbl"):
+                walk(body, boxend)
+            elif tag == b"stsd":
+                # FullBox header (4) + entry_count (4), then sample entries
+                walk(body + 8, boxend)
+            elif tag in entry_tags:
+                # VisualSampleEntry fixed fields are 78 bytes; boxes follow
+                walk(body + 78, boxend)
+
+    walk(*moov)
+    if rec is None:
+        raise ValueError(f"no {config_tag.decode()} record in any sample entry")
+    stream = parse(rec, mdat)
+    return {
+        "container_width": meta["width"],
+        "container_height": meta["height"],
+        "duration_ms": meta["duration_ms"],
+        **stream,
+        "dims_match": meta["width"] == stream["width"] and meta["height"] == stream["height"],
+    }
+
+
+def payload_features(df, schema: str, module: str, parser: str, permissive: bool = False):
+    """DataFrame operator: (media_id long, payload binary) -> one row per
+    payload with the columns of ``schema`` (a flat "name type, ..." DDL
+    string that starts with ``media_id long``), filled from the dict
+    ``module.parser(payload)`` returns. Arrow-batched ``mapInPandas``,
+    map-only — partition-preserving, no shuffle; at 100 TB this is a
+    map-only stage over the blob column.
+
+    The parser is named, not passed: the worker bootstraps ``sys.path``
+    with the repo root and only then imports it (a pickled function
+    object would be unpickled before the bootstrap could run).
+
+    ``permissive=True`` is the corpus-scale mode: a corrupt or truncated
+    payload yields NULL in every field plus an ``error`` column holding
+    ``"<ExcType>: <msg>"`` instead of failing the whole stage — one bad
+    blob in a billion must not kill the job. The schema gains
+    ``, error string``."""
+    import pandas as pd  # noqa: PLC0415
+
+    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT  # noqa: PLC0415
+
+    repo_root = REPO_ROOT
+    fields = [col.split()[0] for col in schema.split(",")][1:]
+
+    def op(batches):
+        import importlib  # noqa: PLC0415
+        import sys  # noqa: PLC0415
+
+        if repo_root not in sys.path:
+            sys.path.insert(0, repo_root)
+        parse = getattr(importlib.import_module(module), parser)
+        for pdf in batches:
+            rows, errs = [], []
+            for p in pdf["payload"]:
+                if permissive:
+                    try:
+                        rows.append(parse(bytes(p)))
+                        errs.append(None)
+                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
+                        rows.append(None)
+                        errs.append(f"{type(exc).__name__}: {exc}")
+                else:
+                    rows.append(parse(bytes(p)))
+            out = {"media_id": pdf["media_id"]}
+            for k in fields:
+                out[k] = [None if r is None else r[k] for r in rows]
+            if permissive:
+                out["error"] = errs
+            yield pd.DataFrame(out)
+
+    return df.mapInPandas(op, schema + (", error string" if permissive else ""))
 
 
 # ------------------------------------------------------- AVI (MJPEG video)

@@ -24,9 +24,14 @@ bitstreams rather than a private fixture format.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
+
+from pyp_etl_pipeline_spark.multimodal.codecs import (
+    mp4_encode,
+    mp4_video_extract,
+    payload_features,
+    visual_sample_entry,
+)
 
 
 class _BitWriter:
@@ -159,7 +164,7 @@ class _BitReader:
     def u(self, n: int) -> int:
         # Bounds-checked: a truncated/corrupt NAL raises the module's
         # documented ValueError contract, not an opaque IndexError that
-        # fails a whole mapInPandas stage (ADVICE r11).
+        # fails a whole Spark stage (ADVICE r11).
         if self._pos + n > self._nbits:
             raise ValueError("truncated NAL")
         v = 0
@@ -284,61 +289,19 @@ def sps_parse(payload: bytes) -> dict:
     }
 
 
-_SPS_NULL = {"profile_idc": None, "level_idc": None, "width": None, "height": None, "fps": None}
-
-
 def sps_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary) -> parsed SPS
-    metadata. Arrow-batched ``mapInPandas`` like every codec here —
-    partition-preserving, no shuffle; at 100 TB this is a map-only stage
-    over the blob column (and the payload slice an ingest tier feeds it
-    is the first few hundred bytes of each stream, not the full video).
-
-    ``permissive=True`` is the corpus-scale mode (ADVICE r11): a corrupt
-    or truncated payload yields NULL fields plus an ``error`` column
-    instead of failing the whole stage — one bad blob in a billion must
-    not kill the job."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.h264 import _SPS_NULL, sps_parse  # noqa: PLC0415
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(sps_parse(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_SPS_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(sps_parse(bytes(p)))
-            out = {
-                "media_id": pdf["media_id"],
-                "profile_idc": [r["profile_idc"] for r in rows],
-                "level_idc": [r["level_idc"] for r in rows],
-                "width": [r["width"] for r in rows],
-                "height": [r["height"] for r in rows],
-                "fps": [r["fps"] for r in rows],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = "media_id long, profile_idc int, level_idc int, width int, height int, fps double"
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)
+    metadata; map-only over the blob column (the payload slice an ingest
+    tier feeds it is the first few hundred bytes of each stream, not the
+    full video). ``permissive=True`` quarantines corrupt rows (NULL
+    fields + ``error``) — see ``codecs.payload_features``."""
+    return payload_features(
+        df,
+        "media_id long, profile_idc int, level_idc int, width int, height int, fps double",
+        __name__,
+        "sps_parse",
+        permissive,
+    )
 
 
 # ---------------------------------------------------- avcC-in-MP4 (mm16)
@@ -431,197 +394,41 @@ def mp4_avc_encode(
     display_width: int | None = None,
     display_height: int | None = None,
 ) -> bytes:
-    """Valid ISO-BMFF with a complete video sample-table path: ftyp +
-    moov(mvhd + trak(tkhd + mdia(mdhd + hdlr + minf(vmhd + dinf/dref +
-    stbl(stsd(avc1(avcC)) + stts/stsc/stsz/stco))))) + empty mdat. The
-    avcC holds a real SPS (our Annex-B encoder's NAL, start code
-    stripped) + minimal PPS; tkhd carries the DISPLAY dims, which real
-    pipelines sometimes find disagreeing with the stream's coded dims —
-    ``display_width/height`` let tests synthesize that corruption."""
-    import struct  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        _UNITY_MATRIX,
-        _box,
-        mp4_encode,
-    )
-
-    # reuse the audited mp4 skeleton for ftyp/mvhd/tkhd/mdhd/hdlr, then
-    # graft minf+stbl into its mdia (rebuild — boxes are immutable bytes)
-    dur = duration_ms * timescale // 1000
-    base = mp4_encode(
+    """Valid ISO-BMFF with a complete video sample-table path
+    (``codecs.mp4_encode`` with an avc1(avcC) sample entry) + empty
+    mdat. The avcC holds a real SPS (our Annex-B encoder's NAL, start
+    code stripped) + minimal PPS; tkhd carries the DISPLAY dims, which
+    real pipelines sometimes find disagreeing with the stream's coded
+    dims — ``display_width/height`` let tests synthesize that
+    corruption."""
+    sps_nal = sps_encode(width, height, profile_idc, level_idc, fps)[4:]
+    entry = visual_sample_entry(b"avc1", width, height, b"avcC", avcc_record(sps_nal, pps_encode()))
+    return mp4_encode(
         display_width if display_width is not None else width,
         display_height if display_height is not None else height,
         duration_ms,
         timescale,
+        sample_entry=entry,
     )
-    sps_nal = sps_encode(width, height, profile_idc, level_idc, fps)[4:]
-    avcc = _box(b"avcC", avcc_record(sps_nal, pps_encode()))
-    avc1 = _box(
-        b"avc1",
-        b"\x00" * 6
-        + struct.pack(">H", 1)  # data_reference_index
-        + b"\x00" * 16  # pre_defined/reserved
-        + struct.pack(">HH", width, height)
-        + struct.pack(">II", 0x00480000, 0x00480000)  # 72 dpi
-        + b"\x00" * 4
-        + struct.pack(">H", 1)  # frame_count
-        + b"\x00" * 32  # compressorname
-        + struct.pack(">Hh", 0x0018, -1)  # depth, pre_defined
-        + avcc,
-    )
-    stsd = _box(b"stsd", struct.pack(">II", 0, 1) + avc1)
-    stts = _box(b"stts", struct.pack(">II", 0, 0))
-    stsc = _box(b"stsc", struct.pack(">II", 0, 0))
-    stsz = _box(b"stsz", struct.pack(">III", 0, 0, 0))
-    stco = _box(b"stco", struct.pack(">II", 0, 0))
-    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco)
-    vmhd = _box(b"vmhd", struct.pack(">IHHHH", 1, 0, 0, 0, 0))
-    dref = _box(b"dref", struct.pack(">II", 0, 1) + _box(b"url ", struct.pack(">I", 1)))
-    minf = _box(b"minf", vmhd + _box(b"dinf", dref) + stbl)
-    mdhd = _box(
-        b"mdhd",
-        struct.pack(">I", 0)
-        + struct.pack(">II", 0, 0)
-        + struct.pack(">II", timescale, dur)
-        + struct.pack(">HH", 0x55C4, 0),
-    )
-    hdlr = _box(
-        b"hdlr",
-        struct.pack(">I", 0) + struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"VideoHandler\x00",
-    )
-    mdia = _box(b"mdia", mdhd + hdlr + minf)
-    # splice: keep base's ftyp+mvhd+tkhd, replace its mdia, keep mdat
-    from pyp_etl_pipeline_spark.multimodal.codecs import _iter_boxes  # noqa: PLC0415
-
-    ftyp = moov_span = None
-    for tag, body, boxend in _iter_boxes(base, 0, len(base)):
-        if tag == b"ftyp":
-            ftyp = base[body - 8 : boxend]
-        elif tag == b"moov":
-            moov_span = (body, boxend)
-    mvhd_b = tkhd_b = None
-    for tag, body, boxend in _iter_boxes(base, *moov_span):
-        if tag == b"mvhd":
-            mvhd_b = base[body - 8 : boxend]
-        elif tag == b"trak":
-            for t2, b2, e2 in _iter_boxes(base, body, boxend):
-                if t2 == b"tkhd":
-                    tkhd_b = base[b2 - 8 : e2]
-    trak = _box(b"trak", tkhd_b + mdia)
-    return ftyp + _box(b"moov", mvhd_b + trak) + _box(b"mdat", b"")
 
 
 def mp4_avcc_extract(payload: bytes) -> dict:
     """Walk a real MP4's box tree to the avcC record, bit-parse its SPS,
     and return stream metadata alongside the container's tkhd display
-    dims (``container_width/height``) for cross-validation."""
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        _iter_boxes,
-        mp4_decode,
-    )
-
-    meta = mp4_decode(payload)  # brand/duration/tkhd dims from real bytes
-    rec = None
-    moov = None
-    for tag, body, boxend in _iter_boxes(payload, 0, len(payload)):
-        if tag == b"moov":
-            moov = (body, boxend)
-    if moov is None:
-        raise ValueError("no moov box")
-
-    def walk(span, path):
-        nonlocal rec
-        for tag, body, boxend in _iter_boxes(payload, *span):
-            if rec is not None:
-                return
-            if tag == b"avcC":
-                rec = payload[body:boxend]
-            elif tag in (b"trak", b"mdia", b"minf", b"stbl"):
-                walk((body, boxend), path + [tag])
-            elif tag == b"stsd":
-                # FullBox header (4) + entry_count (4), then sample entries
-                walk((body + 8, boxend), path + [tag])
-            elif tag == b"avc1":
-                # VisualSampleEntry fixed fields are 78 bytes; boxes follow
-                walk((body + 78, boxend), path + [tag])
-
-    walk(moov, [])
-    if rec is None:
-        raise ValueError("no avcC record in any sample entry")
-    sps = avcc_parse(rec)
-    return {
-        "container_width": meta["width"],
-        "container_height": meta["height"],
-        "duration_ms": meta["duration_ms"],
-        **sps,
-    }
-
-
-_AVC_NULL = {
-    "container_width": None, "container_height": None, "duration_ms": None,
-    "profile_idc": None, "level_idc": None, "width": None, "height": None, "fps": None,
-}
+    dims (``container_width/height``) and ``dims_match`` for
+    cross-validation (``codecs.mp4_video_extract``)."""
+    return mp4_video_extract(payload, b"avcC", (b"avc1",), lambda rec, _mdat: avcc_parse(rec))
 
 
 def avc_container_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary MP4) ->
-    container + stream metadata with a dims_match QA flag. Arrow-batched
-    ``mapInPandas``, map-only — same 100 TB shape as ``sps_features``,
-    including its ``permissive`` corpus-scale quarantine mode."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.h264 import _AVC_NULL, mp4_avcc_extract  # noqa: PLC0415
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(mp4_avcc_extract(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_AVC_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(mp4_avcc_extract(bytes(p)))
-            out = {
-                "media_id": pdf["media_id"],
-                "container_width": [r["container_width"] for r in rows],
-                "container_height": [r["container_height"] for r in rows],
-                "duration_ms": [r["duration_ms"] for r in rows],
-                "profile_idc": [r["profile_idc"] for r in rows],
-                "level_idc": [r["level_idc"] for r in rows],
-                "width": [r["width"] for r in rows],
-                "height": [r["height"] for r in rows],
-                "fps": [r["fps"] for r in rows],
-                "dims_match": [
-                    None
-                    if r["width"] is None
-                    else (
-                        r["container_width"] == r["width"]
-                        and r["container_height"] == r["height"]
-                    )
-                    for r in rows
-                ],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    container + stream metadata with a dims_match QA flag; map-only,
+    same ``permissive`` quarantine mode as ``sps_features``."""
+    return payload_features(
+        df,
         "media_id long, container_width int, container_height int, duration_ms double, "
-        "profile_idc int, level_idc int, width int, height int, fps double, dims_match boolean"
+        "profile_idc int, level_idc int, width int, height int, fps double, dims_match boolean",
+        __name__,
+        "mp4_avcc_extract",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)

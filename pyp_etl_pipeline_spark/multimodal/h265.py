@@ -32,10 +32,14 @@ SPS = type 33.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 
+from pyp_etl_pipeline_spark.multimodal.codecs import (
+    mp4_encode,
+    mp4_video_extract,
+    payload_features,
+    visual_sample_entry,
+)
 from pyp_etl_pipeline_spark.multimodal.h264 import (
     _BitReader,
     _BitWriter,
@@ -313,64 +317,18 @@ def hevc_sps_parse(payload: bytes) -> dict:
     }
 
 
-_HEVC_NULL = {
-    "profile_idc": None, "tier": None, "level_idc": None, "width": None,
-    "height": None, "bit_depth": None, "chroma_format_idc": None, "fps": None,
-}
-
-
 def hevc_sps_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary) -> parsed HEVC
-    SPS metadata. Arrow-batched ``mapInPandas``, map-only — the same
-    100 TB shape and ``permissive`` corpus-scale quarantine contract as
-    ``h264.sps_features``."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.h265 import _HEVC_NULL, hevc_sps_parse  # noqa: PLC0415
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(hevc_sps_parse(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_HEVC_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(hevc_sps_parse(bytes(p)))
-            out = {
-                "media_id": pdf["media_id"],
-                "profile_idc": [r["profile_idc"] for r in rows],
-                "tier": [r["tier"] for r in rows],
-                "level_idc": [r["level_idc"] for r in rows],
-                "width": [r["width"] for r in rows],
-                "height": [r["height"] for r in rows],
-                "bit_depth": [r["bit_depth"] for r in rows],
-                "chroma_format_idc": [r["chroma_format_idc"] for r in rows],
-                "fps": [r["fps"] for r in rows],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    SPS metadata; map-only, with the ``permissive`` corpus-scale
+    quarantine contract of ``codecs.payload_features``."""
+    return payload_features(
+        df,
         "media_id long, profile_idc int, tier int, level_idc int, width int, "
-        "height int, bit_depth int, chroma_format_idc int, fps double"
+        "height int, bit_depth int, chroma_format_idc int, fps double",
+        __name__,
+        "hevc_sps_parse",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)
 
 
 # --------------------------------------------------- hvcC-in-MP4 (mm18)
@@ -458,192 +416,39 @@ def mp4_hevc_encode(
     display_width: int | None = None,
     display_height: int | None = None,
 ) -> bytes:
-    """ISO-BMFF with an hvc1 sample entry carrying a real hvcC record —
-    the HEVC mirror of ``h264.mp4_avc_encode`` (same splice of the
-    audited mp4 skeleton; ``display_width/height`` synthesize the
-    container-vs-stream dims corruption tests exercise)."""
-    import struct  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        _box,
-        _iter_boxes,
-        mp4_encode,
-    )
-
-    dur = duration_ms * timescale // 1000
-    base = mp4_encode(
+    """ISO-BMFF with an hvc1 sample entry carrying a real hvcC record,
+    written by the shared ``codecs.mp4_encode`` video path
+    (``display_width/height`` synthesize the container-vs-stream dims
+    corruption tests exercise)."""
+    sps_nal = hevc_sps_encode(width, height, profile_idc, level_idc, fps)[4:]
+    record = hvcc_record(sps_nal, profile_idc, level_idc)
+    return mp4_encode(
         display_width if display_width is not None else width,
         display_height if display_height is not None else height,
         duration_ms,
         timescale,
+        sample_entry=visual_sample_entry(b"hvc1", width, height, b"hvcC", record),
     )
-    sps_nal = hevc_sps_encode(width, height, profile_idc, level_idc, fps)[4:]
-    hvcc = _box(b"hvcC", hvcc_record(sps_nal, profile_idc, level_idc))
-    hvc1 = _box(
-        b"hvc1",
-        b"\x00" * 6
-        + struct.pack(">H", 1)  # data_reference_index
-        + b"\x00" * 16  # pre_defined/reserved
-        + struct.pack(">HH", width, height)
-        + struct.pack(">II", 0x00480000, 0x00480000)  # 72 dpi
-        + b"\x00" * 4
-        + struct.pack(">H", 1)  # frame_count
-        + b"\x00" * 32  # compressorname
-        + struct.pack(">Hh", 0x0018, -1)  # depth, pre_defined
-        + hvcc,
-    )
-    stsd = _box(b"stsd", struct.pack(">II", 0, 1) + hvc1)
-    stts = _box(b"stts", struct.pack(">II", 0, 0))
-    stsc = _box(b"stsc", struct.pack(">II", 0, 0))
-    stsz = _box(b"stsz", struct.pack(">III", 0, 0, 0))
-    stco = _box(b"stco", struct.pack(">II", 0, 0))
-    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco)
-    vmhd = _box(b"vmhd", struct.pack(">IHHHH", 1, 0, 0, 0, 0))
-    dref = _box(b"dref", struct.pack(">II", 0, 1) + _box(b"url ", struct.pack(">I", 1)))
-    minf = _box(b"minf", vmhd + _box(b"dinf", dref) + stbl)
-    mdhd = _box(
-        b"mdhd",
-        struct.pack(">I", 0)
-        + struct.pack(">II", 0, 0)
-        + struct.pack(">II", timescale, dur)
-        + struct.pack(">HH", 0x55C4, 0),
-    )
-    hdlr = _box(
-        b"hdlr",
-        struct.pack(">I", 0) + struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"VideoHandler\x00",
-    )
-    mdia = _box(b"mdia", mdhd + hdlr + minf)
-    ftyp = moov_span = None
-    for tag, body, boxend in _iter_boxes(base, 0, len(base)):
-        if tag == b"ftyp":
-            ftyp = base[body - 8 : boxend]
-        elif tag == b"moov":
-            moov_span = (body, boxend)
-    mvhd_b = tkhd_b = None
-    for tag, body, boxend in _iter_boxes(base, *moov_span):
-        if tag == b"mvhd":
-            mvhd_b = base[body - 8 : boxend]
-        elif tag == b"trak":
-            for t2, b2, e2 in _iter_boxes(base, body, boxend):
-                if t2 == b"tkhd":
-                    tkhd_b = base[b2 - 8 : e2]
-    trak = _box(b"trak", tkhd_b + mdia)
-    return ftyp + _box(b"moov", mvhd_b + trak) + _box(b"mdat", b"")
 
 
 def mp4_hvcc_extract(payload: bytes) -> dict:
-    """Walk a real MP4's box tree to the hvcC record, bit-parse its SPS,
-    and return stream metadata alongside the container's tkhd display
-    dims for cross-validation."""
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        _iter_boxes,
-        mp4_decode,
-    )
-
-    meta = mp4_decode(payload)
-    rec = None
-    moov = None
-    for tag, body, boxend in _iter_boxes(payload, 0, len(payload)):
-        if tag == b"moov":
-            moov = (body, boxend)
-    if moov is None:
-        raise ValueError("no moov box")
-
-    def walk(span):
-        nonlocal rec
-        for tag, body, boxend in _iter_boxes(payload, *span):
-            if rec is not None:
-                return
-            if tag == b"hvcC":
-                rec = payload[body:boxend]
-            elif tag in (b"trak", b"mdia", b"minf", b"stbl"):
-                walk((body, boxend))
-            elif tag == b"stsd":
-                walk((body + 8, boxend))
-            elif tag in (b"hvc1", b"hev1"):
-                # VisualSampleEntry fixed fields are 78 bytes
-                walk((body + 78, boxend))
-
-    walk(moov)
-    if rec is None:
-        raise ValueError("no hvcC record in any sample entry")
-    sps = hvcc_parse(rec)
-    return {
-        "container_width": meta["width"],
-        "container_height": meta["height"],
-        "duration_ms": meta["duration_ms"],
-        **sps,
-    }
-
-
-_HVC_NULL = {
-    "container_width": None, "container_height": None, "duration_ms": None,
-    "profile_idc": None, "tier": None, "level_idc": None, "width": None,
-    "height": None, "bit_depth": None, "chroma_format_idc": None, "fps": None,
-}
+    """Walk a real MP4's box tree to the hvcC record (hvc1 or hev1
+    entry), bit-parse its SPS, and return stream metadata alongside the
+    container's tkhd display dims and ``dims_match``
+    (``codecs.mp4_video_extract``)."""
+    return mp4_video_extract(payload, b"hvcC", (b"hvc1", b"hev1"), lambda rec, _mdat: hvcc_parse(rec))
 
 
 def hevc_container_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary MP4) ->
-    container + HEVC stream metadata with a dims_match QA flag —
-    the HEVC mirror of ``h264.avc_container_features``, including the
-    ``permissive`` corpus-scale quarantine mode."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.h265 import _HVC_NULL, mp4_hvcc_extract  # noqa: PLC0415
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(mp4_hvcc_extract(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_HVC_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(mp4_hvcc_extract(bytes(p)))
-            out = {
-                "media_id": pdf["media_id"],
-                "container_width": [r["container_width"] for r in rows],
-                "container_height": [r["container_height"] for r in rows],
-                "duration_ms": [r["duration_ms"] for r in rows],
-                "profile_idc": [r["profile_idc"] for r in rows],
-                "tier": [r["tier"] for r in rows],
-                "level_idc": [r["level_idc"] for r in rows],
-                "width": [r["width"] for r in rows],
-                "height": [r["height"] for r in rows],
-                "bit_depth": [r["bit_depth"] for r in rows],
-                "fps": [r["fps"] for r in rows],
-                "dims_match": [
-                    None
-                    if r["width"] is None
-                    else (
-                        r["container_width"] == r["width"]
-                        and r["container_height"] == r["height"]
-                    )
-                    for r in rows
-                ],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    container + HEVC stream metadata with a dims_match QA flag; map-only,
+    same ``permissive`` quarantine mode as ``hevc_sps_features``."""
+    return payload_features(
+        df,
         "media_id long, container_width int, container_height int, duration_ms double, "
         "profile_idc int, tier int, level_idc int, width int, height int, "
-        "bit_depth int, fps double, dims_match boolean"
+        "bit_depth int, fps double, dims_match boolean",
+        __name__,
+        "mp4_hvcc_extract",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)

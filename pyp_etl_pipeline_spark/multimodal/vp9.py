@@ -42,10 +42,14 @@ here, pin it the way test_h264's x264 golden is pinned.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 
+from pyp_etl_pipeline_spark.multimodal.codecs import (
+    mp4_encode,
+    mp4_video_extract,
+    payload_features,
+    visual_sample_entry,
+)
 from pyp_etl_pipeline_spark.multimodal.h264 import _BitReader, _BitWriter
 
 VP9_SYNC_CODE = 0x498342
@@ -209,61 +213,19 @@ def vp9_frame_header_parse(payload: bytes) -> dict:
     }
 
 
-_VP9_NULL = {
-    "profile": None, "bit_depth": None, "color_space": None, "color_range": None,
-    "chroma_sub_x": None, "chroma_sub_y": None, "width": None, "height": None,
-    "render_width": None, "render_height": None, "show_frame": None,
-}
-
-
 def vp9_frame_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary) -> parsed VP9
-    keyframe-header metadata. Arrow-batched ``mapInPandas``, map-only —
-    same 100 TB shape and ``permissive`` quarantine contract as the
-    H.264/HEVC/AV1 feature operators."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.vp9 import (  # noqa: PLC0415
-            _VP9_NULL,
-            vp9_frame_header_parse,
-        )
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(vp9_frame_header_parse(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_VP9_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(vp9_frame_header_parse(bytes(p)))
-            out = {"media_id": pdf["media_id"]}
-            for k in _VP9_NULL:
-                out[k] = [r[k] for r in rows]
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    keyframe-header metadata; map-only, with the ``permissive``
+    quarantine contract of ``codecs.payload_features``."""
+    return payload_features(
+        df,
         "media_id long, profile int, bit_depth int, color_space int, "
         "color_range int, chroma_sub_x int, chroma_sub_y int, width int, "
-        "height int, render_width int, render_height int, show_frame int"
+        "height int, render_width int, render_height int, show_frame int",
+        __name__,
+        "vp9_frame_header_parse",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)
 
 
 # --------------------------------------------------- vpcC-in-MP4 (mm22)
@@ -349,124 +311,30 @@ def mp4_vp9_encode(
 ) -> bytes:
     """ISO-BMFF with a vp09 sample entry carrying a real vpcC record and
     an mdat holding the keyframe whose header the record was derived
-    from — the VP9 mirror of ``av1.mp4_av1_encode``, except the stream
-    config rides in the FRAME (vpcC carries no init data for VP9)."""
-    import struct  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        _box,
-        _iter_boxes,
-        mp4_encode,
+    from, written by the shared ``codecs.mp4_encode`` video path — the
+    stream config rides in the FRAME (vpcC carries no init data for
+    VP9)."""
+    frame = vp9_frame_header_encode(
+        width, height, profile=profile, bit_depth=bit_depth, color_range=color_range
     )
-
-    dur = duration_ms * timescale // 1000
-    base = mp4_encode(
+    return mp4_encode(
         display_width if display_width is not None else width,
         display_height if display_height is not None else height,
         duration_ms,
         timescale,
-    )
-    frame = vp9_frame_header_encode(
-        width, height, profile=profile, bit_depth=bit_depth, color_range=color_range
-    )
-    vpcc = _box(b"vpcC", vpcc_record(frame, level))
-    vp09 = _box(
-        b"vp09",
-        b"\x00" * 6
-        + struct.pack(">H", 1)  # data_reference_index
-        + b"\x00" * 16
-        + struct.pack(">HH", width, height)
-        + struct.pack(">II", 0x00480000, 0x00480000)
-        + b"\x00" * 4
-        + struct.pack(">H", 1)
-        + b"\x00" * 32
-        + struct.pack(">Hh", 0x0018, -1)
-        + vpcc,
-    )
-    stsd = _box(b"stsd", struct.pack(">II", 0, 1) + vp09)
-    stts = _box(b"stts", struct.pack(">II", 0, 0))
-    stsc = _box(b"stsc", struct.pack(">II", 0, 0))
-    stsz = _box(b"stsz", struct.pack(">III", 0, 0, 0))
-    stco = _box(b"stco", struct.pack(">II", 0, 0))
-    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco)
-    vmhd = _box(b"vmhd", struct.pack(">IHHHH", 1, 0, 0, 0, 0))
-    dref = _box(b"dref", struct.pack(">II", 0, 1) + _box(b"url ", struct.pack(">I", 1)))
-    minf = _box(b"minf", vmhd + _box(b"dinf", dref) + stbl)
-    mdhd = _box(
-        b"mdhd",
-        struct.pack(">I", 0)
-        + struct.pack(">II", 0, 0)
-        + struct.pack(">II", timescale, dur)
-        + struct.pack(">HH", 0x55C4, 0),
-    )
-    hdlr = _box(
-        b"hdlr",
-        struct.pack(">I", 0) + struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"VideoHandler\x00",
-    )
-    mdia = _box(b"mdia", mdhd + hdlr + minf)
-    ftyp = moov_span = None
-    for tag, body, boxend in _iter_boxes(base, 0, len(base)):
-        if tag == b"ftyp":
-            ftyp = base[body - 8 : boxend]
-        elif tag == b"moov":
-            moov_span = (body, boxend)
-    mvhd_b = tkhd_b = None
-    for tag, body, boxend in _iter_boxes(base, *moov_span):
-        if tag == b"mvhd":
-            mvhd_b = base[body - 8 : boxend]
-        elif tag == b"trak":
-            for t2, b2, e2 in _iter_boxes(base, body, boxend):
-                if t2 == b"tkhd":
-                    tkhd_b = base[b2 - 8 : e2]
-    trak = _box(b"trak", tkhd_b + mdia)
-    return ftyp + _box(b"moov", mvhd_b + trak) + _box(b"mdat", frame)
-
-
-def mp4_vpcc_extract(payload: bytes) -> dict:
-    """Walk a real MP4's box tree to the vpcC record AND the first VP9
-    frame in mdat, parse both, and cross-check the record's
-    profile/bit-depth/subsampling/full-range against the stream's own
-    keyframe header (``record_matches``) alongside the container's tkhd
-    display dims vs the coded dims — the VP9 shape of the
-    container-vs-stream QA the other three codec tiers do, adapted to
-    VP9's in-frame config carriage."""
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        _iter_boxes,
-        mp4_decode,
+        sample_entry=visual_sample_entry(b"vp09", width, height, b"vpcC", vpcc_record(frame, level)),
+        mdat=frame,
     )
 
-    meta = mp4_decode(payload)
-    rec = None
-    moov = mdat = None
-    for tag, body, boxend in _iter_boxes(payload, 0, len(payload)):
-        if tag == b"moov":
-            moov = (body, boxend)
-        elif tag == b"mdat" and mdat is None:
-            mdat = (body, boxend)
-    if moov is None:
-        raise ValueError("no moov box")
 
-    def walk(span):
-        nonlocal rec
-        for tag, body, boxend in _iter_boxes(payload, *span):
-            if rec is not None:
-                return
-            if tag == b"vpcC":
-                rec = payload[body:boxend]
-            elif tag in (b"trak", b"mdia", b"minf", b"stbl"):
-                walk((body, boxend))
-            elif tag == b"stsd":
-                walk((body + 8, boxend))
-            elif tag == b"vp09":
-                walk((body + 78, boxend))
-
-    walk(moov)
-    if rec is None:
-        raise ValueError("no vpcC record in any sample entry")
+def _vpcc_with_frame(rec: bytes, mdat: bytes | None) -> dict:
+    """vpcC record fields plus the first mdat keyframe's header, with
+    ``record_matches`` cross-checking profile/bit-depth/subsampling/
+    full-range between the two."""
     out = vpcc_parse(rec)
-    if mdat is None or mdat[0] == mdat[1]:
+    if not mdat:
         raise ValueError("no VP9 frame in mdat (vpcC carries no init data)")
-    stream = vp9_frame_header_parse(payload[mdat[0] : mdat[1]])
+    stream = vp9_frame_header_parse(mdat)
     out.update(stream)
     out["record_matches"] = (
         out["record_profile"] == stream["profile"]
@@ -475,85 +343,30 @@ def mp4_vpcc_extract(payload: bytes) -> dict:
         == (stream["chroma_sub_x"], stream["chroma_sub_y"])
         and out["record_full_range"] == stream["color_range"]
     )
-    return {
-        "container_width": meta["width"],
-        "container_height": meta["height"],
-        "duration_ms": meta["duration_ms"],
-        **out,
-    }
+    return out
 
 
-_VPCC_NULL = {
-    "container_width": None, "container_height": None, "duration_ms": None,
-    "profile": None, "record_level": None, "bit_depth": None,
-    "chroma_sub_x": None, "chroma_sub_y": None, "color_range": None,
-    "width": None, "height": None, "record_matches": None,
-}
+def mp4_vpcc_extract(payload: bytes) -> dict:
+    """Walk a real MP4's box tree to the vpcC record AND the first VP9
+    frame in mdat, parse both, and cross-check the record against the
+    stream's own keyframe header (``record_matches``) alongside the
+    container's tkhd display dims vs the coded dims (``dims_match``) —
+    the VP9 shape of the container-vs-stream QA the other three codec
+    tiers do, adapted to VP9's in-frame config carriage."""
+    return mp4_video_extract(payload, b"vpcC", (b"vp09",), _vpcc_with_frame)
 
 
 def vp9_container_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary MP4) ->
     container + VP9 stream metadata with dims_match and record_matches
-    QA flags — the VP9 mirror of the avc/hevc/av1 container operators."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.vp9 import _VPCC_NULL, mp4_vpcc_extract  # noqa: PLC0415
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(mp4_vpcc_extract(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_VPCC_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(mp4_vpcc_extract(bytes(p)))
-            out = {
-                "media_id": pdf["media_id"],
-                "container_width": [r["container_width"] for r in rows],
-                "container_height": [r["container_height"] for r in rows],
-                "duration_ms": [r["duration_ms"] for r in rows],
-                "profile": [r["profile"] for r in rows],
-                "record_level": [r["record_level"] for r in rows],
-                "bit_depth": [r["bit_depth"] for r in rows],
-                "chroma_sub_x": [r["chroma_sub_x"] for r in rows],
-                "chroma_sub_y": [r["chroma_sub_y"] for r in rows],
-                "color_range": [r["color_range"] for r in rows],
-                "width": [r["width"] for r in rows],
-                "height": [r["height"] for r in rows],
-                "record_matches": [r["record_matches"] for r in rows],
-                "dims_match": [
-                    None
-                    if r["width"] is None
-                    else (
-                        r["container_width"] == r["width"]
-                        and r["container_height"] == r["height"]
-                    )
-                    for r in rows
-                ],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    QA flags; map-only, same ``permissive`` quarantine mode."""
+    return payload_features(
+        df,
         "media_id long, container_width int, container_height int, duration_ms double, "
         "profile int, record_level int, bit_depth int, chroma_sub_x int, "
         "chroma_sub_y int, color_range int, width int, height int, "
-        "record_matches boolean, dims_match boolean"
+        "record_matches boolean, dims_match boolean",
+        __name__,
+        "mp4_vpcc_extract",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)

@@ -60,4 +60,13 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # "No Partition Defined for Window operation!" fires on every planned
+    # unpartitioned window and buries run output; the allowlisted ones are
+    # provably bounded (test_plan_quality pins the allowlist and its
+    # bounding nodes), so this one logger alone drops to ERROR
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark

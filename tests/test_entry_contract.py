@@ -111,6 +111,32 @@ def test_registry_complete_under_either_import_order(tmp_path):
         assert n_q == n_o
 
 
+def test_p01_oracle_text_is_hash_seed_independent(tmp_path):
+    """p01's oracle lists each field's header aliases; built from a set,
+    the SQL text changed with PYTHONHASHSEED (same rows), so registry
+    dumps did not compare byte-for-byte across processes."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        f"import sys; sys.path.insert(0, {repo!r});"
+        "from pyp_etl_pipeline_spark.driver_queries_ext3 import P01_SQL;"
+        "print(P01_SQL)"
+    )
+    texts = []
+    for seed in ("1", "2"):
+        out = subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True, cwd=tmp_path,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        texts.append(out.stdout)
+    assert "VALUES" in texts[0]
+    assert texts[0] == texts[1]
+
+
 def test_bench_query_names_resolve():
     """Every name in bench.py's HEADLINE/EXTENDED lists must exist in the
     registry — a typo here silently drops a query from the driver's

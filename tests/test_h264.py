@@ -192,32 +192,3 @@ def test_truncated_payloads_raise_valueerror_not_indexerror():
     for cut in range(7, sps_end + 1):
         with _pytest.raises(ValueError):
             avcc_parse(rec[:cut])
-
-
-def test_permissive_mode_quarantines_bad_rows(spark):
-    """Corpus-scale contract: one corrupt blob yields NULL fields + an
-    error string; good rows in the same batch still parse."""
-    from pyp_etl_pipeline_spark.multimodal.h264 import (
-        avc_container_features,
-        mp4_avc_encode,
-        sps_encode,
-        sps_features,
-    )
-
-    good = sps_encode(640, 480)
-    rows = [(0, good), (1, good[:10]), (2, b"\xde\xad\xbe\xef"), (3, good)]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in sps_features(df, permissive=True).collect()}
-    assert out[0]["width"] == 640 and out[0]["error"] is None
-    assert out[3]["width"] == 640 and out[3]["error"] is None
-    for bad in (1, 2):
-        assert out[bad]["width"] is None
-        assert out[bad]["error"]
-
-    mp4 = mp4_avc_encode(320, 240, 1000)
-    rows = [(0, mp4), (1, mp4[: len(mp4) // 2]), (2, b"junk")]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in avc_container_features(df, permissive=True).collect()}
-    assert out[0]["width"] == 320 and out[0]["dims_match"] is True
-    assert out[1]["width"] is None and out[1]["error"]
-    assert out[2]["width"] is None and out[2]["error"]

@@ -237,3 +237,29 @@ def test_unpartitioned_windows_are_bounded_registry_wide(spark, sf_dir):
             elif not (below & BOUNDING_NODES):
                 offenders[name] = "allowlisted but no bounding node below the window"
     assert not offenders, f"unbounded unpartitioned windows: {offenders}"
+
+
+def test_get_spark_silences_unpartitioned_window_warning(tmp_path):
+    """The 'No Partition Defined' warning of bounded, allowlisted windows
+    (pinned structurally above) must not bury run output: get_spark
+    routes the WindowExec logger alone to ERROR."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        f"import sys; sys.path.insert(0, {repo!r});"
+        "from pyspark.sql import Window, functions as F;"
+        "from pyp_etl_pipeline_spark.session import get_spark;"
+        "spark = get_spark(cpus=1, driver_memory='1g');"
+        "rows = spark.range(5).withColumn('r', F.row_number().over(Window.orderBy('id'))).collect();"
+        "print(rows[-1]['r']); spark.stop()"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, cwd=tmp_path, timeout=300
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split()[-1] == "5"
+    assert "No Partition Defined" not in out.stderr
+

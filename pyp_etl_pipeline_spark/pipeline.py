@@ -11,9 +11,16 @@ review & push (``/reviews`` + ``/reviews/push``, app/routes.py:522-2038):
 decision application, country gate, two-phase dim upsert, member MERGE,
 audit summaries.
 
-Everything is lazy DataFrames until the caller materializes; no
-``collect()`` in the data path (the preview and the tiny vocab probe are
-the only driver-side touches, both bounded).
+Everything is lazy DataFrames except two materialization points in
+``etl_phase``, each one ``localCheckpoint(eager=False)``: the flagged rows
+(after the ledger gate, sanitize and the validity flag) and the unioned
+``resolution``. Their consumers are separate actions (five CSV report
+writes and a sink snapshot), and Catalyst's exchange reuse shares work
+only inside one plan, so without them every write re-ran sanitize and
+the whole fuzzy-resolution chain. The checkpoints are lazy, but under AQE
+their subtrees' shuffle-map stages still run when ``etl_phase`` is
+called; the rest runs with the first action that reads them. The only
+driver-side ``collect()`` is the bounded header-mapping preview.
 """
 
 from __future__ import annotations
@@ -110,11 +117,13 @@ def etl_phase(
         if c in df.columns:
             df = df.withColumn(c, sanitize_string(c))
 
-    # F2-F4 validity split (flag column, one scan, two filters)
+    # F2-F4 validity split (flag column, one scan, two filters). The flagged
+    # rows feed the invalid-rows report, push's keep/skipped, the merged
+    # sink and the summary, all separate actions: materialize them once.
     valid_expr = is_valid_value(key_col) & is_valid_value("country1") & validation.valid_business_name(key_col)
     if "contactEmail" in df.columns:
         valid_expr = valid_expr & validation.valid_email("contactEmail")
-    flagged = df.withColumn("__valid", valid_expr)
+    flagged = df.withColumn("__valid", valid_expr).localCheckpoint(eager=False)
     invalid = flagged.filter(~F.col("__valid")).withColumn(
         "error",
         F.when(~is_valid_value(key_col), F.lit("missing businessName"))
@@ -148,6 +157,10 @@ def etl_phase(
     resolution = parts[0]
     for p in parts[1:]:
         resolution = resolution.unionByName(p)
+    # The resolution report, the review queue, the summary's pending count
+    # and push's new-dimension lookups are separate actions: materialize
+    # once so each does not re-run fuzzy resolution.
+    resolution = resolution.localCheckpoint(eager=False)
 
     reviews = (
         resolution.filter(F.col("band") == "review")

@@ -42,6 +42,16 @@ def dims(spark):
     }
 
 
+@pytest.fixture(scope="module")
+def countries(spark):
+    return spark.createDataFrame(COUNTRIES, "title string, countryID string")
+
+
+@pytest.fixture(scope="module")
+def sink(spark):
+    return spark.createDataFrame(SINK, "businessName string, contactEmail string")
+
+
 def test_phase1_header_mapping_and_preview(raw):
     plan = pipeline.ingest_phase(raw)
     rename = plan.mapping.rename_dict()
@@ -91,10 +101,8 @@ def test_phase2_explode_and_bands(raw, dims):
     assert set(r["band"] for r in etl.resolution.collect()) <= {"auto_resolve", "review", "reject"}
 
 
-def test_phase3_push(spark, raw, dims):
+def test_phase3_push(spark, raw, dims, countries, sink):
     etl = run_etl(raw, dims)
-    countries = spark.createDataFrame(COUNTRIES, "title string, countryID string")
-    sink = spark.createDataFrame(SINK, "businessName string, contactEmail string")
     decisions = spark.createDataFrame(
         [("Vitamin D3 Capsules", "approve_match", None)], "item string, action string, chosen_ext_id string"
     )
@@ -120,20 +128,39 @@ def test_phase3_push(spark, raw, dims):
     assert summary["reviews_pending"] == 0  # the single review item was decided
 
 
-def test_preview_push_dry_run(spark, raw, dims):
+def test_preview_push_dry_run(raw, dims, countries, sink):
     etl = run_etl(raw, dims)
-    countries = spark.createDataFrame(COUNTRIES, "title string, countryID string")
-    sink = spark.createDataFrame(SINK, "businessName string, contactEmail string")
     preview = {r["businessName"]: r["action"] for r in pipeline.preview_push(etl, countries, sink).collect()}
     assert preview["Acme Foods"] == "update"
     assert preview["Beta Supplements"] == "insert"
     assert "Delta Co" not in preview  # country-gated out of the dry run too
 
 
-def test_idempotent_reingest(spark, raw, dims):
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_shared_relations_are_materialized_once(raw, dims, countries, sink):
+    """The report writes and the snapshot are separate actions, so the
+    flagged rows and the resolution are checkpointed: no consumer's plan
+    re-derives sanitize or the fuzzy-resolution windows."""
+    etl = run_etl(raw, dims)
+    push = pipeline.push_phase(etl, countries, sink, dims)
+    no_window = {"resolution": etl.resolution, "reviews": etl.reviews, "summary": push.summary}
+    no_window.update({f"new_dim_rows[{k}]": df for k, df in push.new_dim_rows.items()})
+    for name, df in no_window.items():
+        assert _optimized_plan(df).count("Window") == 0, name
+    for name, df in {"invalid_rows": etl.invalid_rows, "members": etl.members}.items():
+        assert _optimized_plan(df).count("regexp_replace") == 0, name
+
+
+def test_idempotent_reingest(spark, raw, dims, countries, sink):
     plan = pipeline.ingest_phase(raw)
     ledger = spark.createDataFrame([("upload1.csv",)], "source_file string")
     etl = pipeline.etl_phase(plan.normalized, dims, source_file="upload1.csv", ledger=ledger)
     assert etl.members.count() == 0  # file already processed -> no-op
+    assert etl.resolution.count() == 0 and etl.reviews.count() == 0
+    push = pipeline.push_phase(etl, countries, sink, dims)
+    assert {r["metric"]: r["n"] for r in push.summary.collect()}["members_pushed"] == 0
     etl2 = pipeline.etl_phase(plan.normalized, dims, source_file="upload2.csv", ledger=ledger)
     assert etl2.members.count() == 4

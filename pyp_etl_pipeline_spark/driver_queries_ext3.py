@@ -2671,8 +2671,8 @@ def ann06_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
 
     emb = load_corpus_unique(spark, sf, "embeddings")
-    # fused fit: bit-identical to kmeans_fit(k=8) + pq_fit(m=4, ksub=8)
-    # at half the training scans (pinned by test_ivfpq_fit_fused_equals_separate)
+    # one fit loop trains both: bit-identical to kmeans_fit(k=8) +
+    # pq_fit(m=4, ksub=8) (pinned by test_lloyd_trainers_match_python_reference)
     coarse, books = _sim.ivfpq_fit(emb, k=8, m=4, ksub=8, n_iter=1)
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")

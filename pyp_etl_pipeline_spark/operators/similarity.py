@@ -47,6 +47,27 @@ def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return dot(a, b) / (na * nb)
 
 
+def _topk(scored: DataFrame, k: int, key: Column, *out: Column | str) -> DataFrame:
+    """The per-query top-k tail every ranker shares: ``row_number`` over
+    ``key`` with ties to the smaller neighbor id (deterministic), then
+    the ``k`` best rows as (query_id, neighbor_id, rank, *out)."""
+    w = Window.partitionBy("query_id").orderBy(key, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", *out)
+    )
+
+
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Cosine top-k of candidate pairs carrying (__q, __nq) query and
+    (__v, __nv) neighbor vectors with their norms."""
+    scored = pairs.withColumn(
+        "cosine", cosine_with_norms(F.col("__q"), F.col("__v"), F.col("__nq"), F.col("__nv"))
+    )
+    return _topk(scored, k, F.desc("cosine"), F.round("cosine", 6).alias("cosine"))
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -65,19 +86,7 @@ def brute_force_topk(
     q = queries.select(
         F.col(query_id_col).alias("query_id"), _as_double(query_vec_col).alias("__q")
     ).withColumn("__nq", l2_norm(F.col("__q")))
-    scored = (
-        corpus.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            cosine_with_norms(F.col("__q"), F.col("__v"), F.col("__nq"), F.col("__nv")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _cosine_topk(corpus.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: str = "pyp-lsh") -> list[list[float]]:
@@ -101,7 +110,7 @@ def _hyperplanes(dim: int, n_planes: int, seed: str = "pyp-lsh") -> list[list[fl
 
 def _lit_double_array(vals) -> Column:
     """array<double> constant via one parsed SQL string (the fast-literal
-    path — see ``_lit_long_array``). ``repr`` is the shortest decimal
+    path — see ``_sql_centroid_dists``). ``repr`` is the shortest decimal
     that round-trips the double, and Spark's decimal->double cast is
     correctly rounded, so every value is bit-exact; the one exception is
     -0.0 (the parser reads ``-0.0`` as decimal and drops the sign), kept
@@ -225,15 +234,7 @@ def lsh_topk(
         # ranking so row_number stays one row per pair (single-probe
         # needs no such shuffle: buckets partition the corpus)
         scored = scored.dropDuplicates(["query_id", "neighbor_id"])
-    scored = scored.withColumn(
-        "cosine", cosine_with_norms(F.col("__q"), F.col("__v"), F.col("__nq"), F.col("__nv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _cosine_topk(scored, k)
 
 
 def ivf_assign(
@@ -311,19 +312,8 @@ def ivf_topk(
     q = ivf_assign(queries, cents, id_col=query_id_col, vec_col=query_vec_col, nprobe=nprobe).select(
         F.col("id").alias("query_id"), F.col("__v").alias("__q"), "centroid_id"
     ).withColumn("__nq", l2_norm(F.col("__q")))
-    scored = (
-        corpus.join(F.broadcast(q), "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            cosine_with_norms(F.col("__q"), F.col("__v"), F.col("__nq"), F.col("__nv")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
+    return _cosine_topk(
+        corpus.join(F.broadcast(q), "centroid_id").filter(F.col("query_id") != F.col("neighbor_id")), k
     )
 
 
@@ -378,40 +368,31 @@ def cosine_neardup_pairs(
 
 # ---------------------------------------------------------------- k-means
 
-def _micro_vec(c: Column) -> Column:
-    """Per-dimension micro-unit quantization (floor(x*1e6 + 0.5) as
-    LONG) — the same engine-portable rounding contract as
-    ``functions/aggregates``. All k-means arithmetic below happens on
-    these integers, so distances and centroid updates are EXACT and
-    bit-identical across engines; the 1e-6 quantization is part of the
-    operator contract (vastly below any embedding's noise floor)."""
-    return F.transform(c, lambda x: F.floor(x.cast("double") * 1_000_000 + F.lit(0.5)).cast("long"))
+def _bt(name: str) -> str:
+    """Backtick-quote a column name for SQL interpolation (escaping any
+    embedded backtick — the F.col path the fast-SQL builders replaced
+    handled arbitrary names, so these must too)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_micro_vec(col_sql: str) -> str:
+    """SQL text of the per-dimension micro-unit quantization
+    (floor(x*1e6 + 0.5) as LONG) over an arbitrary SQL expression — the
+    same engine-portable rounding contract as ``functions/aggregates``.
+    All k-means/PQ arithmetic below happens on these integers, so
+    distances and centroid updates are EXACT and bit-identical across
+    engines; the 1e-6 quantization is part of the operator contract
+    (vastly below any embedding's noise floor)."""
+    return f"transform({col_sql}, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5D) AS BIGINT))"
+
+
+def _micro_vec(col: str) -> Column:
+    """``_sql_micro_vec`` of the named column, as a Column."""
+    return F.expr(_sql_micro_vec(_bt(col)))
 
 
 def _sql_long_array(vals) -> str:
     return "array(" + ",".join(f"{int(v)}L" for v in vals) + ")"
-
-
-def _lit_long_array(vals) -> Column:
-    """array<bigint> constant built by PARSING one SQL string instead of
-    converting elements one-by-one through py4j: ``F.lit(list)`` pays a
-    JVM round trip per element (~0.5 s for a 512-cell matrix, measured —
-    it dominated ANN query CONSTRUCTION time), while one ``F.expr`` call
-    ships the whole thing and Catalyst constant-folds it to the
-    identical Literal node (verified plan-identical)."""
-    return F.expr(_sql_long_array(vals))
-
-
-def _matrix_lit(centroids: list[list[int]]) -> Column:
-    """The whole k x dim centroid table as ONE array<array<bigint>>
-    Literal. The previous shape — k separate per-centroid expression
-    trees, each carrying dim Literal nodes — made Catalyst ANALYSIS the
-    dominant cost of every small fit job (512+ nodes per argmin, re-
-    analyzed per job); a single Literal is O(1) nodes regardless of k
-    and dim, and the arithmetic moves into a ``transform`` over it.
-    Built via one parsed SQL string (see ``_lit_long_array``), which
-    constant-folds to the same Literal at a tenth of the py4j cost."""
-    return F.expr("array(" + ",".join(_sql_long_array(c) for c in centroids) + ")")
 
 
 def _sq_l2(xm: Column, cm: Column) -> Column:
@@ -422,39 +403,22 @@ def _sq_l2(xm: Column, cm: Column) -> Column:
     )
 
 
-def _kmeans_argmin(xm: Column, centroids: list[list[int]]) -> Column:
-    """struct(dist, cluster) of the nearest centroid; ``array_min`` on
-    structs compares lexicographically, so equal distances break to the
-    smaller cluster id — the documented tie rule. The centroid table is
-    a single matrix Literal (see ``_matrix_lit``)."""
-    return F.array_min(
-        F.transform(
-            _matrix_lit(centroids),
-            lambda c, j: F.struct(_sq_l2(xm, c).alias("d"), j.cast("int").alias("c")),
-        )
-    )
+def _sql_centroid_dists(xm_sql: str, centroids: list[list[int]]) -> str:
+    """SQL text of the per-centroid candidate array
+    transform(matrix, (c, j) -> struct(d', c)) for the micro vector
+    ``xm_sql``, with d' = ||c||^2 - 2<x, c>: the squared L2 minus the
+    row-constant ||x||^2. Subtracting the same value from every candidate
+    preserves the (d, c) struct order EXACTLY — including equal-distance
+    ties — with one multiply in the zip_with instead of subtract+square.
 
-
-def _bt(name: str) -> str:
-    """Backtick-quote a column name for SQL interpolation (escaping any
-    embedded backtick — the F.col path the fast-SQL builders replaced
-    handled arbitrary names, so these must too)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_micro_vec(col_sql: str) -> str:
-    """SQL text of ``_micro_vec`` over an arbitrary SQL expression —
-    identical arithmetic (double cast, *1e6, +0.5 double, floor, long)."""
-    return f"transform({col_sql}, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5D) AS BIGINT))"
-
-
-def _sql_cand_fast(xm_sql: str, centroids: list[list[int]]) -> str:
-    """SQL text of the per-centroid shifted-distance candidate array:
-    transform(matrix, (c, j) -> struct(d', c)) with
-    d' = ||c||^2 - 2<x, c> — the ``_kmeans_argmin_fast`` body before the
-    ``array_min``. One parsed string instead of dozens of py4j calls
-    (the lambda builders were the residual construction cost after the
-    literal fix — ~1 s per ANN query, measured)."""
+    The whole k x dim centroid table is ONE array<array<bigint>> Literal
+    (O(1) plan nodes regardless of k and dim — k per-centroid expression
+    trees made Catalyst ANALYSIS the dominant cost of every small fit
+    job) and the ||c||^2 terms a second small array Literal indexed by
+    cluster id. Both arrive in one parsed SQL string, which Catalyst
+    constant-folds to the same Literals: ``F.lit(list)`` paid a py4j
+    round trip per element (~0.5 s for a 512-cell matrix, measured) and
+    the lambda builders ~1 s per ANN query."""
     mat = "array(" + ",".join(_sql_long_array(c) for c in centroids) + ")"
     norms = _sql_long_array(sum(int(v) * int(v) for v in c) for c in centroids)
     return (
@@ -464,40 +428,130 @@ def _sql_cand_fast(xm_sql: str, centroids: list[list[int]]) -> str:
     )
 
 
-def _kmeans_argmin_fast(xm: Column | str, centroids: list[list[int]]) -> Column:
-    """Selection-identical to ``_kmeans_argmin`` (same winner, same tie
-    rule) but with the row-constant ||x||^2 term of the squared L2
-    dropped: d' = ||c||^2 - 2<x, c>. Subtracting the same value from
-    every candidate preserves the (d, c) struct order EXACTLY — including
-    equal-distance ties — with one multiply in the zip_with instead of
-    subtract+square. The ||c||^2 terms ride as a second small array
-    Literal indexed by cluster id. ONLY for call sites that consume
-    ``["c"]`` — the d' values are shifted and must never be exposed
-    (``assign_clusters`` keeps the exact-distance variant).
+def _nearest_centroid(xm_sql: str, centroids: list[list[int]]) -> Column:
+    """struct(d, c) of the centroid nearest to the micro vector
+    ``xm_sql`` (a SQL expression). ``array_min`` on structs compares
+    lexicographically, so equal distances break to the smaller cluster
+    id — the documented tie rule. ``d`` is the shifted d' of
+    ``_sql_centroid_dists``; add ||x||^2 for the exact squared L2."""
+    return F.expr(f"array_min({_sql_centroid_dists(xm_sql, centroids)})")
 
-    ``xm`` may be a Column or a SQL expression STRING; the string form
-    builds the whole tree through one ``F.expr`` parse (the fast path —
-    hot callers construct these trees m+1 times per query)."""
-    if isinstance(xm, str):
-        return F.expr(f"array_min({_sql_cand_fast(xm, centroids)})")
-    norms = _lit_long_array(sum(int(v) * int(v) for v in c) for c in centroids)
-    return F.array_min(
-        F.transform(
-            _matrix_lit(centroids),
-            lambda c, j: F.struct(
-                (
-                    F.element_at(norms, j + 1)
-                    - 2
-                    * F.aggregate(
-                        F.zip_with(xm, c, lambda a, b: a * b),
-                        F.lit(0).cast("long"),
-                        lambda acc, x: acc + x,
+
+def _lloyd(
+    vectors: DataFrame,
+    k: int,
+    m: int,
+    ksub: int,
+    n_iter: int,
+    id_col: str,
+    vec_col: str,
+    sample_fraction: float | None,
+    name: str,
+    salt: str,
+) -> tuple[list[list[int]], list[list[list[int]]]]:
+    """The exact-integer Lloyd's trainer behind ``kmeans_fit``, ``pq_fit``
+    and ``ivfpq_fit``: a full-dim coarse quantizer of ``k`` centroids
+    (``k=0``: none) and ``m`` subspace quantizers of ``ksub`` centroids
+    each over equal dim/m slices (``m=0``: none), all trained in the SAME
+    loop. Returns ``(centroids, codebooks)`` in micro-units.
+
+    Deterministic and engine-portable by construction:
+    - init = the vectors of the max(k, ksub) smallest ids, micro-
+      quantized: the first k seed the coarse quantizer and the slices of
+      the first ksub each codebook (rank order = cluster id);
+    - assignment = exact INTEGER squared L2 on micro-units, ties to the
+      smaller cluster id — no IEEE summation-order hazards anywhere;
+    - update = per-dimension mean of the micro values, rounded half-up
+      in a single portable ``floor(sum/cnt + 0.5)``; empty clusters
+      keep their previous centroid.
+
+    Physical shape (the MLlib shape): the micro projection persists
+    once (the seeds collect plus one job per iteration read it); per
+    iteration one map-only scan assigns every space with the centroid
+    tables inlined as LITERALS (broadcast-by-constant — no join), then
+    ONE shuffle of (space, cluster, j) partial sums (space -1 is the
+    coarse quantizer, 0..m-1 the subspaces; map-side combined:
+    k*dim + m*ksub*dsub rows per map task regardless of corpus size),
+    then a collect of those rows to the driver. At 100 TB each iteration
+    is a full scan — which is what k-means costs anywhere — with shuffle
+    traffic independent of corpus size; ``sample_fraction`` trains on a
+    KEYED deterministic sample instead (hash-bucketed — same subset on
+    any engine/partitioning/rerun), since centroid quality converges
+    with the sample, not the corpus."""
+    if sample_fraction is not None:
+        from pyp_etl_pipeline_spark.operators.sampling import deterministic_sample  # noqa: PLC0415
+
+        vectors = deterministic_sample(vectors, id_col, sample_fraction, salt=salt)
+    v = vectors.select(F.col(id_col).alias("id"), _micro_vec(vec_col).alias("__xm")).persist()
+    try:
+        nseed = max(k, ksub)
+        seeds = [list(r["__xm"]) for r in v.orderBy("id").limit(nseed).collect()]
+        if len(seeds) < nseed:
+            need = "max(k, ksub)" if k and m else ("k" if k else "ksub")
+            hint = " (after sampling)" if sample_fraction is not None else ""
+            raise ValueError(
+                f"{name}: need at least {need}={nseed} vectors to seed, got {len(seeds)}{hint}"
+            )
+        dim = len(seeds[0])
+        bad = next((x for x in seeds if len(x) != dim), None)
+        if bad is not None:
+            raise ValueError(f"{name}: ragged embeddings — seed lengths {len(bad)} vs {dim}")
+        if m and dim % m != 0:
+            raise ValueError(f"{name}: dim {dim} not divisible by m={m}")
+        dsub = dim // m if m else 0
+        centroids = seeds[:k]
+        books = [[x[s * dsub : (s + 1) * dsub] for x in seeds[:ksub]] for s in range(m)]
+        for _ in range(n_iter):
+            # slices pre-projected ONCE: Catalyst does not CSE the m
+            # slice() calls repeated inside every centroid's argmin, and
+            # the analysis cost of the inline-literal argmin tree is the
+            # bottleneck of these small jobs
+            sliced = v.select(
+                "__xm", *[F.slice("__xm", s * dsub + 1, dsub).alias(f"__sub{s}") for s in range(m)]
+            )
+            # per space: its assignment column, and the partial-sum cell
+            # (s, cluster, j, x) each vector component feeds
+            codes, cells = [], []
+            if k:
+                codes.append(_nearest_centroid("__xm", centroids)["c"].alias("__cc"))
+                cells.append(
+                    F.struct(F.lit(-1).alias("s"), F.col("__cc").alias("cluster"), F.col("i").alias("j"), "x")
+                )
+            if m:
+                codes.append(
+                    F.array(*[_nearest_centroid(f"__sub{s}", books[s])["c"] for s in range(m)]).alias("__codes")
+                )
+                s_col = (F.col("i") / dsub).cast("int")
+                cells.append(
+                    F.struct(
+                        s_col.alias("s"),
+                        F.element_at("__codes", s_col + 1).alias("cluster"),
+                        (F.col("i") % dsub).alias("j"),
+                        "x",
                     )
-                ).alias("d"),
-                j.cast("int").alias("c"),
-            ),
-        )
-    )
+                )
+            # two selects: a generator (posexplode) alongside the
+            # struct-indexing code expressions in ONE projection makes
+            # Catalyst re-resolve the argmin struct with positional
+            # col1/col2 names and the ["c"] access fails analysis
+            assigned = sliced.select(*codes, "__xm")
+            exploded = assigned.select("*", F.posexplode("__xm").alias("i", "x"))
+            cell = cells[0] if len(cells) == 1 else F.explode(F.array(*cells))
+            comps = (
+                exploded.select(cell.alias("e"))
+                .select("e.*")
+                .groupBy("s", "cluster", "j")
+                .agg(F.floor(F.sum("x") / F.count("*") + F.lit(0.5)).cast("long").alias("comp"))
+            )
+            got = {(r["s"], r["cluster"], r["j"]): r["comp"] for r in comps.collect()}
+            centroids = [[got.get((-1, c, j), x) for j, x in enumerate(cent)] for c, cent in enumerate(centroids)]
+            books = [
+                [[got.get((s, c, j), x) for j, x in enumerate(cent)] for c, cent in enumerate(book)]
+                for s, book in enumerate(books)
+            ]
+    finally:
+        v.unpersist(blocking=False)
+    return centroids, books
 
 
 def kmeans_fit(
@@ -506,82 +560,19 @@ def kmeans_fit(
     n_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,  # ignored: derived from the seed vectors
     sample_fraction: float | None = None,
 ) -> list[list[int]]:
     """Distributed Lloyd's k-means over an embedding column — the real
     trainer for the IVF coarse quantizer (replacing
     ``deterministic_centroids``' seed stand-in when cluster quality
-    matters). Returns the final centroids in micro-units.
-
-    Deterministic and engine-portable by construction:
-    - init = the vectors of the ``k`` smallest ids (rank order = cluster
-      id), micro-quantized;
-    - assignment = exact INTEGER squared L2 on micro-units, ties to the
-      smaller cluster id — no IEEE summation-order hazards anywhere;
-    - update = per-dimension mean of the micro values, rounded half-up
-      in a single portable ``floor(sum/cnt + 0.5)``; empty clusters
-      keep their previous centroid.
-
-    Physical shape (the MLlib shape): per iteration one map-only
-    assignment pass with the k x dim centroid table inlined as
-    LITERALS (broadcast-by-constant — no join), then ONE shuffle of
-    (cluster, dim) partial sums (map-side combined: k*dim rows per map
-    task regardless of corpus size), then a k*dim-row collect to the
-    driver. At 100 TB each iteration is a full scan — which is what
-    k-means costs anywhere — with shuffle traffic independent of corpus
-    size."""
-    if sample_fraction is not None:
-        # the actual 100 TB fit path: train the quantizer on a KEYED
-        # deterministic sample (hash-bucketed — same subset on any
-        # engine/partitioning/rerun), then assign the full corpus with
-        # the trained centroids. Centroid quality converges with the
-        # sample, not the corpus; the full-scan-per-iteration cost
-        # shrinks by 1/fraction.
-        from pyp_etl_pipeline_spark.operators.sampling import deterministic_sample  # noqa: PLC0415
-
-        vectors = deterministic_sample(vectors, id_col, sample_fraction, salt="kmeans-fit-v1")
-    v = vectors.select(
-        F.col(id_col).alias("id"),
-        _micro_vec(F.col(vec_col)).alias("__xm"),
-    )
-    # the fit loop runs n_iter+1 jobs over v (seeds + one per iteration)
-    # — persist the projected micro vectors so the scan + quantization
-    # run once, not per job. (At true 100 TB, fit on a deterministic
-    # sample instead of caching the corpus; assignment stays full-scan.)
-    v = v.persist()
-    try:
-        seeds = v.orderBy("id").limit(k).collect()
-        if len(seeds) < k:
-            hint = " (after sampling)" if sample_fraction is not None else ""
-            raise ValueError(
-                f"kmeans_fit: need at least k={k} vectors to seed, got {len(seeds)}{hint}"
-            )
-        centroids: list[list[int]] = [list(r["__xm"]) for r in seeds]
-        # the authoritative dimensionality is the data's, not the arg's —
-        # a mismatched `dim` would KeyError deep in the rebuild below
-        dim = len(centroids[0])
-        bad = next((c for c in centroids if len(c) != dim), None)
-        if bad is not None:
-            raise ValueError(
-                f"kmeans_fit: ragged embeddings — seed lengths {len(bad)} vs {dim}"
-            )
-        for _ in range(n_iter):
-            assigned = v.withColumn("__a", _kmeans_argmin_fast("__xm", centroids))
-            comps = (
-                assigned.select(F.col("__a.c").alias("cluster"), F.posexplode("__xm").alias("i", "x"))
-                .groupBy("cluster", "i")
-                .agg(F.floor(F.sum("x") / F.count("*") + F.lit(0.5)).cast("long").alias("comp"))
-            )
-            got: dict[int, dict[int, int]] = {}
-            for r in comps.collect():
-                got.setdefault(r["cluster"], {})[r["i"]] = r["comp"]
-            centroids = [
-                [got[j][i] for i in range(dim)] if j in got else centroids[j] for j in range(k)
-            ]
-    finally:
-        v.unpersist(blocking=False)
-    return centroids
+    matters). Returns the ``k`` final centroids in micro-units; seeds
+    are the vectors of the ``k`` smallest ids. Seeding, tie and rounding
+    contract and the physical shape are ``_lloyd``'s; pass
+    ``sample_fraction`` for the 100 TB fit path (train on a keyed
+    sample, then ``kmeans_assign`` the full corpus)."""
+    if k < 1:
+        raise ValueError(f"kmeans_fit: k must be >= 1, got {k}")
+    return _lloyd(vectors, k, 0, 0, n_iter, id_col, vec_col, sample_fraction, "kmeans_fit", "kmeans-fit-v1")[0]
 
 
 def kmeans_assign(
@@ -592,13 +583,14 @@ def kmeans_assign(
 ) -> DataFrame:
     """Assign every vector to its nearest ``kmeans_fit`` centroid.
     Output: (id, cluster_id, dist) with ``dist`` the exact integer
-    squared L2 in micro-units — map-only, centroids inlined."""
-    v = vectors.select(F.col(id_col).alias("id"), _micro_vec(F.col(vec_col)).alias("__xm"))
-    a = v.withColumn("__a", _kmeans_argmin(F.col("__xm"), centroids))
+    squared L2 in micro-units (the shifted argmin distance plus
+    ||x||^2) — map-only, centroids inlined."""
+    v = vectors.select(F.col(id_col).alias("id"), _micro_vec(vec_col).alias("__xm"))
+    a = v.withColumn("__a", _nearest_centroid("__xm", centroids))
     return a.select(
         "id",
         F.col("__a.c").alias("cluster_id"),
-        F.col("__a.d").alias("dist"),
+        (F.col("__a.d") + F.expr("aggregate(__xm, 0L, (acc, x) -> acc + x * x)")).alias("dist"),
     )
 
 
@@ -629,7 +621,7 @@ def semantic_dedup(
     v = vectors.select(
         F.col(id_col).alias("id"),
         _as_double(vec_col).alias("__v"),
-        _kmeans_argmin_fast(_sql_micro_vec(_bt(vec_col)), centroids)["c"].alias("cluster_id"),
+        _nearest_centroid(_sql_micro_vec(_bt(vec_col)), centroids)["c"].alias("cluster_id"),
     ).withColumn("__n", l2_norm(F.col("__v")))
     a = v.select(F.col("id").alias("id_a"), F.col("__v").alias("__va"), F.col("__n").alias("__na"), "cluster_id")
     b = v.select(F.col("id").alias("id_b"), F.col("__v").alias("__vb"), F.col("__n").alias("__nb"), "cluster_id")
@@ -671,9 +663,10 @@ def pq_fit(
 ) -> list[list[list[int]]]:
     """Product-quantization codebooks: the embedding splits into ``m``
     equal subspaces and each subspace trains its own ``ksub``-centroid
-    quantizer with the exact-integer Lloyd's trainer (``kmeans_fit`` —
-    same seeding, tie, and rounding contract, so every codebook is
-    bit-reproducible on any engine). Returns ``m`` codebooks of
+    quantizer with the exact-integer Lloyd's trainer (``_lloyd`` — the
+    ``kmeans_fit`` seeding, tie, and rounding contract per subspace, so
+    every codebook is bit-reproducible on any engine; seeds are the
+    ksub smallest ids' sub-vectors). Returns ``m`` codebooks of
     ``ksub`` micro-unit centroids, each of length dim/m.
 
     This is the FAISS-style memory move for corpus-scale ANN: a
@@ -682,78 +675,15 @@ def pq_fit(
     vectors cannot.
 
     All m subspaces train in the SAME pass: per iteration one map-only
-    assignment scan (codebooks inlined as literals) plus ONE shuffle of
-    (subspace, cluster, dim) partial sums — m*ksub*dsub rows per map
-    task regardless of corpus size — then an m*ksub*dsub-row collect.
+    assignment scan plus ONE shuffle of (subspace, cluster, dim) partial
+    sums — m*ksub*dsub rows per map task regardless of corpus size.
     Training per-subspace sequentially would cost m scans per
     iteration; at true scale additionally pass ``sample_fraction``
     (codebook quality converges with the sample, as with the IVF
-    coarse quantizer). Semantics per subspace are EXACTLY
-    ``kmeans_fit``'s: seeds = the ksub smallest ids' sub-vectors,
-    integer micro distances with ties to the smaller code, floor-half-up
-    centroid means, empty clusters keep their previous centroid.
-    """
-    if sample_fraction is not None:
-        from pyp_etl_pipeline_spark.operators.sampling import deterministic_sample  # noqa: PLC0415
-
-        vectors = deterministic_sample(vectors, id_col, sample_fraction, salt="pq-fit-v1")
-    v = vectors.select(
-        F.col(id_col).alias("id"), _micro_vec(F.col(vec_col)).alias("__xm")
-    ).persist()
-    try:
-        seeds = v.orderBy("id").limit(ksub).collect()
-        if len(seeds) < ksub:
-            raise ValueError(f"pq_fit: need at least ksub={ksub} vectors to seed, got {len(seeds)}")
-        dim = len(seeds[0]["__xm"])
-        if dim % m != 0:
-            raise ValueError(f"pq_fit: dim {dim} not divisible by m={m}")
-        dsub = dim // m
-        books: list[list[list[int]]] = [
-            [list(r["__xm"])[s * dsub : (s + 1) * dsub] for r in seeds] for s in range(m)
-        ]
-        for _ in range(n_iter):
-            # slices pre-projected ONCE: Catalyst does not CSE the m
-            # slice() calls repeated inside every centroid's argmin, and
-            # the analysis cost of the inline-literal argmin tree is the
-            # bottleneck of these small jobs (CLAUDE.md)
-            sliced = v.select(
-                F.col("__xm"),
-                *[F.slice(F.col("__xm"), s * dsub + 1, dsub).alias(f"__sub{s}") for s in range(m)],
-            )
-            codes = F.array(
-                *[
-                    _kmeans_argmin_fast(f"__sub{s}", books[s])["c"]
-                    for s in range(m)
-                ]
-            )
-            # two selects: a generator (posexplode) alongside the
-            # struct-indexing codes expression in ONE projection makes
-            # Catalyst re-resolve the argmin struct with positional
-            # col1/col2 names and the ["c"] access fails analysis
-            assigned = sliced.select(codes.alias("__codes"), F.col("__xm"))
-            exploded = assigned.select("__codes", F.posexplode("__xm").alias("i", "x"))
-            s_col = (F.col("i") / dsub).cast("int")
-            comps = (
-                exploded.select(
-                    s_col.alias("s"),
-                    F.element_at("__codes", s_col + 1).alias("cluster"),
-                    (F.col("i") % dsub).alias("j"),
-                    "x",
-                )
-                .groupBy("s", "cluster", "j")
-                .agg(F.floor(F.sum("x") / F.count("*") + F.lit(0.5)).cast("long").alias("comp"))
-            )
-            got = {(r["s"], r["cluster"], r["j"]): r["comp"] for r in comps.collect()}
-            books = [
-                [
-                    [got.get((s, c, j), books[s][c][j]) for j in range(dsub)]
-                    for c in range(ksub)
-                ]
-                for s in range(m)
-            ]
-    finally:
-        v.unpersist(blocking=False)
-    return books
+    coarse quantizer)."""
+    if m < 1 or ksub < 1:
+        raise ValueError(f"pq_fit: m and ksub must be >= 1, got m={m}, ksub={ksub}")
+    return _lloyd(vectors, 0, m, ksub, n_iter, id_col, vec_col, sample_fraction, "pq_fit", "pq-fit-v1")[1]
 
 
 def ivfpq_fit(
@@ -766,105 +696,19 @@ def ivfpq_fit(
     vec_col: str = "embedding",
     sample_fraction: float | None = None,
 ) -> tuple[list[list[int]], list[list[list[int]]]]:
-    """Train the IVF coarse quantizer AND the PQ codebooks in the SAME
-    fit loop — bit-identical to ``kmeans_fit(k, n_iter)`` +
-    ``pq_fit(m, ksub, n_iter)`` run separately (same seeding, tie, and
-    rounding contracts), at half the job count: one persisted micro
-    projection instead of two, ONE seeds collect (the max(k, ksub)
+    """Train the IVF coarse quantizer (``k`` centroids) AND the PQ
+    codebooks (``m`` subspaces of ``ksub``) in the SAME ``_lloyd`` loop:
+    one persisted micro projection, ONE seeds collect (the max(k, ksub)
     smallest ids serve both), and per iteration ONE scan computing the
     coarse assignment and all m subspace assignments in a single
-    projection, whose exploded components fold through a single
-    (space, cluster, j) partial-sum shuffle (space = -1 is the coarse
-    quantizer, 0..m-1 the subspaces). At 100 TB this halves the
-    full-corpus training scans — the dominant fit cost.
+    projection, whose components fold through a single (space, cluster,
+    j) partial-sum shuffle. Training the two quantizers apart would scan
+    the corpus twice per iteration — at 100 TB the dominant fit cost.
 
-    Returns ``(centroids, codebooks)`` exactly as the two separate
-    trainers would."""
-    if sample_fraction is not None:
-        from pyp_etl_pipeline_spark.operators.sampling import deterministic_sample  # noqa: PLC0415
-
-        vectors = deterministic_sample(vectors, id_col, sample_fraction, salt="ivfpq-fit-v1")
-    v = vectors.select(
-        F.col(id_col).alias("id"), _micro_vec(F.col(vec_col)).alias("__xm")
-    ).persist()
-    try:
-        nseed = max(k, ksub)
-        seeds = v.orderBy("id").limit(nseed).collect()
-        if len(seeds) < nseed:
-            raise ValueError(
-                f"ivfpq_fit: need at least max(k, ksub)={nseed} vectors to seed, got {len(seeds)}"
-            )
-        dim = len(seeds[0]["__xm"])
-        bad = next((r for r in seeds if len(r["__xm"]) != dim), None)
-        if bad is not None:
-            raise ValueError(
-                f"ivfpq_fit: ragged embeddings — seed lengths {len(bad['__xm'])} vs {dim}"
-            )
-        if dim % m != 0:
-            raise ValueError(f"ivfpq_fit: dim {dim} not divisible by m={m}")
-        dsub = dim // m
-        centroids: list[list[int]] = [list(r["__xm"]) for r in seeds[:k]]
-        books: list[list[list[int]]] = [
-            [list(r["__xm"])[s * dsub : (s + 1) * dsub] for r in seeds[:ksub]] for s in range(m)
-        ]
-        for _ in range(n_iter):
-            sliced = v.select(
-                F.col("__xm"),
-                *[F.slice(F.col("__xm"), s * dsub + 1, dsub).alias(f"__sub{s}") for s in range(m)],
-            )
-            codes = F.array(
-                *[_kmeans_argmin_fast(f"__sub{s}", books[s])["c"] for s in range(m)]
-            )
-            assigned = sliced.select(
-                _kmeans_argmin_fast("__xm", centroids)["c"].alias("__cc"),
-                codes.alias("__codes"),
-                F.col("__xm"),
-            )
-            exploded = assigned.select("__cc", "__codes", F.posexplode("__xm").alias("i", "x"))
-            s_col = (F.col("i") / dsub).cast("int")
-            # each vector component feeds exactly two partial sums: its
-            # coarse (space=-1, full-dim j) cell and its subspace cell
-            pairs = exploded.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit(-1).alias("s"),
-                            F.col("__cc").alias("cluster"),
-                            F.col("i").alias("j"),
-                            F.col("x").alias("x"),
-                        ),
-                        F.struct(
-                            s_col.alias("s"),
-                            F.element_at("__codes", s_col + 1).alias("cluster"),
-                            (F.col("i") % dsub).alias("j"),
-                            F.col("x").alias("x"),
-                        ),
-                    )
-                ).alias("e")
-            ).select("e.*")
-            comps = pairs.groupBy("s", "cluster", "j").agg(
-                F.floor(F.sum("x") / F.count("*") + F.lit(0.5)).cast("long").alias("comp")
-            )
-            gotc: dict[int, dict[int, int]] = {}
-            gots: dict[tuple[int, int, int], int] = {}
-            for r in comps.collect():
-                if r["s"] == -1:
-                    gotc.setdefault(r["cluster"], {})[r["j"]] = r["comp"]
-                else:
-                    gots[(r["s"], r["cluster"], r["j"])] = r["comp"]
-            centroids = [
-                [gotc[c][i] for i in range(dim)] if c in gotc else centroids[c] for c in range(k)
-            ]
-            books = [
-                [
-                    [gots.get((s, c, j), books[s][c][j]) for j in range(dsub)]
-                    for c in range(ksub)
-                ]
-                for s in range(m)
-            ]
-    finally:
-        v.unpersist(blocking=False)
-    return centroids, books
+    Returns ``(centroids, codebooks)``."""
+    if min(k, m, ksub) < 1:
+        raise ValueError(f"ivfpq_fit: k, m and ksub must be >= 1, got k={k}, m={m}, ksub={ksub}")
+    return _lloyd(vectors, k, m, ksub, n_iter, id_col, vec_col, sample_fraction, "ivfpq_fit", "ivfpq-fit-v1")
 
 
 def pq_encode(
@@ -875,7 +719,7 @@ def pq_encode(
 ) -> DataFrame:
     """(id, codes) — per subspace the nearest codebook centroid (exact
     integer L2 on micro-units, ties to the smaller code, the
-    ``_kmeans_argmin`` contract). Map-only: codebooks ride inline as
+    ``_nearest_centroid`` contract). Map-only: codebooks ride inline as
     literals; one pass over the corpus, no shuffle, no join."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
@@ -888,9 +732,45 @@ def pq_encode(
         ],
     )
     codes = F.array(
-        *[_kmeans_argmin_fast(f"__sub{s}", codebooks[s])["c"] for s in range(m)]
+        *[_nearest_centroid(f"__sub{s}", codebooks[s])["c"] for s in range(m)]
     )
     return sliced.select("id", codes.alias("codes"))
+
+
+def _adc_luts(qm: DataFrame, codebooks: list[list[list[int]]]) -> DataFrame:
+    """(query_id, __lut): per query the exact integer squared L2 from each
+    micro sub-vector of ``__qm`` to every codebook centroid (m x ksub
+    longs), flat in (s, c) order — entry s*ksub + c. Built from a
+    broadcast m*ksub-row codebook relation and collapsed to one array per
+    query; ``array_sort`` on (s, c, d) structs makes the order explicit,
+    not shuffle-dependent."""
+    dsub = len(codebooks[0][0])
+    cb = qm.sparkSession.createDataFrame(
+        [(s, c, cm) for s, book in enumerate(codebooks) for c, cm in enumerate(book)],
+        "s int, c int, cm array<long>",
+    )
+    sub_dist = F.expr(
+        f"aggregate(zip_with(slice(__qm, s * {dsub} + 1, {dsub}), cm, "
+        "(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
+    )
+    return (
+        qm.join(F.broadcast(cb))
+        .select("query_id", F.struct("s", "c", sub_dist.alias("d")).alias("e"))
+        .groupBy("query_id")
+        .agg(F.transform(F.array_sort(F.collect_list("e")), lambda e: e["d"]).alias("__lut"))
+    )
+
+
+def _adc_topk(pairs: DataFrame, ksub: int, k: int, *out: str) -> DataFrame:
+    """Top-k of (query_id, neighbor_id, codes, __lut) candidate pairs by
+    asymmetric distance: a vector's ``adc_dist`` is its m code lookups in
+    the query's LUT summed — no per-pair vector math at all."""
+    adc = F.expr(
+        f"aggregate(transform(codes, (c, i) -> element_at(__lut, i * {ksub} + c + 1)), "
+        "0L, (acc, x) -> acc + x)"
+    )
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).withColumn("adc_dist", adc)
+    return _topk(scored, k, F.asc("adc_dist"), "adc_dist", *out)
 
 
 def pq_topk(
@@ -919,50 +799,11 @@ def pq_topk(
     exact integers end to end, so results are engine-portable and
     oracle-checkable (ann05).
     """
-    m = len(codebooks)
-    ksub = len(codebooks[0])
-    dsub = len(codebooks[0][0])
-    spark = vectors.sparkSession
-    cb_rows = [
-        (s, c, codebooks[s][c]) for s in range(m) for c in range(ksub)
-    ]
-    cb = spark.createDataFrame(cb_rows, "s int, c int, cm array<long>")
-
-    qm = queries.select(
-        F.col(query_id_col).alias("query_id"), _micro_vec(F.col(query_vec_col)).alias("__qm")
-    )
-    sub_dist = F.expr(
-        f"aggregate(zip_with(slice(__qm, s * {dsub} + 1, {dsub}), cm, "
-        "(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
-    )
-    # flat LUT ordered by (s, c): entry s*ksub + c — array_sort on
-    # (s, c, d) structs makes the order explicit, not shuffle-dependent
-    luts = (
-        qm.join(F.broadcast(cb))
-        .select("query_id", F.struct("s", "c", sub_dist.alias("d")).alias("e"))
-        .groupBy("query_id")
-        .agg(
-            F.transform(F.array_sort(F.collect_list("e")), lambda e: e["d"]).alias("__lut")
-        )
-    )
+    qm = queries.select(F.col(query_id_col).alias("query_id"), _micro_vec(query_vec_col).alias("__qm"))
     enc = pq_encode(vectors, codebooks, id_col=id_col, vec_col=vec_col).select(
         F.col("id").alias("neighbor_id"), "codes"
     )
-    adc = F.expr(
-        f"aggregate(transform(codes, (c, i) -> element_at(__lut, i * {ksub} + c + 1)), "
-        "0L, (acc, x) -> acc + x)"
-    )
-    scored = (
-        enc.join(F.broadcast(luts))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc_dist", adc)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
-    )
+    return _adc_topk(enc.join(F.broadcast(_adc_luts(qm, codebooks))), len(codebooks[0]), k)
 
 
 def ivfpq_topk(
@@ -991,71 +832,40 @@ def ivfpq_topk(
     dimension-sized and broadcast; the probe restriction is a broadcast
     semi-join on the coarse cid, so unprobed inverted lists are
     filtered before any ADC work. Selection/tie rules are the
-    ``_kmeans_argmin`` contract throughout; distances are exact
+    ``_nearest_centroid`` contract throughout; distances are exact
     integers, so ann06's oracle replays every stage bit-for-bit.
     """
     m = len(codebooks)
-    ksub = len(codebooks[0])
     dsub = len(codebooks[0][0])
-    spark = vectors.sparkSession
 
     xm_sql = _sql_micro_vec(_bt(vec_col))
     enc = vectors.select(
         F.col(id_col).alias("neighbor_id"),
-        _kmeans_argmin_fast(xm_sql, coarse)["c"].alias("vcid"),
+        _nearest_centroid(xm_sql, coarse)["c"].alias("vcid"),
         *[F.expr(f"slice({xm_sql}, {s * dsub + 1}, {dsub})").alias(f"__sub{s}") for s in range(m)],
     )
     enc = enc.select(
         "neighbor_id",
         "vcid",
         F.array(
-            *[_kmeans_argmin_fast(f"__sub{s}", codebooks[s])["c"] for s in range(m)]
+            *[_nearest_centroid(f"__sub{s}", codebooks[s])["c"] for s in range(m)]
         ).alias("codes"),
     )
 
-    qm = queries.select(
-        F.col(query_id_col).alias("query_id"), _micro_vec(F.col(query_vec_col)).alias("__qm")
-    )
-    # nprobe nearest coarse lists per query: d' = ||c||^2 - 2<q, c> (the
-    # row-constant ||q||^2 dropped — ordering and ties preserved), over
-    # the single matrix Literal (``_sql_cand_fast`` is that exact body)
+    qm = queries.select(F.col(query_id_col).alias("query_id"), _micro_vec(query_vec_col).alias("__qm"))
+    # nprobe nearest coarse lists per query: the shifted distances of
+    # ``_sql_centroid_dists`` sorted as (d', c) structs (ordering and
+    # ties preserved)
     probes = qm.select(
         "query_id",
         F.explode(
             F.expr(
-                f"transform(slice(array_sort({_sql_cand_fast('__qm', coarse)}), 1, {nprobe}), s -> s.c)"
+                f"transform(slice(array_sort({_sql_centroid_dists('__qm', coarse)}), 1, {nprobe}), s -> s.c)"
             )
         ).alias("vcid"),
     )
-
-    cb_rows = [(s, c, codebooks[s][c]) for s in range(m) for c in range(ksub)]
-    cb = spark.createDataFrame(cb_rows, "s int, c int, cm array<long>")
-    sub_dist = F.expr(
-        f"aggregate(zip_with(slice(__qm, s * {dsub} + 1, {dsub}), cm, "
-        "(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
-    )
-    luts = (
-        qm.join(F.broadcast(cb))
-        .select("query_id", F.struct("s", "c", sub_dist.alias("d")).alias("e"))
-        .groupBy("query_id")
-        .agg(F.transform(F.array_sort(F.collect_list("e")), lambda e: e["d"]).alias("__lut"))
-    )
-    adc = F.expr(
-        f"aggregate(transform(codes, (c, i) -> element_at(__lut, i * {ksub} + c + 1)), "
-        "0L, (acc, x) -> acc + x)"
-    )
-    scored = (
-        enc.join(F.broadcast(probes), "vcid")
-        .join(F.broadcast(luts), "query_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc_dist", adc)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist", "vcid")
-    )
+    pairs = enc.join(F.broadcast(probes), "vcid").join(F.broadcast(_adc_luts(qm, codebooks)), "query_id")
+    return _adc_topk(pairs, len(codebooks[0]), k, "vcid")
 
 
 def exact_l2_topk(
@@ -1073,23 +883,14 @@ def exact_l2_topk(
     pass over the corpus; ranking is a per-query window (partitioned —
     parallel across queries). O(corpus x queries): an EVALUATION tool to
     run on a query sample, not a serving path."""
-    vm = vectors.select(
-        F.col(id_col).alias("neighbor_id"), _micro_vec(F.col(vec_col)).alias("__vm")
-    )
-    qm = queries.select(
-        F.col(query_id_col).alias("query_id"), _micro_vec(F.col(query_vec_col)).alias("__qm")
-    )
+    vm = vectors.select(F.col(id_col).alias("neighbor_id"), _micro_vec(vec_col).alias("__vm"))
+    qm = queries.select(F.col(query_id_col).alias("query_id"), _micro_vec(query_vec_col).alias("__qm"))
     scored = (
         vm.join(F.broadcast(qm))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("exact_dist", _sq_l2(F.col("__qm"), F.col("__vm")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("exact_dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "exact_dist")
-    )
+    return _topk(scored, k, F.asc("exact_dist"), "exact_dist")
 
 
 def ann_recall(approx: DataFrame, exact: DataFrame, k: int = 5) -> DataFrame:
@@ -1160,23 +961,14 @@ def ivfpq_refine_topk(
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
     ).select("query_id", "neighbor_id", "adc_dist")
-    vm = vectors.select(
-        F.col(id_col).alias("neighbor_id"), _micro_vec(F.col(vec_col)).alias("__vm")
-    )
-    qm = queries.select(
-        F.col(query_id_col).alias("query_id"), _micro_vec(F.col(query_vec_col)).alias("__qm")
-    )
+    vm = vectors.select(F.col(id_col).alias("neighbor_id"), _micro_vec(vec_col).alias("__vm"))
+    qm = queries.select(F.col(query_id_col).alias("query_id"), _micro_vec(query_vec_col).alias("__qm"))
     refined = (
         vm.join(F.broadcast(shortlist), "neighbor_id")
         .join(F.broadcast(qm), "query_id")
         .withColumn("exact_dist", _sq_l2(F.col("__qm"), F.col("__vm")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("exact_dist"), F.asc("neighbor_id"))
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "exact_dist", "adc_dist")
-    )
+    return _topk(refined, k, F.asc("exact_dist"), "exact_dist", "adc_dist")
 
 
 def hard_negative_mining(

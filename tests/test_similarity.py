@@ -168,7 +168,7 @@ def test_kmeans_separates_blobs(spark):
         rows.append((i, [v + (0.001 * (i % 5)) for v in base[b]]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    cents = similarity.kmeans_fit(df, k=3, n_iter=3, dim=4)
+    cents = similarity.kmeans_fit(df, k=3, n_iter=3)
     assert len(cents) == 3 and all(len(c) == 4 for c in cents)
     out = similarity.kmeans_assign(df, cents).collect()
     # every blob maps to exactly one cluster and vice versa
@@ -180,6 +180,10 @@ def test_kmeans_separates_blobs(spark):
     assert len({next(iter(s)) for s in mapping.values()}) == 3
     # distances are small within a tight blob (micro-units squared)
     assert all(r["dist"] < 10**8 for r in out)
+    # and exact: the integer squared L2 to the assigned centroid
+    micro = {i: [math.floor(x * 1_000_000 + 0.5) for x in v] for i, v in rows}
+    for r in out:
+        assert r["dist"] == sum((a - b) ** 2 for a, b in zip(micro[r["id"]], cents[r["cluster_id"]])), r
 
 
 def test_kmeans_empty_cluster_keeps_previous_centroid(spark):
@@ -189,7 +193,7 @@ def test_kmeans_empty_cluster_keeps_previous_centroid(spark):
     # must carry its previous centroid instead of crashing
     rows = [(0, [0.0, 0.0]), (1, [1.0, 1.0]), (2, [1.0, 1.0]), (3, [0.0, 0.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = similarity.kmeans_fit(df, k=3, n_iter=2, dim=2)
+    cents = similarity.kmeans_fit(df, k=3, n_iter=2)
     assert len(cents) == 3
     out = similarity.kmeans_assign(df, cents).collect()
     assert len(out) == 4
@@ -202,7 +206,7 @@ def test_ivf_topk_with_trained_centroids(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.filter("vec_id < 4").selectExpr("vec_id AS query_id", "embedding AS query_vec")
 
-    cents = similarity.kmeans_centroids_df(spark, similarity.kmeans_fit(df, k=4, n_iter=2, dim=4))
+    cents = similarity.kmeans_centroids_df(spark, similarity.kmeans_fit(df, k=4, n_iter=2))
     out = similarity.ivf_topk(df, q, k=3, nprobe=2, centroids=cents).collect()
     assert len(out) == 4 * 3
     # the nearest neighbor of each query shares its one-hot direction
@@ -225,7 +229,7 @@ def test_semantic_dedup_drops_higher_id_within_cluster(spark):
         (2, [0.0, 0.0, 0.0, 1.0]),       # isolated — must be kept
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = similarity.kmeans_fit(df, k=3, n_iter=2, dim=4)
+    cents = similarity.kmeans_fit(df, k=3, n_iter=2)
     out = similarity.semantic_dedup(df, cents, threshold=0.99).collect()
 
     dropped = {r["id"]: r for r in out}
@@ -244,7 +248,7 @@ def test_semantic_dedup_no_pairs_below_threshold(spark):
     # orthogonal vectors: nothing is semantically duplicated
     rows = [(i, [float(i == j) for j in range(4)]) for i in range(4)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = similarity.kmeans_fit(df, k=2, n_iter=1, dim=4)
+    cents = similarity.kmeans_fit(df, k=2, n_iter=1)
     assert similarity.semantic_dedup(df, cents, threshold=0.5).count() == 0
 
 
@@ -257,7 +261,7 @@ def test_kmeans_fit_sample_fraction_trains_usable_quantizer(spark):
     rows = [(i, [v + 0.001 * (i % 5) for v in base[i % 3]]) for i in range(60)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    cents = similarity.kmeans_fit(df, k=3, n_iter=3, dim=4, sample_fraction=0.5)
+    cents = similarity.kmeans_fit(df, k=3, n_iter=3, sample_fraction=0.5)
     out = similarity.kmeans_assign(df, cents).collect()
     mapping = {}
     for r in out:
@@ -265,7 +269,7 @@ def test_kmeans_fit_sample_fraction_trains_usable_quantizer(spark):
     assert all(len(s) == 1 for s in mapping.values())
     assert len({next(iter(s)) for s in mapping.values()}) == 3
     # deterministic: the same call yields the same centroids
-    assert cents == similarity.kmeans_fit(df, k=3, n_iter=3, dim=4, sample_fraction=0.5)
+    assert cents == similarity.kmeans_fit(df, k=3, n_iter=3, sample_fraction=0.5)
 
 
 def test_semantic_dedup_single_cluster_equals_exact_pair_rule(spark):
@@ -279,7 +283,7 @@ def test_semantic_dedup_single_cluster_equals_exact_pair_rule(spark):
     random.seed(3)
     rows = [(i, [random.uniform(-1, 1) for _ in range(4)]) for i in range(25)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = similarity.kmeans_fit(df, k=1, n_iter=1, dim=4)
+    cents = similarity.kmeans_fit(df, k=1, n_iter=1)
     got = {r["id"]: r["kept_by"] for r in similarity.semantic_dedup(df, cents, threshold=0.8).collect()}
 
     # reference computation in python
@@ -298,9 +302,8 @@ def test_semantic_dedup_single_cluster_equals_exact_pair_rule(spark):
 
 
 def test_kmeans_fit_validates_inputs(spark):
-    """Too few vectors for k seeds must raise a clear ValueError (not an
-    IndexError deep in the fit loop), and a wrong `dim` argument must be
-    harmless: the dimensionality is derived from the data."""
+    """Too few vectors for k seeds, or an empty quantizer (k < 1), must
+    raise a clear ValueError (not an IndexError deep in the fit loop)."""
     import pytest as _pytest
 
     from pyp_etl_pipeline_spark.operators import similarity
@@ -309,9 +312,9 @@ def test_kmeans_fit_validates_inputs(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     with _pytest.raises(ValueError, match="at least k=5"):
         similarity.kmeans_fit(df, k=5, n_iter=1)
-    # dim=64 vs actual 4 components: derived, no KeyError
-    cents = similarity.kmeans_fit(df, k=2, n_iter=1, dim=64)
-    assert all(len(c) == 4 for c in cents)
+    for k in (0, -1):
+        with _pytest.raises(ValueError, match="k must be >= 1"):
+            similarity.kmeans_fit(df, k=k, n_iter=1)
 
 
 def test_pq_fit_encode_adc_exact_small(spark):
@@ -367,35 +370,86 @@ def test_pq_fit_validations(spark):
         similarity.pq_fit(df, m=2, ksub=1, n_iter=1)
     with _pytest.raises(ValueError, match="at least ksub"):
         similarity.pq_fit(df, m=3, ksub=4, n_iter=1)
+    # empty quantizers: no subspaces, or no centroids per subspace
+    for m, ksub in ((0, 1), (1, 0), (-1, 1)):
+        with _pytest.raises(ValueError, match="m and ksub must be >= 1"):
+            similarity.pq_fit(df, m=m, ksub=ksub, n_iter=1)
 
 
-def test_ivfpq_fit_fused_equals_separate(spark):
-    """The fused trainer must be BIT-IDENTICAL to kmeans_fit + pq_fit run
-    separately (ann06's oracle replays the two separate stage contracts,
-    so any drift here is a driver hash failure). Covers k != ksub and
-    n_iter > 1, plus the sample_fraction=1.0 path (VERDICT r7 item 7:
-    the documented 100 TB fit path gets a green test)."""
+def _ref_lloyd(rows, k, m, ksub, n_iter):
+    """Pure-Python exact-integer Lloyd's, written from the trainer contract
+    alone: float32 inputs widen to double and quantize to micro-units
+    (floor(x*1e6 + 0.5)); seeds are the vectors of the max(k, ksub)
+    smallest ids; each vector joins its nearest centroid by integer
+    squared L2, ties to the smaller cluster id; a centroid becomes the
+    floor-half-up mean of its members and an empty cluster keeps its
+    centroid. The coarse quantizer (k centroids, full dim) and each of
+    the m subspaces (ksub centroids over dim/m slices) train
+    independently. Returns (centroids, codebooks)."""
+    import struct
+
+    pts = [
+        [math.floor(struct.unpack("f", struct.pack("f", x))[0] * 1_000_000 + 0.5) for x in v]
+        for _, v in sorted(rows)
+    ]
+    dsub = len(pts[0]) // m if m else 0
+    seeds = pts[: max(k, ksub)]
+
+    def train(part, cents):
+        xs = [part(p) for p in pts]
+        for _ in range(n_iter):
+            near = [
+                min((sum((a - b) ** 2 for a, b in zip(x, c)), j) for j, c in enumerate(cents))[1]
+                for x in xs
+            ]
+            members = [[x for x, n in zip(xs, near) if n == j] for j in range(len(cents))]
+            cents = [
+                [(2 * sum(col) + len(mem)) // (2 * len(mem)) for col in zip(*mem)] if mem else c
+                for c, mem in zip(cents, members)
+            ]
+        return cents
+
+    def sub(s):
+        return lambda p: p[s * dsub : (s + 1) * dsub]
+
+    coarse = train(lambda p: p, seeds[:k])
+    books = [train(sub(s), [sub(s)(p) for p in seeds[:ksub]]) for s in range(m)]
+    return coarse, books
+
+
+def test_lloyd_trainers_match_python_reference(spark):
+    """kmeans_fit (coarse only), pq_fit (subspaces only) and ivfpq_fit
+    (both in one loop) must equal an independent pure-Python Lloyd's bit
+    for bit — the ann04-ann07 oracles replay the same contract, so any
+    drift is an oracle hash failure. Ids 0 and 1 share one vector: their
+    seeds tie on every distance, so the tie rule and the empty-cluster
+    rule decide the result. Covers k != ksub and n_iter > 1, the
+    sample_fraction=1.0 path (the documented 100 TB fit path) and the
+    trainers' error texts."""
     import random
 
     from pyp_etl_pipeline_spark.operators import similarity
 
     random.seed(11)
     rows = [(i, [random.uniform(-1, 1) for _ in range(16)]) for i in range(60)]
+    rows[1] = (1, rows[0][1])
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     for k, m, ksub, n_iter in ((4, 4, 4, 1), (6, 2, 3, 2)):
-        want_c = similarity.kmeans_fit(emb, k=k, n_iter=n_iter)
-        want_b = similarity.pq_fit(emb, m=m, ksub=ksub, n_iter=n_iter)
-        got_c, got_b = similarity.ivfpq_fit(emb, k=k, m=m, ksub=ksub, n_iter=n_iter)
-        assert got_c == want_c, (k, m, ksub, n_iter)
-        assert got_b == want_b, (k, m, ksub, n_iter)
-    # fraction=1.0 keeps every row -> identical codebooks to the unsampled fit
-    sc, sb = similarity.ivfpq_fit(emb, k=4, m=4, ksub=4, n_iter=1, sample_fraction=1.0)
-    fc, fb = similarity.ivfpq_fit(emb, k=4, m=4, ksub=4, n_iter=1)
-    assert (sc, sb) == (fc, fb)
+        want_c, want_b = _ref_lloyd(rows, k, m, ksub, n_iter)
+        assert similarity.kmeans_fit(emb, k=k, n_iter=n_iter) == want_c, (k, n_iter)
+        assert similarity.pq_fit(emb, m=m, ksub=ksub, n_iter=n_iter) == want_b, (m, ksub, n_iter)
+        got = similarity.ivfpq_fit(emb, k=k, m=m, ksub=ksub, n_iter=n_iter)
+        assert got == (want_c, want_b), (k, m, ksub, n_iter)
+    # fraction=1.0 keeps every row -> the unsampled result
+    sampled = similarity.ivfpq_fit(emb, k=4, m=4, ksub=4, n_iter=1, sample_fraction=1.0)
+    assert sampled == _ref_lloyd(rows, 4, 4, 4, 1)
     with pytest.raises(ValueError, match="not divisible"):
         similarity.ivfpq_fit(emb, k=4, m=3, ksub=4, n_iter=1)
     with pytest.raises(ValueError, match="at least max"):
         similarity.ivfpq_fit(emb.limit(3), k=4, m=4, ksub=4, n_iter=1)
+    for k, m, ksub in ((0, 4, 4), (4, 0, 4), (4, 4, 0)):
+        with pytest.raises(ValueError, match="k, m and ksub must be >= 1"):
+            similarity.ivfpq_fit(emb, k=k, m=m, ksub=ksub, n_iter=1)
 
 
 def test_ivfpq_refine_recovers_exact_topk(spark):
@@ -484,7 +538,7 @@ def test_ivfpq_probe_all_equals_pq(spark):
     rows = [(i, [random.uniform(-1, 1) for _ in range(16)]) for i in range(80)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = emb.filter("vec_id % 20 = 0").selectExpr("vec_id AS query_id", "embedding AS query_vec")
-    coarse = similarity.kmeans_fit(emb, k=4, n_iter=1, dim=16)
+    coarse = similarity.kmeans_fit(emb, k=4, n_iter=1)
     books = similarity.pq_fit(emb, m=4, ksub=4, n_iter=1)
     full = similarity.pq_topk(emb, q, books, k=3)
     ivf = similarity.ivfpq_topk(emb, q, coarse, books, nprobe=4, k=3)

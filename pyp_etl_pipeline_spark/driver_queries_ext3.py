@@ -4553,25 +4553,6 @@ FROM canon
 
 
 # --------------------------------------------------------------------------
-# gr02: star-strategy connected components through the oracle gate
-# --------------------------------------------------------------------------
-
-def gr02_star_components(spark: SparkSession, sf: str) -> DataFrame:
-    """dd04's connected components run through the STAR strategy
-    (alternating large-star/small-star edge rewrites, Kiveris et al.) —
-    the O(log n)-rounds variant that survives skewed / high-diameter
-    graphs where hash-min's O(diameter) propagation keeps re-fanning a
-    viral node's neighbor list. Registered with the SAME recursive-CTE
-    transitive-closure twin as dd04, so the gate certifies the two
-    strategies produce identical components on real data (the pytest
-    equivalence property, now hash-certified)."""
-    from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
-
-    pairs = _dedup.shingle_pairs_jaccard(load_corpus(spark, sf, "documents"), threshold=0.5)
-    return _dedup.dup_clusters(pairs, strategy="star")
-
-
-# --------------------------------------------------------------------------
 # cf01: cascade filtering (cheap screen -> expensive gate)
 # --------------------------------------------------------------------------
 

@@ -196,14 +196,23 @@ def shingle_pairs_jaccard(
         .select("id_a", "id_b")
         .distinct()
     )
-    sets_ = docs.select("id", "sh")
+    return _exact_jaccard(cands, docs, docs, ["id_b"], threshold)
+
+
+def _exact_jaccard(
+    cands: DataFrame, sh_a: DataFrame, sh_b: DataFrame, b_keys: list[str], threshold: float
+) -> DataFrame:
+    """Verify candidate pairs with exact shingle Jaccard. Each side's
+    (id, sh) shingle set joins on ``id_a`` and on ``b_keys`` (``id_b``,
+    then any key ``sh_b`` carries too); pairs at or above ``threshold``
+    come out as (id_a, *b_keys, jaccard) rounded to 6 places."""
     return (
-        cands.join(sets_.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(sets_.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+        cands.join(sh_a.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+        .join(sh_b.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), *b_keys[1:]), b_keys)
         .withColumn("shared", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn("jaccard", F.col("shared") / (F.size("sh_a") + F.size("sh_b") - F.col("shared")))
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+        .select("id_a", *b_keys, F.round("jaccard", 6).alias("jaccard"))
     )
 
 
@@ -333,15 +342,7 @@ def minhash_lsh_pairs(
     )
 
     docs = df.select(F.col(id_col).alias("id"), word_shingles(text_col, n).alias("sh"))
-    verified = (
-        cands.join(docs.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(docs.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        .withColumn("shared", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard", F.col("shared") / (F.size("sh_a") + F.size("sh_b") - F.col("shared")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return verified
+    return _exact_jaccard(cands, docs, docs, ["id_b"], threshold)
 
 
 def save_minhash_index(
@@ -446,17 +447,7 @@ def minhash_lsh_pairs_incremental(
     sh_b = sh_old.withColumn("source", F.lit("corpus")).unionByName(
         sh_new.withColumn("source", F.lit("batch"))
     )
-    return (
-        cands.join(sh_new.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(
-            sh_b.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), "source"),
-            ["id_b", "source"],
-        )
-        .withColumn("shared", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard", F.col("shared") / (F.size("sh_a") + F.size("sh_b") - F.col("shared")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "source", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _exact_jaccard(cands, sh_new, sh_b, ["id_b", "source"], threshold)
 
 
 def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -776,135 +767,23 @@ def decontaminate_spans(
 
 # ------------------------------------------------------------------ clusters
 
-def _star_components(edges: DataFrame, max_iterations: int, strict: bool) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", alg. 2) over a
-    BIDIRECTIONAL distinct edge list with columns (src, dst).
-
-    Each round rewrites the edge set:
-
-    - large-star: every node's strictly LARGER neighbors re-attach to
-      the minimum of its closed neighborhood — long chains fold toward
-      the minimum and a hot node sheds its larger neighbors, which is
-      what bounds the per-round fan-out on skewed components;
-    - small-star: every node's smaller neighbors (and the node itself)
-      re-attach to its minimum smaller neighbor, producing canonical
-      (node > root) star edges.
-
-    Both operations preserve connectivity; the fixpoint is a forest of
-    stars (node -> component minimum) reached in O(log n) rounds. The
-    convergence check tests the star-forest property DIRECTLY — no node
-    appears as both a child (u) and a parent (v), AND every child has
-    exactly one parent — one count over the union of the two violation
-    sets per round, instead of the former symmetric
-    exceptAll-count set equality against the previous round (two
-    shuffle-heavy exceptAlls per round, and it could only see the
-    fixpoint one full round AFTER the star forest appeared). A star
-    forest is provably stable under both rewrites (safe early stop);
-    a non-forest that happened to equal its rewrite would raise loudly
-    under ``strict`` rather than mislabel (Kiveris et al. prove
-    fixpoints are exactly star forests, so the branch is theoretical).
-    Each round's result is lazily ``localCheckpoint``-ed and
-    materialized by that count, which also truncates the per-iteration
-    lineage exactly like the hashmin loop."""
-    nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
-    # canonical orientation: one row per undirected edge, larger -> smaller
-    e = (
-        edges.filter(F.col("src") > F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .localCheckpoint(eager=True)
-    )
-    converged = e.isEmpty()  # no non-self edges: every node is its own root
-    rounds = 0
-    while not converged and rounds < max_iterations:
-        bi = e.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-            e.select(F.col("v").alias("a"), F.col("u").alias("b"))
-        )
-        mins = bi.groupBy("a").agg(F.least(F.min("b"), F.col("a")).alias("m"))
-        large = (
-            bi.filter(F.col("b") > F.col("a"))
-            .join(mins, "a")
-            .select(F.col("b").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        smins = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            large.join(smins, "u")
-            .select(F.col("v").alias("node"), "m")
-            .unionByName(smins.select(F.col("u").alias("node"), "m"))
-            .filter(F.col("node") != F.col("m"))
-            .select(F.col("node").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # True star-forest test, BOTH conditions: (a) no child is also a
-        # parent, and (b) every child has exactly one parent. (b) is not
-        # implied by (a): edges {u->v1, u->v2} pass (a) but are NOT a
-        # fixpoint — the next large-star round re-attaches v2 to v1
-        # through u, so stopping here splits a connected component (the
-        # {5-7,5-8,6-7,6-1,4-8,4-2} counterexample, pinned in
-        # test_sampling_clusters). One count job over the union of both
-        # violation sets; it also materializes the lazy checkpoint above.
-        parents = small.select(F.col("v").alias("u")).distinct()
-        multi_parent = (
-            small.groupBy("u")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .select("u")
-        )
-        non_star = (
-            small.join(parents, "u", "left_semi").select("u").unionByName(multi_parent).count()
-        )
-        e = small
-        rounds += 1
-        if non_star == 0:
-            converged = True
-    if not converged and strict:
-        raise RuntimeError(
-            f"dup_clusters(strategy='star') did not converge within "
-            f"max_iterations={max_iterations}; edge rewrites are mid-flight and "
-            "cluster ids would be wrong. Raise max_iterations (O(log n) rounds "
-            "suffice) or pass strict=False to accept partial labels."
-        )
-    roots = e.groupBy(F.col("u").alias("node")).agg(F.min("v").alias("root"))
-    return nodes.join(roots, "node", "left").select(
-        F.col("node").alias("doc_id"),
-        F.coalesce(F.col("root"), F.col("node")).alias("cluster_id"),
-    )
-
-
 def dup_clusters(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iterations: int = 20,
     strict: bool = True,
-    strategy: str = "hashmin",
 ) -> DataFrame:
     """Connected components over a near-dup pair list: every doc gets
     ``cluster_id`` = the smallest id reachable through the pair graph —
     the step that turns pairwise candidates (dd02/dd03/sh01/nd01) into
     actual keep-one-per-cluster dedup decisions.
 
-    Two strategies, identical output (property-tested equivalent):
-
-    - ``strategy="hashmin"`` (default): label propagation — each round
-      every node adopts the minimum label among itself and its
-      neighbors; converges in O(diameter) rounds. Near-dup graphs are
-      overwhelmingly tiny cliques and short chains (diameter <= 3-4 in
-      practice), so the loop exits in a few rounds via the AQE-sized
-      shuffles; ``max_iterations`` bounds pathological chains.
-    - ``strategy="star"``: alternating large-star/small-star edge
-      rewrites (Kiveris et al., "Connected Components in MapReduce and
-      Beyond"). Converges in O(log n) rounds REGARDLESS of diameter,
-      and — the scale property hash-min lacks — each large-star round
-      re-attaches a hot node's larger neighbors directly to the
-      component minimum, so one viral near-dup cluster cannot keep
-      fanning its full neighbor list through every round. The per-round
-      cost is ~2x hash-min (two groupBy+join phases vs one), which is
-      why tiny-diameter dedup graphs default to hash-min and skewed /
-      high-diameter graphs should pass ``strategy="star"``.
+    Hash-min label propagation: each round every node adopts the minimum
+    label among itself and its neighbors, so it converges in O(diameter)
+    rounds. Near-dup graphs are overwhelmingly tiny cliques and short
+    chains (diameter <= 3-4 in practice), so the loop exits in a few
+    rounds; a long chain needs ``max_iterations`` raised to its diameter.
 
     Round shape (2 shuffles/round, 1 action per TWO rounds): neighbor
     labels are emitted as messages (edge join), unioned with each node's
@@ -928,16 +807,12 @@ def dup_clusters(
     ``RuntimeError`` instead of silently returning wrong clusters;
     ``strict=False`` returns the partial labels for callers that want
     bounded-cost approximate clustering. Verifying convergence takes at
-    least one propagation round beyond hashmin's free init round, so
-    ``strict=True`` with ``strategy="hashmin"`` requires
-    ``max_iterations >= 2`` (ValueError otherwise — a strict 1-round
-    budget could never be certified even when init already hit the
-    fixpoint; the star strategy checks convergence inside every round
-    and has no such floor).
+    least one propagation round beyond the free init round, so
+    ``strict=True`` requires ``max_iterations >= 2`` (ValueError
+    otherwise — a strict 1-round budget could never be certified even
+    when init already hit the fixpoint).
     """
-    if strategy not in ("hashmin", "star"):
-        raise ValueError(f"unknown strategy {strategy!r}: expected 'hashmin' or 'star'")
-    if strict and strategy == "hashmin" and max_iterations < 2:
+    if strict and max_iterations < 2:
         raise ValueError(
             "strict=True needs max_iterations >= 2: convergence can only be "
             "verified by a propagation round after the init round"
@@ -956,8 +831,6 @@ def dup_clusters(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if strategy == "star":
-        return _star_components(edges, max_iterations, strict)
 
     label_null = F.lit(None).cast(edges.schema["src"].dataType)
 
@@ -966,7 +839,11 @@ def dup_clusters(
         own=NULL so min(own) surfaces each node's OWN value untouched —
         'own' rides the aggregate as the pre-batch label for the
         changed-label convergence check, at zero extra shuffles."""
-        msgs = edges.join(lbls, edges.src == lbls.node).select(
+        # A fixed sort-merge join: left to AQE, this join became a
+        # broadcast join at run time on some runs and not others, and
+        # each such switch added a job to the convergence batch, so the
+        # job count of one input varied from run to run.
+        msgs = edges.join(lbls.hint("merge"), edges.src == lbls.node).select(
             F.col("dst").alias("node"), "label", label_null.alias("own")
         )
         return (

@@ -711,6 +711,27 @@ def ivfpq_fit(
     return _lloyd(vectors, k, m, ksub, n_iter, id_col, vec_col, sample_fraction, "ivfpq_fit", "ivfpq-fit-v1")
 
 
+def _pq_codes(
+    vectors: DataFrame, xm_sql: str, codebooks: list[list[list[int]]], *keep: Column
+) -> DataFrame:
+    """(*keep, codes): per subspace of the micro vector ``xm_sql`` the
+    nearest codebook centroid. Each sub-vector slice is projected as its
+    own column first, so the per-centroid lambdas of ``_nearest_centroid``
+    read it instead of re-slicing (no CSE inside lambdas)."""
+    dsub = len(codebooks[0][0])
+    sliced = vectors.select(
+        *keep,
+        *[
+            F.expr(f"slice({xm_sql}, {s * dsub + 1}, {dsub})").alias(f"__sub{s}")
+            for s in range(len(codebooks))
+        ],
+    )
+    codes = F.array(
+        *[_nearest_centroid(f"__sub{s}", book)["c"] for s, book in enumerate(codebooks)]
+    )
+    return sliced.select(*sliced.columns[: len(keep)], codes.alias("codes"))
+
+
 def pq_encode(
     vectors: DataFrame,
     codebooks: list[list[list[int]]],
@@ -721,20 +742,7 @@ def pq_encode(
     integer L2 on micro-units, ties to the smaller code, the
     ``_nearest_centroid`` contract). Map-only: codebooks ride inline as
     literals; one pass over the corpus, no shuffle, no join."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    xm_sql = _sql_micro_vec(_bt(vec_col))
-    sliced = vectors.select(
-        F.col(id_col).alias("id"),
-        *[
-            F.expr(f"slice({xm_sql}, {s * dsub + 1}, {dsub})").alias(f"__sub{s}")
-            for s in range(m)
-        ],
-    )
-    codes = F.array(
-        *[_nearest_centroid(f"__sub{s}", codebooks[s])["c"] for s in range(m)]
-    )
-    return sliced.select("id", codes.alias("codes"))
+    return _pq_codes(vectors, _sql_micro_vec(_bt(vec_col)), codebooks, F.col(id_col).alias("id"))
 
 
 def _adc_luts(qm: DataFrame, codebooks: list[list[list[int]]]) -> DataFrame:
@@ -835,21 +843,13 @@ def ivfpq_topk(
     ``_nearest_centroid`` contract throughout; distances are exact
     integers, so ann06's oracle replays every stage bit-for-bit.
     """
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-
     xm_sql = _sql_micro_vec(_bt(vec_col))
-    enc = vectors.select(
+    enc = _pq_codes(
+        vectors,
+        xm_sql,
+        codebooks,
         F.col(id_col).alias("neighbor_id"),
         _nearest_centroid(xm_sql, coarse)["c"].alias("vcid"),
-        *[F.expr(f"slice({xm_sql}, {s * dsub + 1}, {dsub})").alias(f"__sub{s}") for s in range(m)],
-    )
-    enc = enc.select(
-        "neighbor_id",
-        "vcid",
-        F.array(
-            *[_nearest_centroid(f"__sub{s}", codebooks[s])["c"] for s in range(m)]
-        ).alias("codes"),
     )
 
     qm = queries.select(F.col(query_id_col).alias("query_id"), _micro_vec(query_vec_col).alias("__qm"))
@@ -1025,30 +1025,11 @@ def hard_negative_mining(
         .filter(F.col("cosine").isNotNull())
     )
     same = F.col("__nl").eqNullSafe(F.col("__ql"))
-    w_neg = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    neg = (
-        scored.filter(~same)
-        .withColumn("match_rank", F.row_number().over(w_neg))
-        .filter(F.col("match_rank") <= k_neg)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.lit("neg").alias("role"),
-            F.col("match_rank").cast("long").alias("match_rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
+    cosine6 = F.round("cosine", 6).alias("cosine")
+    neg = _topk(scored.filter(~same), k_neg, F.desc("cosine"), cosine6)
+    pos = _topk(scored.filter(same), 1, F.asc("cosine"), cosine6)
+    return (
+        neg.withColumn("role", F.lit("neg"))
+        .unionByName(pos.withColumn("role", F.lit("pos")))
+        .select("query_id", "neighbor_id", "role", F.col("rank").cast("long").alias("match_rank"), "cosine")
     )
-    w_pos = Window.partitionBy("query_id").orderBy(F.asc("cosine"), F.asc("neighbor_id"))
-    pos = (
-        scored.filter(same)
-        .withColumn("match_rank", F.row_number().over(w_pos))
-        .filter(F.col("match_rank") <= 1)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.lit("pos").alias("role"),
-            F.col("match_rank").cast("long").alias("match_rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
-    return neg.unionByName(pos)

@@ -141,10 +141,31 @@ def test_dup_clusters_exhaustion_partial_when_lenient(spark):
     assert set(out.values()) != {0}  # genuinely unconverged at 2 rounds
 
 
-def test_star_components_equivalent_to_hashmin(spark):
-    """large-star/small-star and hash-min must label identically on
-    random graphs, paths (worst diameter), stars (worst skew), cliques,
-    and disjoint mixtures."""
+def _union_find_min_labels(pairs):
+    """Reference components: every node of the pair graph labelled with
+    the minimum id in its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {node: find(node) for node in parent}
+
+
+def test_dup_clusters_matches_union_find(spark):
+    """Hash-min labels equal a pure-Python union-find's min-id labels on
+    random graphs, a path (worst diameter), a hub (worst skew), a clique,
+    a disjoint mixture with a self-loop, a hub fused with a chain, and
+    the ADVICE r13 multi-parent graph, which once split one component
+    in two."""
     import random
 
     cases = []
@@ -154,36 +175,35 @@ def test_star_components_equivalent_to_hashmin(spark):
         m = rng.randint(5, 80)
         cases.append([(rng.randrange(n), rng.randrange(n)) for _ in range(m)])
     cases.append([(i, i + 1) for i in range(25)])                    # path
-    cases.append([(0, i) for i in range(1, 30)])                     # star
+    cases.append([(0, i) for i in range(1, 30)])                     # hub
     cases.append([(a, b) for a in range(8) for b in range(a + 1, 8)])  # clique
     cases.append([(1, 2), (2, 3), (10, 11), (20, 20), (30, 31), (31, 32), (30, 32)])
+    cases.append([(0, i) for i in range(1, 200)] + [(199, 200), (200, 201), (201, 202)])
+    cases.append([(5, 7), (5, 8), (6, 7), (6, 1), (4, 8), (4, 2)])
 
     for pairs in cases:
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
-        hm = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(df, max_iterations=40).collect()}
-        st = {
-            r["doc_id"]: r["cluster_id"]
-            for r in dup_clusters(df, max_iterations=40, strategy="star").collect()
-        }
-        assert hm == st, f"divergence on pairs={pairs}"
+        got = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(df, max_iterations=40).collect()}
+        assert got == _union_find_min_labels(pairs), f"divergence on pairs={pairs}"
 
 
-def test_star_components_skewed_component(spark):
-    # one viral hub fused with a chain: the exact shape hash-min fans
-    # out badly on; star must still produce min-id labels
-    pairs = [(0, i) for i in range(1, 200)] + [(199, 200), (200, 201), (201, 202)]
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    out = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(df, strategy="star").collect()}
-    assert len(out) == 203
-    assert set(out.values()) == {0}
+def test_dup_clusters_propagation_join_is_sort_merge(spark):
+    """The propagation join runs as a sort-merge join, never as the
+    broadcast join AQE would otherwise switch it to at run time once the
+    label stage comes out small: that switch adds a job to the batch, so
+    one input's job count varied from run to run."""
+    from pyp_etl_pipeline_spark.plan_audit import capture_checkpoint_plans
 
-
-def test_dup_clusters_unknown_strategy_rejected(spark):
-    import pytest as _pytest
-
-    df = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with _pytest.raises(ValueError, match="unknown strategy"):
-        dup_clusters(df, strategy="bfs")
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(6)], "id_a long, id_b long")
+    stages: list[dict] = []
+    with capture_checkpoint_plans(stages):
+        dup_clusters(pairs).collect()
+    batches = [s["final"] for s in stages if "min(own" in s["analyzed"]]
+    assert batches
+    for plan in batches:
+        ran = plan.split("== Initial Plan ==")[0]
+        assert "SortMergeJoin" in ran
+        assert "BroadcastHashJoin" not in ran
 
 
 def test_mix_corpora_rates_and_determinism(spark):
@@ -631,39 +651,3 @@ def test_heavy_hitters_numeric_item_column(spark):
     assert out == {7: 80, 11: 15}
     dt = sketch.heavy_hitters(df, "user_id", k=10).schema["user_id"].dataType.simpleString()
     assert dt == "bigint"
-
-
-def test_star_components_detects_fixpoint_in_producing_round(spark):
-    """The r13 star-forest convergence check (no node appears as both
-    child and parent) sees the fixpoint in the round that PRODUCES the
-    star forest. Path 0-1-2 star-ifies in exactly one round, so a strict
-    1-round budget must now succeed (the old set-equality check needed a
-    second round just to observe small == e, and raised here)."""
-    df = spark.createDataFrame([(0, 1), (1, 2)], "id_a long, id_b long")
-    out = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dup_clusters(df, max_iterations=1, strategy="star").collect()
-    }
-    assert out == {0: 0, 1: 0, 2: 0}
-
-
-def test_star_components_multi_parent_child_is_not_a_fixpoint(spark):
-    """ADVICE r13 counterexample: after one round this graph's edge set
-    has a child with TWO distinct parents — no node is both child and
-    parent, so the incomplete r13 check declared convergence and split
-    the single connected component into clusters {1,5,6,7} / {2,4,8}.
-    The true star-forest test (every child has exactly one parent) must
-    keep iterating and label all seven nodes with cluster 1, identical
-    to hashmin."""
-    df = spark.createDataFrame(
-        [(5, 7), (5, 8), (6, 7), (6, 1), (4, 8), (4, 2)], "id_a long, id_b long"
-    )
-    star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dup_clusters(df, strategy="star").collect()
-    }
-    hashmin = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dup_clusters(df, strategy="hashmin").collect()
-    }
-    assert star == hashmin == {1: 1, 2: 1, 4: 1, 5: 1, 6: 1, 7: 1, 8: 1}

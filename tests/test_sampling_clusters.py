@@ -160,12 +160,22 @@ def _union_find_min_labels(pairs):
     return {node: find(node) for node in parent}
 
 
-def test_dup_clusters_matches_union_find(spark):
+def _assert_matches_union_find(spark, pairs):
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(df, max_iterations=40).collect()}
+    assert got == _union_find_min_labels(pairs), f"divergence on pairs={pairs}"
+    return got
+
+
+# The three tests below keep the names they had when dup_clusters also
+# offered a large-star/small-star strategy; their graphs now check the one
+# hash-min path against a pure-Python union-find.
+
+
+def test_star_components_equivalent_to_hashmin(spark):
     """Hash-min labels equal a pure-Python union-find's min-id labels on
-    random graphs, a path (worst diameter), a hub (worst skew), a clique,
-    a disjoint mixture with a self-loop, a hub fused with a chain, and
-    the ADVICE r13 multi-parent graph, which once split one component
-    in two."""
+    random graphs, a path (worst diameter), a hub (worst skew), a clique
+    and a disjoint mixture with a self-loop."""
     import random
 
     cases = []
@@ -178,13 +188,24 @@ def test_dup_clusters_matches_union_find(spark):
     cases.append([(0, i) for i in range(1, 30)])                     # hub
     cases.append([(a, b) for a in range(8) for b in range(a + 1, 8)])  # clique
     cases.append([(1, 2), (2, 3), (10, 11), (20, 20), (30, 31), (31, 32), (30, 32)])
-    cases.append([(0, i) for i in range(1, 200)] + [(199, 200), (200, 201), (201, 202)])
-    cases.append([(5, 7), (5, 8), (6, 7), (6, 1), (4, 8), (4, 2)])
 
     for pairs in cases:
-        df = spark.createDataFrame(pairs, "id_a long, id_b long")
-        got = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(df, max_iterations=40).collect()}
-        assert got == _union_find_min_labels(pairs), f"divergence on pairs={pairs}"
+        _assert_matches_union_find(spark, pairs)
+
+
+def test_star_components_skewed_component(spark):
+    # one viral hub fused with a chain: every node lands in cluster 0
+    pairs = [(0, i) for i in range(1, 200)] + [(199, 200), (200, 201), (201, 202)]
+    out = _assert_matches_union_find(spark, pairs)
+    assert len(out) == 203
+    assert set(out.values()) == {0}
+
+
+def test_star_components_multi_parent_child_is_not_a_fixpoint(spark):
+    """A graph with a child of two distinct parents, which once split one
+    component into {1,5,6,7} / {2,4,8}: all seven nodes get cluster 1."""
+    out = _assert_matches_union_find(spark, [(5, 7), (5, 8), (6, 7), (6, 1), (4, 8), (4, 2)])
+    assert out == {1: 1, 2: 1, 4: 1, 5: 1, 6: 1, 7: 1, 8: 1}
 
 
 def test_dup_clusters_propagation_join_is_sort_merge(spark):

@@ -18,9 +18,10 @@ HuggingFace/SentencePiece BPE algorithm), expressed as DataFrame plans:
 Per merge the cluster does one vocab-sized shuffle plus a 1-row
 collect (the argmax pair) — n_merges small jobs over a dimension-sized
 relation, which is exactly how industrial distributed BPE trainers
-shape the work. Symbol sequences re-anchor with ``localCheckpoint``
-each step so plan lineage (and Catalyst analysis cost) stays constant
-across merges instead of nesting n folds deep.
+shape the work. Each merge's rewritten sequences are anchored with a
+lazy ``localCheckpoint`` that the next merge's argmax collect fills, so
+plan lineage (and Catalyst analysis cost) stays one fold deep across
+merges instead of nesting n folds deep, at no extra job per merge.
 
 Determinism: counts are integers, the argmax order is total, and the
 fold is a pure function — the same corpus yields the same merge table
@@ -106,7 +107,8 @@ def bpe_fit(
             break
         a, b = top[0]["a"], top[0]["b"]
         merges.append((a, b))
-        seqs = seqs.withColumn("t", _merge_fold(a, b)).localCheckpoint()
+        # lazy: the next merge's collect fills it, so lineage stays one fold deep
+        seqs = seqs.withColumn("t", _merge_fold(a, b)).localCheckpoint(eager=False)
     return merges, seqs
 
 

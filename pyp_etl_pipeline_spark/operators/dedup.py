@@ -793,11 +793,13 @@ def dup_clusters(
     over the same aggregate, not an extra join. Rounds run in batches of
     two per check (labels are monotone non-increasing, so
     unchanged-over-batch == fixpoint), and round 1 rides the initial
-    node-dedup aggregate. The single ``count()`` action per batch
-    also materializes that batch's lazy ``localCheckpoint``:
-    the label relation appears twice in the next round's plan (message
-    join + self union), so without lineage truncation the analyzed plan
-    doubles per iteration and planning itself OOMs on deep chains. On a
+    node-dedup aggregate. Each batch ends in a lazy ``localCheckpoint``
+    plus one ``count()``: under AQE the checkpoint call itself runs the
+    batch's shuffle stages, and the ``count()`` runs the final stage,
+    which stores the checkpoint blocks the next batch reads. The label
+    relation appears twice in the next round's plan (message join + self
+    union), so without lineage truncation the analyzed plan doubles per
+    iteration and planning itself OOMs on deep chains. On a
     production cluster with executor churn, swap in a reliable
     ``checkpoint`` directory — the loop shape is identical.
 
@@ -818,10 +820,8 @@ def dup_clusters(
             "verified by a propagation round after the init round"
         )
     a, b = F.col(a_col), F.col(b_col)
-    # Materialize the pair list BEFORE the union below references it twice:
-    # pairs is typically the output of a whole candidate-generation pipeline
-    # (shingle join / LSH), and without this checkpoint both union branches
-    # re-execute that entire pipeline (measured ~2x the dd04 runtime).
+    # anchored: both union branches below read the pair list, typically a
+    # whole candidate pipeline; unanchored, dd04's warm build ran ~0.3 s slower
     pairs = pairs.select(a.alias("pa"), b.alias("pb")).localCheckpoint(eager=True)
     a, b = F.col("pa"), F.col("pb")
     # undirected edge list so propagation runs both ways
@@ -855,10 +855,9 @@ def dup_clusters(
     # Round 1 rides the node-dedup aggregate for free: instead of
     # DISTINCT-then-propagate, initialize each node's label directly to
     # min(self, neighbors) — same single shuffle as the plain DISTINCT.
-    labels = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.least(F.min("dst"), F.col("node")).alias("label"))
-        .localCheckpoint(eager=True)
+    # Not anchored: only the first batch reads it, inside one plan.
+    labels = edges.groupBy(F.col("src").alias("node")).agg(
+        F.least(F.min("dst"), F.col("node")).alias("label")
     )
     rounds_done = 1
     converged = False

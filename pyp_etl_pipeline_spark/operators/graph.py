@@ -45,38 +45,21 @@ def pagerank(
     iterations."""
     if not 0 <= damping_pct <= 100:
         raise ValueError(f"damping_pct must be in [0,100], got {damping_pct}")
-    # anchor the working relations: edges feed the degree table plus one
-    # join per iteration, and each iteration's ranks feed the next — a
-    # lazy chain would re-derive the edge list (scans + distincts) once
-    # per consumer and nest rank lineage n_iter deep. localCheckpoint
-    # materializes them across the cluster (distributed, not driver).
-    #
-    # The loop-invariant work is hoisted once: the out-degree join rides
-    # with the edge list (it never changes), so each iteration pays one
-    # edge-rank join + the contribution sum instead of two joins. Both
-    # hoisted relations are explicitly hash-partitioned BEFORE their
-    # checkpoint: a numbered repartition is exempt from AQE coalescing,
-    # so the stored RDD keeps full parallelism for every per-iteration
-    # scan (checkpointed RDDs report UnknownPartitioning to Catalyst —
-    # measured, plans/r13/gr01_* — so this buys parallel map sides, not
-    # exchange elimination). The count is conf-derived (scale-adaptive),
-    # not a constant.
-    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # Anchor the edge list only: it feeds the degree table, the node set
+    # and each round's join. No action runs inside the loop, so the rounds
+    # run as one plan whose size grows linearly with n_iter, and exchange
+    # reuse shares the repeated node/degree work within it.
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .repartition(n_part, "node")
-        .localCheckpoint()
     )
     ncnt = nodes.agg(F.count("*").alias("__n"))
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    e_deg = e.join(deg, "src").repartition(n_part, "src").localCheckpoint()
+    e_deg = e.join(deg, "src")
     init = F.expr(f"CAST({MASS} AS BIGINT) DIV __n")
-    pr = nodes.crossJoin(F.broadcast(ncnt)).select(
-        "node", init.alias("pr"), init.alias("__base_unit")
-    )
+    pr = nodes.crossJoin(F.broadcast(ncnt)).select("node", init.alias("pr"))
     keep = damping_pct
     for _ in range(n_iter):
         contrib = (
@@ -93,11 +76,9 @@ def pagerank(
                     F.expr(f"({100 - keep} * (CAST({MASS} AS BIGINT) DIV __n)) DIV 100")
                     + F.expr(f"({keep} * coalesce(s, CAST(0 AS BIGINT))) DIV 100")
                 ).alias("pr"),
-                F.expr(f"CAST({MASS} AS BIGINT) DIV __n").alias("__base_unit"),
             )
         )
-        pr = pr.localCheckpoint()
-    return pr.select("node", "pr")
+    return pr
 
 
 def triangle_stats(
@@ -127,7 +108,7 @@ def triangle_stats(
         # anchored: e feeds degree, the orientation join and (via fwd)
         # three more consumers — without the checkpoint Catalyst clones
         # the whole dedup subtree per consumer and the plan re-derives
-        # the edge set ~6x (the gr01 anchoring precedent)
+        # the edge set ~6x
         .localCheckpoint()
     )
     deg = (
@@ -143,11 +124,12 @@ def triangle_stats(
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
+    # anchored: both wedge sides and the closing join read it (unanchored A/B runs were mixed)
     fwd = ed.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint()  # consumed by both wedge sides and the closing join
+    ).localCheckpoint()
     x = fwd.select(F.col("u"), F.col("v"), F.col("dv"))
     y = fwd.select(F.col("u"), F.col("v").alias("w"), F.col("dv").alias("dw"))
     # out-neighbor pairs per source, ordered by the SAME (degree, node)
@@ -217,6 +199,7 @@ def bfs_levels(
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
         .select("node", F.lit(0).cast("long").alias("dist"))
+        # every hop's anti-join re-reads the seeds; unanchored, bfs01 ran 31 jobs, not 29
         .localCheckpoint()
     )
     frontier = dist.select("node")

@@ -227,6 +227,25 @@ def test_dup_clusters_propagation_join_is_sort_merge(spark):
         assert "BroadcastHashJoin" not in ran
 
 
+def test_dup_clusters_anchors_pairs_edges_and_each_batch(spark):
+    """Two eager anchors (pair list, edge list) plus one lazy anchor per
+    convergence batch: the initial label relation is read only by the
+    first batch, inside one plan, so it is not checkpointed. On a 7-node
+    chain the labels settle at round 6, the batch ending at round 7
+    still sees that change, and the batch ending at round 9 certifies
+    the fixpoint: 4 batches."""
+    from pyp_etl_pipeline_spark.plan_audit import capture_checkpoint_plans
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(6)], "id_a long, id_b long")
+    stages: list[dict] = []
+    with capture_checkpoint_plans(stages):
+        out = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()}
+    assert out == {i: 0 for i in range(7)}
+    batches = sum("min(own" in s["analyzed"] for s in stages)
+    assert batches == 4
+    assert len(stages) == 2 + batches
+
+
 def test_mix_corpora_rates_and_determinism(spark):
     d = spark.range(0, 600).select(F.col("id").alias("doc_id"))
     srcs = [("a", d, 2.0), ("b", d, 0.5), ("c", d, 0.0)]
@@ -420,6 +439,55 @@ def test_pagerank_integer_exact_star_graph(spark):
     # hub dominates after 2 iterations too
     pr2 = {r["node"]: r["pr"] for r in graph.pagerank(df, n_iter=2).collect()}
     assert pr2[0] > pr2[1]
+
+
+def _pagerank_reference(edges, n_iter, keep=85):
+    """Pure-Python PageRank under the operator's integer contract:
+    ``mass DIV N`` start, ``pr DIV deg`` per edge, next rank
+    ``((100 - keep) * unit) DIV 100 + (keep * sum) DIV 100``."""
+    from collections import Counter
+
+    nodes = {n for edge in edges for n in edge}
+    unit = 10**12 // len(nodes)
+    deg = Counter(src for src, _ in edges)
+    pr = dict.fromkeys(nodes, unit)
+    for _ in range(n_iter):
+        sums = Counter()
+        for src, dst in edges:
+            sums[dst] += pr[src] // deg[src]
+        pr = {n: ((100 - keep) * unit) // 100 + (keep * sums[n]) // 100 for n in nodes}
+    return pr
+
+
+def test_pagerank_matches_python_reference(spark):
+    """Exact ranks equal the pure-Python reference for 0, 1, 3 and 5
+    rounds on a random directed graph with dangling nodes (50, 51: no
+    out-edges), a source-only node (60: no in-edges) and parallel edges."""
+    import random
+
+    from pyp_etl_pipeline_spark.operators import graph
+
+    rng = random.Random(1201)
+    edges = [(rng.randrange(12), rng.randrange(12)) for _ in range(40)]
+    edges += [edges[0], edges[1], (3, 50), (7, 50), (1, 51), (60, 2)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    for n_iter in (0, 1, 3, 5):
+        got = {r["node"]: r["pr"] for r in graph.pagerank(df, n_iter=n_iter).collect()}
+        assert got == _pagerank_reference(edges, n_iter), n_iter
+
+
+@pytest.mark.parametrize("n_iter", [1, 3])
+def test_pagerank_anchors_only_the_edge_list(spark, n_iter):
+    """One checkpoint whatever the round count: the edge list is anchored
+    and the rounds run as one plan."""
+    from pyp_etl_pipeline_spark.operators import graph
+    from pyp_etl_pipeline_spark.plan_audit import capture_checkpoint_plans
+
+    df = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long")
+    stages: list[dict] = []
+    with capture_checkpoint_plans(stages):
+        graph.pagerank(df, n_iter=n_iter).collect()
+    assert len(stages) == 1
 
 
 def test_hll_distinct_accuracy_and_determinism(spark):

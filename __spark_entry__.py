@@ -6,10 +6,12 @@ validate -> broadcast exact join -> band routing -> rollup) at sf0.001.
 SURVEY.md §2 with DuckDB oracle twins (see
 ``pyp_etl_pipeline_spark/driver_queries*.py``).
 
-Python workers deserialize pandas-UDF / mapInPandas / stateful functions
-by importing their defining module, and the harness may run with a cwd
-outside this repo — so the package is shipped to workers via
-``addPyFile`` (a zip built lazily, added once per SparkContext).
+The harness may run with a cwd outside this repo, so Python workers
+cannot import the package from the driver's path. Every operator whose
+worker-side code imports it ships the package first through
+``session.ship_package`` (``addPyFile`` of a zip, once per
+SparkContext); ``_ensure_workers_can_import`` is that function under
+the name benchmark and tool scripts call.
 """
 
 from __future__ import annotations
@@ -24,47 +26,16 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 from pyp_etl_pipeline_spark import driver_queries_ext as _reg  # noqa: E402
-
-_PKG_ZIP: str | None = None
-
-
-def _ensure_workers_can_import(spark: SparkSession) -> None:
-    """Make ``pyp_etl_pipeline_spark`` importable inside Python workers
-    regardless of the harness cwd."""
-    global _PKG_ZIP
-    sc = spark.sparkContext
-    if getattr(sc, "_pyp_pkg_added", False):
-        return
-    if _PKG_ZIP is None or not os.path.exists(_PKG_ZIP):
-        import shutil  # noqa: PLC0415
-        import tempfile  # noqa: PLC0415
-
-        base = os.path.join(tempfile.gettempdir(), f"pyp_etl_pipeline_spark_pkg_{os.getpid()}")
-        _PKG_ZIP = shutil.make_archive(base, "zip", root_dir=REPO, base_dir="pyp_etl_pipeline_spark")
-    try:
-        sc.addPyFile(_PKG_ZIP)
-    except Exception:  # noqa: BLE001 — already added / context quirk; imports may still work via cwd
-        pass
-    sc._pyp_pkg_added = True
+from pyp_etl_pipeline_spark.session import ship_package as _ensure_workers_can_import  # noqa: E402, F401
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    _ensure_workers_can_import(spark)
     return _reg.core.flagship_band_rollup(spark, "/root/testdata/sf0.001")
 
 
-def _wrap(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_workers_can_import(spark)
-        return fn(spark, sf_dir)
-
-    wrapped.__name__ = getattr(fn, "__name__", "query")
-    return wrapped
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: _wrap(fn) for name, fn in _reg.queries().items()}
+    return _reg.queries()
 
 
 def oracle_sql() -> dict[str, str]:

@@ -18,7 +18,13 @@ from pyp_etl_pipeline_spark import driver_queries_ext4 as _ext4
 from pyp_etl_pipeline_spark.functions import scoring
 from pyp_etl_pipeline_spark.operators import dedup, resolve, similarity, textan, windows
 from pyp_etl_pipeline_spark.operators.similarity import _hyperplanes
-from pyp_etl_pipeline_spark.tables import load_corpus, load_corpus_unique, load_table, scratch_path
+from pyp_etl_pipeline_spark.tables import (
+    load_corpus,
+    load_corpus_unique,
+    load_table,
+    scratch_path,
+    synth_media,
+)
 
 
 # --------------------------------------------------------------------------
@@ -1795,31 +1801,17 @@ def mm06_audio_features(spark: SparkSession, sf: str) -> DataFrame:
     feature analytically predictable from doc_id, so the DuckDB twin
     recomputes ZCR/peak/RMS/duration in closed form — an endianness,
     sign, or off-by-one bug in the PCM path breaks the hash."""
-    import pandas as pd  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT, decode_features  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.binary_ops import decode_features  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.codecs import wav_encode_pcm16  # noqa: PLC0415
 
     d = load_table(spark, sf, "documents").select("doc_id").filter(F.col("doc_id") % 2 == 1)
-    repo_root = REPO_ROOT
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        k = 1 + i % 7
+        n = 100 + i % 50
+        return wav_encode_pcm16([(((j * k) % 256) - 128) * 64 for j in range(n)], 8000)
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.codecs import wav_encode_pcm16  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                k = 1 + i % 7
-                n = 100 + i % 50
-                samples = [(((j * k) % 256) - 128) * 64 for j in range(n)]
-                payloads.append(wav_encode_pcm16(samples, 8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     out = decode_features(media)
     return out.select(
         "media_id",
@@ -2237,8 +2229,11 @@ def pp01_pretraining_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     # explode, its per-doc left-join base, and the final anti-join) —
     # without a checkpoint each consumer re-runs the language gate +
     # Gopher gate + fingerprint groupBy over the whole corpus (3 extra
-    # passes in the executed plan). Lazy localCheckpoint materializes it
-    # once INSIDE the timed action (r13 optimization; the wave-1 pattern).
+    # passes in the executed plan). The lazy localCheckpoint materializes
+    # it once, but not inside the action: under AQE the
+    # localCheckpoint(eager=False) call itself runs the survivor set's
+    # shuffle stages (the fingerprint groupBy) while the DataFrame is
+    # built.
     corpus = d3.filter(F.col("doc_id") % 25 != 0).localCheckpoint(eager=False)
     # min_overlap=5: the synthetic corpus draws from a tiny vocabulary,
     # so single-3-gram collisions with the eval slice are ubiquitous —

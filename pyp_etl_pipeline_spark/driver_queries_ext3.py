@@ -21,7 +21,13 @@ from pyp_etl_pipeline_spark.driver_queries import J09_SQL, j09_merge_actions
 from pyp_etl_pipeline_spark.functions import text, validation
 from pyp_etl_pipeline_spark.functions.aggregates import exact_avg as _exact_avg
 from pyp_etl_pipeline_spark.functions.aggregates import exact_sum as _exact_sum
-from pyp_etl_pipeline_spark.tables import load_corpus, load_corpus_unique, load_table, scratch_path
+from pyp_etl_pipeline_spark.tables import (
+    load_corpus,
+    load_corpus_unique,
+    load_table,
+    scratch_path,
+    synth_media,
+)
 
 # --------------------------------------------------------------------------
 # F3/F4 name + email validation
@@ -670,40 +676,22 @@ def mm02_media_decode(spark: SparkSession, sf: str) -> DataFrame:
     twin computes every feature analytically from doc_id, so a decoder
     bug (wrong stride, wrong endianness, off-by-one scanline) breaks the
     hash match."""
-    import pandas as pd  # noqa: PLC0415
-
     from pyp_etl_pipeline_spark.multimodal.binary_ops import decode_features  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
+        png_encode_gray,
+        wav_encode_pcm16,
+    )
 
     d = load_table(spark, sf, "documents").select("doc_id")
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT  # noqa: PLC0415
+    def encode(i):
+        if i % 2 == 0:
+            return png_encode_gray(1 + i % 16, 1 + i % 8, i % 256)
+        k = 1 + i % 7
+        n = 100 + i % 50
+        return wav_encode_pcm16([(((j * k) % 256) - 128) * 64 for j in range(n)], 8000)
 
-    repo_root = REPO_ROOT
-
-    def synth(batches):
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-            png_encode_gray,
-            wav_encode_pcm16,
-        )
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                if i % 2 == 0:
-                    payloads.append(png_encode_gray(1 + i % 16, 1 + i % 8, i % 256))
-                else:
-                    k = 1 + i % 7
-                    n = 100 + i % 50
-                    samples = [(((j * k) % 256) - 128) * 64 for j in range(n)]
-                    payloads.append(wav_encode_pcm16(samples, 8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     out = decode_features(media)
     return out.select(
         "media_id",
@@ -740,31 +728,11 @@ def mm03_jpeg_decode(spark: SparkSession, sf: str) -> DataFrame:
     analytically from doc_id, so a marker-walk or entropy-decoder bug
     (wrong dims, wrong category extend, bad byte unstuffing) breaks the
     hash match."""
-    import pandas as pd  # noqa: PLC0415
-
     from pyp_etl_pipeline_spark.multimodal.binary_ops import decode_features  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.codecs import jpeg_encode_gray  # noqa: PLC0415
 
     d = load_table(spark, sf, "documents").select("doc_id")
-
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT  # noqa: PLC0415
-
-    repo_root = REPO_ROOT
-
-    def synth(batches):
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.codecs import jpeg_encode_gray  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = [
-                jpeg_encode_gray(1 + int(i) % 24, 1 + int(i) % 12, int(i) % 256)
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, lambda i: jpeg_encode_gray(1 + i % 24, 1 + i % 12, i % 256))
     out = decode_features(media)
     return out.select(
         "media_id",
@@ -794,14 +762,9 @@ def mm04_frame_sample_plan(spark: SparkSession, sf: str) -> DataFrame:
     timestamp at a 1s cadence. The DuckDB twin reproduces the frame grid
     arithmetically, so an encoder/box-walk disagreement (wrong timescale
     math, fixed-point dims misread, truncated box) breaks the match."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.binary_ops import frame_sample_decoded  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.codecs import mp4_encode  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import (  # noqa: PLC0415
-        REPO_ROOT,
-        frame_sample_decoded,
-    )
-
-    repo_root = REPO_ROOT
     # a doc with unknown length has no synthesizable duration (and NULL
     # n_chars would reach int() inside the Arrow batch) — both sides
     # restrict the plan to docs with a known length
@@ -810,26 +773,15 @@ def mm04_frame_sample_plan(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_id", "n_chars")
         .filter(F.col("n_chars").isNotNull())
     )
-
-    def synth(batches):
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.codecs import mp4_encode  # noqa: PLC0415
-
-        for pdf in batches:
-            rows = {"media_id": [], "kind": [], "payload": []}
-            for i, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                i = int(i)
-                rows["media_id"].append(i)
-                rows["kind"].append(["image", "audio", "video"][i % 3])
-                rows["payload"].append(
-                    mp4_encode(640, 480, int(n_chars) * 10) if i % 3 == 2 else None
-                )
-            yield pd.DataFrame(rows)
-
-    media = d.mapInPandas(synth, "media_id long, kind string, payload binary")
+    media = synth_media(
+        d, lambda i, n_chars: mp4_encode(640, 480, n_chars * 10) if i % 3 == 2 else None
+    ).withColumn(
+        "kind",
+        F.element_at(
+            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
+            (F.pmod("media_id", F.lit(3)) + 1).cast("int"),
+        ),
+    )
     return frame_sample_decoded(media, every_ms=1000)
 
 
@@ -850,31 +802,11 @@ def mm05_mp4_metadata(spark: SparkSession, sf: str) -> DataFrame:
     DuckDB twin computes every value analytically from doc_id, so any
     box-walk bug (offset drift, wrong version layout, fixed-point
     misread) breaks the hash match."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.binary_ops import decode_features  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.codecs import mp4_encode  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import (  # noqa: PLC0415
-        REPO_ROOT,
-        decode_features,
-    )
-
-    repo_root = REPO_ROOT
     d = load_table(spark, sf, "documents").select("doc_id")
-
-    def synth(batches):
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.codecs import mp4_encode  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = [
-                mp4_encode(16 + int(i) % 1904, 16 + int(i) % 1064, 1 + int(i) % 600000)
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, lambda i: mp4_encode(16 + i % 1904, 16 + i % 1064, 1 + i % 600000))
     return decode_features(media).select(
         "media_id",
         "format",
@@ -964,40 +896,16 @@ def mm07_mjpeg_frames(spark: SparkSession, sf: str) -> DataFrame:
     frame-indexing, or JPEG-decode bug breaks the hash. This closes the
     round-6 'video decode is a stub' gap for intra-frame video; only
     inter-frame codecs (H.264 etc.) still require libav."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.binary_ops import sample_frames_decoded  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.codecs import avi_mjpeg_encode  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import (  # noqa: PLC0415
-        REPO_ROOT,
-        sample_frames_decoded,
-    )
-
-    repo_root = REPO_ROOT
     d = load_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        frames = [(i * 31 + j * 17) % 256 for j in range(1 + i % 6)]
+        return avi_mjpeg_encode(1 + i % 16, 1 + i % 8, frames, fps=4)
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.codecs import avi_mjpeg_encode  # noqa: PLC0415
-
-        for pdf in batches:
-            rows = {"media_id": [], "kind": [], "payload": []}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                rows["media_id"].append(i)
-                rows["kind"].append("video")
-                rows["payload"].append(
-                    avi_mjpeg_encode(
-                        1 + i % 16,
-                        1 + i % 8,
-                        [(i * 31 + j * 17) % 256 for j in range(1 + i % 6)],
-                        fps=4,
-                    )
-                )
-            yield pd.DataFrame(rows)
-
-    media = d.mapInPandas(synth, "media_id long, kind string, payload binary")
+    media = synth_media(d, encode).withColumn("kind", F.lit("video"))
     out = sample_frames_decoded(media, every_ms=500)
     return out.select(
         "media_id",
@@ -1999,12 +1907,8 @@ def mm08_hadamard_spectrum(spark: SparkSession, sf: str) -> DataFrame:
     coefficient from the closed-form synth signal, so the full decode +
     transform path is hash-certified — real spectral DSP with zero
     float drift (no trig: the WHT basis is ±1)."""
-    import pandas as pd  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import (  # noqa: PLC0415
-        REPO_ROOT,
-        hadamard_spectrum,
-    )
+    from pyp_etl_pipeline_spark.multimodal.binary_ops import hadamard_spectrum  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.codecs import wav_encode_pcm16  # noqa: PLC0415
 
     # Measured r9: adding a numbered repartition after this distinct
     # made it SLOWER (0.61 -> 0.76 quiet min-of-3) — the synth+WHT over
@@ -2012,26 +1916,13 @@ def mm08_hadamard_spectrum(spark: SparkSession, sf: str) -> DataFrame:
     # more than the parallelism buys. The AQE small-shuffle trap only
     # bites when downstream per-row compute dominates (dd09's shingles).
     d = load_table(spark, sf, "documents").select("doc_id").filter(F.col("doc_id") % 2 == 1).distinct()
-    repo_root = REPO_ROOT
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        k = 1 + i % 7
+        n = 100 + i % 50
+        return wav_encode_pcm16([(((j * k) % 256) - 128) * 64 for j in range(n)], 8000)
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.codecs import wav_encode_pcm16  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                k = 1 + i % 7
-                n = 100 + i % 50
-                samples = [(((j * k) % 256) - 128) * 64 for j in range(n)]
-                payloads.append(wav_encode_pcm16(samples, 8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return hadamard_spectrum(media)
 
 
@@ -2502,35 +2393,17 @@ def mm09_image_dhash(spark: SparkSession, sf: str) -> DataFrame:
     from the closed-form pixel pattern, so stride/unfilter/sampling
     bugs break the hash — and the hash itself is the image-side SimHash
     for near-duplicate image dedup."""
-    import pandas as pd  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import (  # noqa: PLC0415
-        REPO_ROOT,
-        dhash_features,
-    )
+    from pyp_etl_pipeline_spark.multimodal.binary_ops import dhash_features  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.codecs import png_encode_gray_pixels  # noqa: PLC0415
 
     d = load_table(spark, sf, "documents").select("doc_id").filter(F.col("doc_id") % 2 == 0)
-    repo_root = REPO_ROOT
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        return png_encode_gray_pixels(
+            [[(i * 7 + x * 13 + y * 31) % 256 for x in range(16)] for y in range(8)]
+        )
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.codecs import png_encode_gray_pixels  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                rows = [
-                    [(i * 7 + x * 13 + y * 31) % 256 for x in range(16)]
-                    for y in range(8)
-                ]
-                payloads.append(png_encode_gray_pixels(rows))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return dhash_features(media)
 
 
@@ -2923,34 +2796,18 @@ def mm12_gif_decode(spark: SparkSession, sf: str) -> DataFrame:
     on a (1 + doc_id%16) x (1 + doc_id%8) grid — so any codec bug
     (wrong width schedule, shifted scanline, palette misread) breaks
     the position-weighted checksum."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.binary_ops import gif_pixel_stats  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.codecs import gif_encode_gray_pixels  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import (  # noqa: PLC0415
-        REPO_ROOT,
-        gif_pixel_stats,
-    )
-
-    repo_root = REPO_ROOT
     d = load_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        w, h = 1 + i % 16, 1 + i % 8
+        return gif_encode_gray_pixels(
+            [[(3 * x + 7 * y + i) % 256 for x in range(w)] for y in range(h)]
+        )
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.codecs import gif_encode_gray_pixels  # noqa: PLC0415
-
-        for pdf in batches:
-            rows = {"media_id": [], "payload": []}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 1 + i % 16, 1 + i % 8
-                px = [[(3 * x + 7 * y + i) % 256 for x in range(w)] for y in range(h)]
-                rows["media_id"].append(i)
-                rows["payload"].append(gif_encode_gray_pixels(px))
-            yield pd.DataFrame(rows)
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return gif_pixel_stats(media)
 
 
@@ -2982,41 +2839,20 @@ def mm13_gif_animation_frames(spark: SparkSession, sf: str) -> DataFrame:
     twin reproduces every frame's position-weighted checksum
     analytically, so a frame-boundary bug (GCE misparse, leaked dict
     state across frames, wrong sub-block stitch) breaks the hash."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.binary_ops import gif_frame_stats  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.codecs import gif_encode_gray_animation  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import (  # noqa: PLC0415
-        REPO_ROOT,
-        gif_frame_stats,
-    )
-
-    repo_root = REPO_ROOT
     d = load_table(spark, sf, "documents").select("doc_id").filter(F.col("doc_id") % 4 == 0)
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        w, h = 1 + i % 16, 1 + i % 8
+        frames = [
+            [[(3 * x + 7 * y + i + 13 * f) % 256 for x in range(w)] for y in range(h)]
+            for f in range(1 + i % 5)
+        ]
+        return gif_encode_gray_animation(frames, delay_cs=4 + i % 7)
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-            gif_encode_gray_animation,
-        )
-
-        for pdf in batches:
-            rows = {"media_id": [], "payload": []}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 1 + i % 16, 1 + i % 8
-                frames = [
-                    [[(3 * x + 7 * y + i + 13 * f) % 256 for x in range(w)] for y in range(h)]
-                    for f in range(1 + i % 5)
-                ]
-                rows["media_id"].append(i)
-                rows["payload"].append(
-                    gif_encode_gray_animation(frames, delay_cs=4 + i % 7)
-                )
-            yield pd.DataFrame(rows)
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return gif_frame_stats(media)
 
 
@@ -4990,36 +4826,20 @@ def mm14_resized_thumbs(spark: SparkSession, sf: str) -> DataFrame:
     decode -> resample -> re-encode -> re-decode loop byte-for-byte.
     Both stages are map-only Arrow passes — the thumbnail shape of a
     100 TB image-curation pipeline."""
-    import pandas as pd  # noqa: PLC0415
-
     from pyp_etl_pipeline_spark.multimodal.binary_ops import (  # noqa: PLC0415
-        REPO_ROOT,
         png_pixel_stats,
         resize_images,
     )
+    from pyp_etl_pipeline_spark.multimodal.codecs import png_encode_gray_pixels  # noqa: PLC0415
 
     d = load_table(spark, sf, "documents").select("doc_id").filter(F.col("doc_id") % 2 == 0)
-    repo_root = REPO_ROOT
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        return png_encode_gray_pixels(
+            [[(i * 7 + x * 13 + y * 31) % 256 for x in range(16)] for y in range(8)]
+        )
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.codecs import png_encode_gray_pixels  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                rows = [
-                    [(i * 7 + x * 13 + y * 31) % 256 for x in range(16)]
-                    for y in range(8)
-                ]
-                payloads.append(png_encode_gray_pixels(rows))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return png_pixel_stats(resize_images(media, width=8, height=4))
 
 

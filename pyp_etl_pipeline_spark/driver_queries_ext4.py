@@ -15,7 +15,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyp_etl_pipeline_spark.operators import embedding_ops, packing, textan
-from pyp_etl_pipeline_spark.tables import load_corpus, load_corpus_unique, load_table, scratch_path
+from pyp_etl_pipeline_spark.tables import (
+    load_corpus,
+    load_corpus_unique,
+    load_table,
+    scratch_path,
+    synth_media,
+)
 
 _TOKS_LOWER = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> w <> '')"
 
@@ -1570,35 +1576,20 @@ def mm15_h264_sps_metadata(spark: SparkSession, sf: str) -> DataFrame:
     high-profile chroma branch — breaks the hash. Pixel decode of
     inter-frame video remains behind the plugin seam; this is the
     metadata tier a 100 TB pipeline routes on."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.h264 import sps_encode, sps_features  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.h264 import sps_features  # noqa: PLC0415
-
-    repo_root = REPO_ROOT
     d = load_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        return sps_encode(
+            16 + (i % 952) * 2,
+            16 + (i % 532) * 2,
+            profile_idc=(66, 77, 100)[i % 3],
+            level_idc=10 + i % 42,
+            fps=24 + i % 37,
+        )
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.h264 import sps_encode  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = [
-                sps_encode(
-                    16 + (int(i) % 952) * 2,
-                    16 + (int(i) % 532) * 2,
-                    profile_idc=(66, 77, 100)[int(i) % 3],
-                    level_idc=10 + int(i) % 42,
-                    fps=24 + int(i) % 37,
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return sps_features(media).select(
         "media_id",
         "profile_idc",
@@ -1638,41 +1629,27 @@ def mm16_mp4_avcc_qa(spark: SparkSession, sf: str) -> DataFrame:
     the ``dims_match`` QA flag exists to catch. The twin is fully
     analytic, so any box-walk offset drift (the 78-byte VisualSampleEntry
     skip, the stsd FullBox header) or SPS bit-parse bug breaks the hash."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.h264 import (  # noqa: PLC0415
+        avc_container_features,
+        mp4_avc_encode,
+    )
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.h264 import avc_container_features  # noqa: PLC0415
-
-    repo_root = REPO_ROOT
     d = load_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        w, h = 16 + (i % 952) * 2, 16 + (i % 532) * 2
+        return mp4_avc_encode(
+            w,
+            h,
+            1 + i % 600000,
+            profile_idc=(66, 77, 100)[i % 3],
+            level_idc=10 + i % 42,
+            fps=24 + i % 37,
+            display_width=w + 2 if i % 7 == 0 else None,
+            display_height=h + 2 if i % 7 == 0 else None,
+        )
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.h264 import mp4_avc_encode  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 16 + (i % 952) * 2, 16 + (i % 532) * 2
-                payloads.append(
-                    mp4_avc_encode(
-                        w,
-                        h,
-                        1 + i % 600000,
-                        profile_idc=(66, 77, 100)[i % 3],
-                        level_idc=10 + i % 42,
-                        fps=24 + i % 37,
-                        display_width=w + 2 if i % 7 == 0 else None,
-                        display_height=h + 2 if i % 7 == 0 else None,
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return avc_container_features(media).select(
         "media_id",
         "container_width",
@@ -1721,35 +1698,23 @@ def mm17_hevc_sps_metadata(spark: SparkSession, sf: str) -> DataFrame:
     missed emulation strip breaks the hash. Pixel decode stays behind
     the plugin seam; see tests/test_h265.py for the hand-assembled
     spec golden covering the RPS/PCM/scaling-list branches."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.h265 import (  # noqa: PLC0415
+        hevc_sps_encode,
+        hevc_sps_features,
+    )
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.h265 import hevc_sps_features  # noqa: PLC0415
-
-    repo_root = REPO_ROOT
     d = load_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        return hevc_sps_encode(
+            16 + (i % 952) * 2,
+            16 + (i % 532) * 2,
+            profile_idc=1 + i % 2,
+            level_idc=30 + i % 124,
+            fps=24 + i % 37,
+        )
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.h265 import hevc_sps_encode  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = [
-                hevc_sps_encode(
-                    16 + (int(i) % 952) * 2,
-                    16 + (int(i) % 532) * 2,
-                    profile_idc=1 + int(i) % 2,
-                    level_idc=30 + int(i) % 124,
-                    fps=24 + int(i) % 37,
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return hevc_sps_features(media).select(
         "media_id",
         "profile_idc",
@@ -1791,41 +1756,27 @@ def mm18_mp4_hvcc_qa(spark: SparkSession, sf: str) -> DataFrame:
     display dims (tkhd) against stream coded-minus-crop dims — every
     7th doc is synthesized with inflated display dims, the corruption
     the ``dims_match`` QA flag exists to catch. Fully analytic twin."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.h265 import (  # noqa: PLC0415
+        hevc_container_features,
+        mp4_hevc_encode,
+    )
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.h265 import hevc_container_features  # noqa: PLC0415
-
-    repo_root = REPO_ROOT
     d = load_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        w, h = 16 + (i % 952) * 2, 16 + (i % 532) * 2
+        return mp4_hevc_encode(
+            w,
+            h,
+            1 + i % 600000,
+            profile_idc=1 + i % 2,
+            level_idc=30 + i % 124,
+            fps=24 + i % 37,
+            display_width=w + 2 if i % 7 == 0 else None,
+            display_height=h + 2 if i % 7 == 0 else None,
+        )
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.h265 import mp4_hevc_encode  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 16 + (i % 952) * 2, 16 + (i % 532) * 2
-                payloads.append(
-                    mp4_hevc_encode(
-                        w,
-                        h,
-                        1 + i % 600000,
-                        profile_idc=1 + i % 2,
-                        level_idc=30 + i % 124,
-                        fps=24 + i % 37,
-                        display_width=w + 2 if i % 7 == 0 else None,
-                        display_height=h + 2 if i % 7 == 0 else None,
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return hevc_container_features(media).select(
         "media_id",
         "container_width",
@@ -1875,39 +1826,25 @@ def mm19_av1_seq_metadata(spark: SparkSession, sf: str) -> DataFrame:
     Analytic twin: any leb128/operating-point/color-config drift breaks
     the hash. See tests/test_av1.py for the hand-assembled spec golden
     covering multi-op tables, decoder model, and reduced headers."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.av1 import (  # noqa: PLC0415
+        av1_seq_features,
+        av1_sequence_header_encode,
+    )
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.av1 import av1_seq_features  # noqa: PLC0415
-
-    repo_root = REPO_ROOT
     d = load_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.av1 import (  # noqa: PLC0415
-            av1_sequence_header_encode,
+    def encode(i):
+        return av1_sequence_header_encode(
+            1 + i % 1903,
+            1 + i % 1063,
+            seq_profile=i % 3,
+            seq_level_idx=8 + i % 24,
+            seq_tier=i % 2,
+            fps=24 + i % 37,
+            high_bitdepth=i % 5 == 0,
         )
 
-        for pdf in batches:
-            payloads = [
-                av1_sequence_header_encode(
-                    1 + int(i) % 1903,
-                    1 + int(i) % 1063,
-                    seq_profile=int(i) % 3,
-                    seq_level_idx=8 + int(i) % 24,
-                    seq_tier=int(i) % 2,
-                    fps=24 + int(i) % 37,
-                    high_bitdepth=int(i) % 5 == 0,
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return av1_seq_features(media).select(
         "media_id",
         "seq_profile",
@@ -1954,41 +1891,27 @@ def mm20_mp4_av1c_qa(spark: SparkSession, sf: str) -> DataFrame:
     the record's profile/level prefix vs the stream's own values
     (``record_matches`` — muxers get this wrong in real corpora).
     Fully analytic twin."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.av1 import (  # noqa: PLC0415
+        av1_container_features,
+        mp4_av1_encode,
+    )
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.av1 import av1_container_features  # noqa: PLC0415
-
-    repo_root = REPO_ROOT
     d = load_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        w, h = 16 + (i % 952) * 2, 16 + (i % 532) * 2
+        return mp4_av1_encode(
+            w,
+            h,
+            1 + i % 600000,
+            seq_profile=i % 3,
+            seq_level_idx=8 + i % 24,
+            fps=24 + i % 37,
+            display_width=w + 2 if i % 7 == 0 else None,
+            display_height=h + 2 if i % 7 == 0 else None,
+        )
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.av1 import mp4_av1_encode  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 16 + (i % 952) * 2, 16 + (i % 532) * 2
-                payloads.append(
-                    mp4_av1_encode(
-                        w,
-                        h,
-                        1 + i % 600000,
-                        seq_profile=i % 3,
-                        seq_level_idx=8 + i % 24,
-                        fps=24 + i % 37,
-                        display_width=w + 2 if i % 7 == 0 else None,
-                        display_height=h + 2 if i % 7 == 0 else None,
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return av1_container_features(media).select(
         "media_id",
         "container_width",
@@ -2389,47 +2312,31 @@ def mm21_vp9_frame_metadata(spark: SparkSession, sf: str) -> DataFrame:
     branch, frame + render dimensions). Analytic twin: any
     profile/color-config/frame-size drift breaks the hash. See
     tests/test_vp9.py for the hand-assembled spec golden."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.vp9 import (  # noqa: PLC0415
+        vp9_frame_features,
+        vp9_frame_header_encode,
+    )
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.vp9 import vp9_frame_features  # noqa: PLC0415
-
-    repo_root = REPO_ROOT
     d = load_table(spark, sf, "documents").select("doc_id")
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.vp9 import (  # noqa: PLC0415
-            vp9_frame_header_encode,
+    def encode(i):
+        profile = i % 4
+        rgb = profile in (1, 3) and i % 11 == 0
+        w, h = 1 + i % 1903, 1 + i % 1063
+        return vp9_frame_header_encode(
+            w,
+            h,
+            profile=profile,
+            bit_depth=(10 if i % 2 == 0 else 12) if profile >= 2 else 8,
+            color_space=7 if rgb else 2,
+            color_range=1 if rgb else i % 2,
+            sub_x=(0 if rgb else i % 2) if profile in (1, 3) else None,
+            sub_y=0 if profile in (1, 3) else None,
+            render_width=w * 2 if i % 9 == 0 else None,
+            render_height=h * 2 if i % 9 == 0 else None,
         )
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                profile = i % 4
-                rgb = profile in (1, 3) and i % 11 == 0
-                w, h = 1 + i % 1903, 1 + i % 1063
-                payloads.append(
-                    vp9_frame_header_encode(
-                        w,
-                        h,
-                        profile=profile,
-                        bit_depth=(10 if i % 2 == 0 else 12) if profile >= 2 else 8,
-                        color_space=7 if rgb else 2,
-                        color_range=1 if rgb else i % 2,
-                        sub_x=(0 if rgb else i % 2) if profile in (1, 3) else None,
-                        sub_y=0 if profile in (1, 3) else None,
-                        render_width=w * 2 if i % 9 == 0 else None,
-                        render_height=h * 2 if i % 9 == 0 else None,
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return vp9_frame_features(media).select(
         "media_id",
         "profile",
@@ -2481,44 +2388,30 @@ def mm22_mp4_vpcc_qa(spark: SparkSession, sf: str) -> DataFrame:
     AND mdat frame header, and cross-validates container display dims vs
     coded dims (every 7th doc inflated) plus record fields vs the
     stream's own header (``record_matches``). Fully analytic twin."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.vp9 import (  # noqa: PLC0415
+        mp4_vp9_encode,
+        vp9_container_features,
+    )
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.vp9 import vp9_container_features  # noqa: PLC0415
-
-    repo_root = REPO_ROOT
     d = load_table(spark, sf, "documents").select("doc_id")
+    levels = [10, 11, 20, 21, 30, 31, 40, 41, 50, 51, 52, 60, 61, 62]
 
-    def synth(batches):
-        import sys  # noqa: PLC0415
+    def encode(i):
+        profile = i % 4
+        w, h = 16 + (i % 952) * 2, 16 + (i % 532) * 2
+        return mp4_vp9_encode(
+            w,
+            h,
+            1 + i % 600000,
+            profile=profile,
+            level=levels[i % 14],
+            bit_depth=(10 if i % 2 == 0 else 12) if profile >= 2 else 8,
+            color_range=i % 2,
+            display_width=w + 2 if i % 7 == 0 else None,
+            display_height=h + 2 if i % 7 == 0 else None,
+        )
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.vp9 import mp4_vp9_encode  # noqa: PLC0415
-
-        levels = [10, 11, 20, 21, 30, 31, 40, 41, 50, 51, 52, 60, 61, 62]
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                profile = i % 4
-                w, h = 16 + (i % 952) * 2, 16 + (i % 532) * 2
-                payloads.append(
-                    mp4_vp9_encode(
-                        w,
-                        h,
-                        1 + i % 600000,
-                        profile=profile,
-                        level=levels[i % 14],
-                        bit_depth=(10 if i % 2 == 0 else 12) if profile >= 2 else 8,
-                        color_range=i % 2,
-                        display_width=w + 2 if i % 7 == 0 else None,
-                        display_height=h + 2 if i % 7 == 0 else None,
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, encode)
     return vp9_container_features(media).select(
         "media_id",
         "container_width",

@@ -343,8 +343,7 @@ def av1_seq_features(df: DataFrame, permissive: bool = False) -> DataFrame:
         "media_id long, seq_profile int, seq_level_idx int, seq_tier int, "
         "width int, height int, bit_depth int, mono_chrome int, "
         "chroma_sub_x int, chroma_sub_y int, fps double",
-        __name__,
-        "av1_sequence_header_parse",
+        av1_sequence_header_parse,
         permissive,
     )
 
@@ -439,7 +438,6 @@ def av1_container_features(df: DataFrame, permissive: bool = False) -> DataFrame
         "media_id long, container_width int, container_height int, duration_ms double, "
         "seq_profile int, seq_level_idx int, seq_tier int, width int, height int, "
         "bit_depth int, fps double, record_matches boolean, dims_match boolean",
-        __name__,
-        "mp4_av1c_extract",
+        mp4_av1c_extract,
         permissive,
     )

@@ -26,9 +26,12 @@ Two decode paths:
 
 from __future__ import annotations
 
-import os
+import hashlib
+import struct
+import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,6 +43,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pyp_etl_pipeline_spark.multimodal import codecs, plugins
+from pyp_etl_pipeline_spark.session import ship_package
 
 MEDIA_SCHEMA = StructType(
     [
@@ -65,19 +71,11 @@ FEATURE_SCHEMA = (
     "byte_stat0 double, byte_stat1 double"
 )
 
-# Repo root as a PLAIN STRING: worker-side closures capture it (strings
-# pickle by value) and bootstrap sys.path before importing this package —
-# the harness may launch executors from a cwd where the repo isn't
-# importable, and a bare in-closure import would ModuleNotFoundError.
-REPO_ROOT = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
 
 def decode_real(payload: bytes, kind: str) -> dict:
     """Real decode for the formats the pure-python codecs cover (PNG,
     WAV), dispatched on magic bytes; other formats still need external
     codecs that are not in this container."""
-    from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
     fmt = codecs.sniff_kind(payload or b"")
     if fmt == "png":
         return {"format": "png", **codecs.png_decode(payload)}
@@ -98,8 +96,6 @@ def decode_real(payload: bytes, kind: str) -> dict:
         # video decode path (see sample_frames_decoded) — no libav.
         meta = codecs.avi_mjpeg_decode(payload)
         return {"format": "avi", **{k: v for k, v in meta.items() if k != "frames"}}
-    from pyp_etl_pipeline_spark.multimodal import plugins  # noqa: PLC0415
-
     decoder = plugins.get_video_decoder(fmt) if fmt else None
     if decoder is not None:
         # a registered backend (see multimodal/plugins.py — e.g. PyAV on
@@ -137,17 +133,7 @@ def decode_features(df: DataFrame) -> DataFrame:
     rather than failing the batch (a 100 TB corpus always contains
     strays)."""
 
-    repo_root = REPO_ROOT
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-        import zlib  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -195,6 +181,7 @@ def decode_features(df: DataFrame) -> DataFrame:
                 rows.append(row)
             yield pd.DataFrame(rows)
 
+    ship_package(df.sparkSession)
     return df.mapInPandas(op, schema=DECODE_SCHEMA)
 
 
@@ -208,18 +195,7 @@ def gif_pixel_stats(df: DataFrame) -> DataFrame:
     decoder that produces the right multiset of pixels in the wrong
     places (transposed rows, shifted scanlines). NULL payloads and
     malformed bodies yield NULL stats (tolerant reader)."""
-    repo_root = REPO_ROOT
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        import numpy as np  # noqa: PLC0415
-
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
         mod = 1_000_000_007
         for pdf in batches:
             rows = []
@@ -253,6 +229,7 @@ def gif_pixel_stats(df: DataFrame) -> DataFrame:
                 }
             )
 
+    ship_package(df.sparkSession)
     return df.mapInPandas(
         op,
         schema="media_id long, width int, height int, sum_pixels long, checksum long",
@@ -268,18 +245,7 @@ def gif_frame_stats(df: DataFrame) -> DataFrame:
     ``gif_pixel_stats`` — the GIF sibling of mm07's MJPEG-AVI frame
     sampling. Malformed payloads contribute zero rows (tolerant
     reader); partition-preserving Arrow batches."""
-    repo_root = REPO_ROOT
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        import numpy as np  # noqa: PLC0415
-
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
         mod = 1_000_000_007
         for pdf in batches:
             rows = []
@@ -305,10 +271,18 @@ def gif_frame_stats(df: DataFrame) -> DataFrame:
                 columns=["media_id", "frame_idx", "delay_cs", "sum_pixels", "checksum"],
             )
 
+    ship_package(df.sparkSession)
     return df.mapInPandas(
         op,
         schema="media_id long, frame_idx int, delay_cs int, sum_pixels long, checksum long",
     )
+
+
+def _byte_stats(payload: bytes) -> tuple[float, float]:
+    if not payload:
+        return 0.0, 0.0
+    s = sum(payload)
+    return (s % 997) / 997.0, (len(payload) % 31) / 31.0
 
 
 def extract_features(df: DataFrame) -> DataFrame:
@@ -322,24 +296,13 @@ def extract_features(df: DataFrame) -> DataFrame:
     ``mapInPandas`` keeps partitioning; each batch is a pandas DataFrame so
     the stats vectorize over the batch, not per row.
     """
-    # nested helper: a closure reference to a module-level function
-    # pickles as an import the executor worker may not be able to
-    # resolve (see REPO_ROOT note); nested functions pickle by value
-    def byte_stats(payload: bytes) -> tuple[float, float]:
-        if not payload:
-            return 0.0, 0.0
-        s = sum(payload)
-        return (s % 997) / 997.0, (len(payload) % 31) / 31.0
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib  # noqa: PLC0415
-
         for pdf in batches:
             payloads = pdf["payload"]
             # a MISSING payload is not an EMPTY payload: NULL in -> NULL
             # features out (md5('') for a null blob was a lie the null-
             # injection sweep caught, r8)
-            feats = [byte_stats(p) if p is not None else (None, None) for p in payloads]
+            feats = [_byte_stats(p) if p is not None else (None, None) for p in payloads]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -355,6 +318,7 @@ def extract_features(df: DataFrame) -> DataFrame:
                 }
             )
 
+    ship_package(df.sparkSession)
     return df.mapInPandas(op, schema=FEATURE_SCHEMA)
 
 
@@ -373,17 +337,7 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
 
     Output: (media_id, payload = resized grayscale PNG, width, height).
     """
-    repo_root = REPO_ROOT
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-        import zlib  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
         for pdf in batches:
             out_rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -415,6 +369,7 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
                 out_rows, columns=["media_id", "payload", "width", "height"]
             )
 
+    ship_package(df.sparkSession)
     return df.select("media_id", "payload").mapInPandas(
         op, schema="media_id long, payload binary, width int, height int"
     )
@@ -428,17 +383,7 @@ def png_pixel_stats(df: DataFrame) -> DataFrame:
     pins every pixel VALUE at every POSITION. Luminance for multi-
     channel images follows the dhash convention. Map-only; corrupt
     payloads drop."""
-    repo_root = REPO_ROOT
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-        import zlib  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -475,6 +420,7 @@ def png_pixel_stats(df: DataFrame) -> DataFrame:
                 columns=["media_id", "width", "height", "n_px", "pix_sum", "pix_checksum"],
             )
 
+    ship_package(df.sparkSession)
     return df.select("media_id", "payload").mapInPandas(
         op,
         schema="media_id long, width int, height int, n_px long, pix_sum long, pix_checksum long",
@@ -542,20 +488,9 @@ def sample_frames_decoded(df: DataFrame, every_ms: int = 1000, decoder=None) -> 
     (dependency injection — registry state does not travel driver ->
     worker). When None, workers consult their own plugin registry, which
     a cluster image arms via ``PYP_VIDEO_PLUGIN`` (see plugins.py)."""
-    repo_root = REPO_ROOT
     injected = decoder
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-        import zlib  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
-        from pyp_etl_pipeline_spark.multimodal import plugins  # noqa: PLC0415
-
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -629,6 +564,7 @@ def sample_frames_decoded(df: DataFrame, every_ms: int = 1000, decoder=None) -> 
                 columns=["media_id", "frame_idx", "frame_ts_ms", "width", "height", "mean_val"],
             )
 
+    ship_package(df.sparkSession)
     return df.filter(F.col("kind") == "video").mapInPandas(op, SAMPLED_FRAME_SCHEMA)
 
 
@@ -649,19 +585,9 @@ def hadamard_spectrum(
     n_fft^2 integer ops (n_fft is a constant) — embarrassingly parallel
     over a 100 TB media corpus. Clips shorter than ``n_fft`` zero-pad
     (energy then concentrates in low bands, as expected)."""
-    repo_root = REPO_ROOT
     band_w = n_fft // n_bands
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        import numpy as np  # noqa: PLC0415
-
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
         # rows of the order-n_fft Hadamard matrix: H[f, j] = (-1)^popcount(f & j)
         f_idx = np.arange(n_fft, dtype=np.int64)
         popc = np.array(
@@ -693,6 +619,7 @@ def hadamard_spectrum(
                     )
             yield pd.DataFrame(rows, columns=["media_id", "band", "energy"])
 
+    ship_package(df.sparkSession)
     return df.mapInPandas(op, schema="media_id long, band int, energy long")
 
 
@@ -707,17 +634,7 @@ def dhash_features(df: DataFrame, grid: int = 8) -> DataFrame:
     analog of SimHash text dedup. Hash ships as two 32-bit halves
     (lo = rows 0..grid/2-1) so no engine touches the signed bit-63
     shift edge. Map-only Arrow batches; non-PNG strays drop out."""
-    repo_root = REPO_ROOT
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-        import zlib  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
         half = grid // 2
         for pdf in batches:
             rows = []
@@ -761,6 +678,7 @@ def dhash_features(df: DataFrame, grid: int = 8) -> DataFrame:
                 columns=["media_id", "width", "height", "dhash_lo", "dhash_hi", "n_gradient_bits"],
             )
 
+    ship_package(df.sparkSession)
     return df.mapInPandas(
         op,
         schema="media_id long, width int, height int, dhash_lo long, dhash_hi long, n_gradient_bits int",

@@ -760,17 +760,15 @@ def mp4_video_extract(payload: bytes, config_tag: bytes, entry_tags: tuple[bytes
     }
 
 
-def payload_features(df, schema: str, module: str, parser: str, permissive: bool = False):
+def payload_features(df, schema: str, parse, permissive: bool = False):
     """DataFrame operator: (media_id long, payload binary) -> one row per
     payload with the columns of ``schema`` (a flat "name type, ..." DDL
     string that starts with ``media_id long``), filled from the dict
-    ``module.parser(payload)`` returns. Arrow-batched ``mapInPandas``,
+    ``parse(payload)`` returns. Arrow-batched ``mapInPandas``,
     map-only — partition-preserving, no shuffle; at 100 TB this is a
-    map-only stage over the blob column.
-
-    The parser is named, not passed: the worker bootstraps ``sys.path``
-    with the repo root and only then imports it (a pickled function
-    object would be unpickled before the bootstrap could run).
+    map-only stage over the blob column. ``parse`` is a module-level
+    function of this package: it pickles by import path, and the
+    package is shipped to the workers first.
 
     ``permissive=True`` is the corpus-scale mode: a corrupt or truncated
     payload yields NULL in every field plus an ``error`` column holding
@@ -779,18 +777,11 @@ def payload_features(df, schema: str, module: str, parser: str, permissive: bool
     ``, error string``."""
     import pandas as pd  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.session import ship_package  # noqa: PLC0415
 
-    repo_root = REPO_ROOT
     fields = [col.split()[0] for col in schema.split(",")][1:]
 
     def op(batches):
-        import importlib  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        parse = getattr(importlib.import_module(module), parser)
         for pdf in batches:
             rows, errs = [], []
             for p in pdf["payload"]:
@@ -810,6 +801,7 @@ def payload_features(df, schema: str, module: str, parser: str, permissive: bool
                 out["error"] = errs
             yield pd.DataFrame(out)
 
+    ship_package(df.sparkSession)
     return df.mapInPandas(op, schema + (", error string" if permissive else ""))
 
 

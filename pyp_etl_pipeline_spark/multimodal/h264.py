@@ -298,8 +298,7 @@ def sps_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     return payload_features(
         df,
         "media_id long, profile_idc int, level_idc int, width int, height int, fps double",
-        __name__,
-        "sps_parse",
+        sps_parse,
         permissive,
     )
 
@@ -428,7 +427,6 @@ def avc_container_features(df: DataFrame, permissive: bool = False) -> DataFrame
         df,
         "media_id long, container_width int, container_height int, duration_ms double, "
         "profile_idc int, level_idc int, width int, height int, fps double, dims_match boolean",
-        __name__,
-        "mp4_avcc_extract",
+        mp4_avcc_extract,
         permissive,
     )

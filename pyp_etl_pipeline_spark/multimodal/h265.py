@@ -325,8 +325,7 @@ def hevc_sps_features(df: DataFrame, permissive: bool = False) -> DataFrame:
         df,
         "media_id long, profile_idc int, tier int, level_idc int, width int, "
         "height int, bit_depth int, chroma_format_idc int, fps double",
-        __name__,
-        "hevc_sps_parse",
+        hevc_sps_parse,
         permissive,
     )
 
@@ -448,7 +447,6 @@ def hevc_container_features(df: DataFrame, permissive: bool = False) -> DataFram
         "media_id long, container_width int, container_height int, duration_ms double, "
         "profile_idc int, tier int, level_idc int, width int, height int, "
         "bit_depth int, fps double, dims_match boolean",
-        __name__,
-        "mp4_hvcc_extract",
+        mp4_hvcc_extract,
         permissive,
     )

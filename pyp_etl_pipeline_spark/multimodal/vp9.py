@@ -222,8 +222,7 @@ def vp9_frame_features(df: DataFrame, permissive: bool = False) -> DataFrame:
         "media_id long, profile int, bit_depth int, color_space int, "
         "color_range int, chroma_sub_x int, chroma_sub_y int, width int, "
         "height int, render_width int, render_height int, show_frame int",
-        __name__,
-        "vp9_frame_header_parse",
+        vp9_frame_header_parse,
         permissive,
     )
 
@@ -366,7 +365,6 @@ def vp9_container_features(df: DataFrame, permissive: bool = False) -> DataFrame
         "profile int, record_level int, bit_depth int, chroma_sub_x int, "
         "chroma_sub_y int, color_range int, width int, height int, "
         "record_matches boolean, dims_match boolean",
-        __name__,
-        "mp4_vpcc_extract",
+        mp4_vpcc_extract,
         permissive,
     )

@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the one place that
+decides how Python workers import this package.
 
 Local-mode defaults match the test/bench harness (local[N], AQE on,
 UTC session timezone so timestamp semantics line up with the DuckDB
@@ -9,8 +10,42 @@ memory knobs change.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import SparkSession
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG_ZIP: str | None = None
+_SHIP_LOCK = threading.Lock()
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Make ``pyp_etl_pipeline_spark`` importable inside the session's
+    Python workers. Operators whose worker-side functions import this
+    package (or reference its module-level functions, which pickle by
+    import path) call this before they map. The driver's ``sys.path``
+    does not reach the workers: a bare session launched from another
+    cwd, or a remote executor, has no copy of the repo. So the package
+    is zipped once per process and added with ``addPyFile`` once per
+    SparkContext — Spark's own way to ship Python code, which launches
+    no job."""
+    global _PKG_ZIP
+    sc = spark.sparkContext
+    with _SHIP_LOCK:
+        if getattr(sc, "_pyp_pkg_added", False):
+            return
+        if _PKG_ZIP is None or not os.path.exists(_PKG_ZIP):
+            base = os.path.join(tempfile.gettempdir(), f"pyp_etl_pipeline_spark_pkg_{os.getpid()}")
+            _PKG_ZIP = shutil.make_archive(
+                base, "zip", root_dir=_REPO, base_dir="pyp_etl_pipeline_spark"
+            )
+        try:
+            sc.addPyFile(_PKG_ZIP)
+        except Exception:  # noqa: BLE001 — already added / context quirk; imports may still work via cwd
+            pass
+        sc._pyp_pkg_added = True
 
 
 def get_spark(

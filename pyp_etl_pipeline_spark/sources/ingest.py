@@ -22,6 +22,8 @@ import zipfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from pyp_etl_pipeline_spark.session import ship_package
+
 ENCODING_CANDIDATES = ("utf-8", "utf-8-sig", "latin-1", "cp1252", "iso-8859-1")
 ALLOWED_EXTENSIONS = {".csv", ".xlsx", ".xls"}
 
@@ -236,6 +238,7 @@ def read_excel_distributed(
     from pyp_etl_pipeline_spark.sources.xlsx import (  # noqa: PLC0415
         count_sheet_rows,
         extract_sheet_sidecar,
+        read_rows_sidecar,
         read_rows_slice,
         resolve_sheet_part,
     )
@@ -280,24 +283,13 @@ def read_excel_distributed(
     if not tasks:
         return spark.createDataFrame([], schema)
 
-    # worker-side import bootstrap: executors of a BARE session launched
-    # from a foreign cwd (the driver's plain session) don't have the repo
-    # on sys.path, and the module import inside the closure resolves
-    # by reference — capture the path as a string and insert it first
-    # (the same contract every mapInPandas codec here follows; the r11
-    # plain-session gate caught xl01 failing without it)
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
+    # the parse functions call sources.xlsx, by import path, on the workers
+    ship_package(spark)
 
     if sidecar is not None:
 
         def parse_slices(batches):  # pragma: no cover — runs on executors
-            import sys  # noqa: PLC0415
-
-            if repo_root not in sys.path:
-                sys.path.insert(0, repo_root)
             import pandas as pd  # noqa: PLC0415
-
-            from pyp_etl_pipeline_spark.sources.xlsx import read_rows_sidecar  # noqa: PLC0415
 
             for pdf in batches:
                 for task in pdf.itertuples(index=False):
@@ -318,17 +310,11 @@ def read_excel_distributed(
         return task_df.mapInPandas(parse_slices, schema)
 
     def parse_slices(batches):  # pragma: no cover — runs on executors
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
         import pandas as pd  # noqa: PLC0415
-
-        from pyp_etl_pipeline_spark.sources.xlsx import read_rows_slice as slice_fn  # noqa: PLC0415
 
         for pdf in batches:
             for task in pdf.itertuples(index=False):
-                rows = slice_fn(task.path, task.part, int(task.start), int(task.end))
+                rows = read_rows_slice(task.path, task.part, int(task.start), int(task.end))
                 padded = [r[:width] + [None] * (width - len(r)) for r in rows]
                 yield pd.DataFrame(
                     {names[i]: [r[i] for r in padded] for i in range(width)},

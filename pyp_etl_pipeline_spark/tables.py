@@ -12,6 +12,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pyp_etl_pipeline_spark.operators.resolve import ensure_parallelism
+from pyp_etl_pipeline_spark.session import ship_package
+
 TABLES = (
     "region",
     "nation",
@@ -95,11 +98,26 @@ def load_corpus(spark: SparkSession, sf: str, name: str) -> DataFrame:
     bench runs. Round-robin repartition to the session's parallelism; at
     cluster scale the input already has many splits and the extra shuffle
     of (id, payload) is negligible next to the per-row compute it feeds."""
-    df = load_table(spark, sf, name)
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
-    return df
+    return ensure_parallelism(load_table(spark, sf, name))
+
+
+def synth_media(docs: DataFrame, encode) -> DataFrame:
+    """Media rows synthesized per document: one ``(media_id long,
+    payload binary)`` row per ``docs`` row, ``media_id`` its first
+    column and ``payload = encode(*row)`` over the row's values as
+    Python ints (``None`` for a row without media). Arrow-batched
+    ``mapInPandas``; ``encode`` may call this package's encoders, so
+    the package is shipped to the workers first."""
+
+    def op(batches):
+        import pandas as pd  # noqa: PLC0415
+
+        for pdf in batches:
+            payloads = [encode(*map(int, row)) for row in pdf.itertuples(index=False)]
+            yield pd.DataFrame({"media_id": pdf.iloc[:, 0], "payload": payloads})
+
+    ship_package(docs.sparkSession)
+    return docs.mapInPandas(op, "media_id long, payload binary")
 
 
 def load_corpus_unique(spark: SparkSession, sf: str, name: str) -> DataFrame:

@@ -179,3 +179,56 @@ def test_rotate_window_tool_is_consistent():
     window = names[:50]
     no_evidence = [n for n in names if f'"{n}",  # evidence r—' in out]
     assert all(n in window for n in no_evidence)
+
+
+def test_bare_session_workers_import_the_shipped_package(tmp_path):
+    """A bare ``local[2]`` session (not ``get_spark``) run from a cwd
+    outside the repo, with the repo on the DRIVER's sys.path only: the
+    Python workers can import the package solely because the operators
+    ship it (``session.ship_package``). That is the one mechanism — no
+    other package module touches sys.path."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = pathlib.Path(repo, "pyp_etl_pipeline_spark")
+    mentions = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if p != pkg / "session.py" and "sys.path" in p.read_text()
+    )
+    assert not mentions, mentions
+
+    xlsx = str(tmp_path / "upload.xlsx")
+    code = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from pyp_etl_pipeline_spark.multimodal import codecs, h264
+from pyp_etl_pipeline_spark.multimodal.binary_ops import decode_features
+from pyp_etl_pipeline_spark.sources.ingest import read_excel_distributed
+from pyp_etl_pipeline_spark.sources.xlsx import write_xlsx
+from pyp_etl_pipeline_spark.tables import synth_media
+
+spark = SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+docs = spark.range(1, 4).withColumnRenamed("id", "doc_id")
+png = decode_features(synth_media(docs, lambda i: codecs.png_encode_gray(i, 2, 7 * i)))
+print(sorted((r.media_id, r.format, r.width, r.height, r.mean_val) for r in png.collect()))
+sps = synth_media(docs, lambda i: b"junk" if i == 2 else h264.sps_encode(16 * i, 32))
+rows = h264.sps_features(sps, permissive=True).collect()
+print(sorted((r.media_id, r.width, r.height, r.error is None) for r in rows))
+write_xlsx({xlsx!r}, ["a", "b"], [["1", "x"], ["2", "y"], ["3", "z"]])
+print(sorted(tuple(r) for r in read_excel_distributed(spark, {xlsx!r}, rows_per_task=1).collect()))
+spark.stop()
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, cwd=tmp_path, timeout=300
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.splitlines()[-3:] == [
+        "[(1, 'png', 1, 2, 7.0), (2, 'png', 2, 2, 14.0), (3, 'png', 3, 2, 21.0)]",
+        "[(1, 16, 32, True), (2, None, None, False), (3, 48, 32, True)]",
+        "[('1', 'x'), ('2', 'y'), ('3', 'z')]",
+    ]
